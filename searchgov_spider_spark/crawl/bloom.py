@@ -195,18 +195,6 @@ def merge_bitmaps_into(
             bloom.merge_shard_bytes(r["shard"], r["payload"])
 
 
-def build_shard_bitmaps(
-    df: DataFrame, hash_col: str, n_shards: int, bits_per_shard: int, k: int
-) -> list[tuple[int, bytes]]:
-    """Compatibility wrapper over :func:`merge_bitmaps_into`: returns dense
-    ``[(shard_id, bitmap_bytes)]`` for the shards the input touched."""
-    tmp = PartitionedBloom(n_shards, bits_per_shard, k)
-    merge_bitmaps_into(tmp, df, hash_col)
-    return [
-        (s, tmp.shards[s].tobytes()) for s in range(n_shards) if tmp.shards[s].any()
-    ]
-
-
 def bloom_from_df(
     df: DataFrame | None,
     hash_col: str = "url_hash",

@@ -13,10 +13,9 @@ Round state lives in parquet round-directories committed by manifest
 (storage.tables.CheckpointStore) so a killed run resumes from the last
 committed round with an identical visited-URL set (north_rule).
 
-Politeness: per-host budget = floor(round_seconds / crawl_delay).  When the
-bucket capacity equals the round length this is the exact token-bucket
-steady state (see politeness.static_budgets); a dynamic token-bucket path
-(politeness.refill_tokens/spend_tokens) exists for burst capacities.
+Politeness: per-host budget = floor(round_seconds / crawl_delay), the exact
+token-bucket steady state when the bucket capacity equals the round length
+(see politeness.static_budgets).
 
 Scale notes (10^10 frontier design point):
   * no driver-side URL collections — only counts, offsets, and Bloom bitmaps
@@ -53,7 +52,6 @@ from .frontier import (
 from .reference_bfs import CrawlPolicy
 from .seqno import (
     SMALL_BATCH_THRESHOLD,
-    assign_global_seq,
     assign_seq_bucketed,
     assign_seq_small,
     monotone_bucket,
@@ -161,7 +159,9 @@ class CrawlEngine:
         Seeds bypass the query-string filter, jsessionid rewrite and deny
         paths (reference: start requests carry dont_filter=True and skip
         get_processed_request, middlewares.py:114-115); only the offsite,
-        depth and robots checks apply.
+        depth and robots checks apply.  The seeds arrive as an in-memory
+        list, so the single-partition window numbering them needs no more
+        memory than the list already holds.
         """
         seeds = self.spark.createDataFrame(
             [(u, 0, "", i) for i, u in enumerate(start_urls)],
@@ -170,8 +170,7 @@ class CrawlEngine:
         admitted = apply_admission_filters(seeds, self.policy, is_seed=True)
         admitted = apply_robots_filter(admitted, self.robots)
         admitted = dedup_first_in_batch(admitted, ["pos"])
-        admitted, _, _h = assign_global_seq(admitted, ["pos"], start=0)
-        return admitted.select(*FRONTIER_COLS)
+        return assign_seq_small(admitted, ["pos"], start=0).select(*FRONTIER_COLS)
 
     # -- one round ---------------------------------------------------------------
     def _run_round(
@@ -451,14 +450,7 @@ class CrawlEngine:
         # committed, so it must be included explicitly — otherwise the seen
         # set lags one round and sibling-discovered URLs get re-admitted.
         seen.unpersist()
-        deltas_next = self.store.read_seen(
-            self.spark, rnd,
-            include_frontier_rounds=(rnd,) if seen_from_frontier else (),
-            exclude_compacted=self._seen_bucketed is not None,
-        )
-        seen_next = (
-            deltas_next if deltas_next is not None else self._seen_bucketed.limit(0)
-        ).persist()
+        seen_next = self._seen_view(rnd, include_frontier_rounds=(rnd,) if seen_from_frontier else ())
         if budget_binds:
             selected.unpersist()
         extracted.unpersist()
@@ -499,23 +491,8 @@ class CrawlEngine:
                 return run
             frontier = self.store.read_table(spark, last, "frontier")
             next_seq = manifest["next_seq"]
-            # compacted seen set (if compaction ran) is a BUCKETED scan the
-            # anti-join reads exchange-free; only post-compaction deltas
-            # union (and persist) here.  STATIC for the whole run —
-            # compaction is maintenance between runs.  Size-gated: below
-            # bucketed_min_seen the compacted files are consumed as plain
-            # parquet instead (read_seen includes the seed dir), letting the
-            # optimizer broadcast/hash-join the small seen side — see the
-            # crossover note in __init__.
-            info = self.store.bucketed_seen_info()
-            use_bucketed = info is not None and (
-                info.get("rows", self.bucketed_min_seen) >= self.bucketed_min_seen
-            )
-            self._seen_bucketed = self.store.read_seen_bucketed(spark) if use_bucketed else None
-            deltas = self.store.read_seen(
-                spark, last, exclude_compacted=self._seen_bucketed is not None
-            )
-            seen = (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()
+            self._choose_seen_layout()
+            seen = self._seen_view(last)
             start_round = last + 1
             self.store.drop_uncommitted(start_round)
             frontier_hint = manifest.get("remaining", 0)
@@ -570,18 +547,11 @@ class CrawlEngine:
             return seen
         t0 = time.monotonic()
         removed = self.store.compact_seen(self.spark, rnd)
-        info = self.store.bucketed_seen_info()
-        use_bucketed = info is not None and (
-            info.get("rows", self.bucketed_min_seen) >= self.bucketed_min_seen
-        )
-        self._seen_bucketed = self.store.read_seen_bucketed(self.spark) if use_bucketed else None
+        info = self._choose_seen_layout()
         # the old persisted view references delta files compaction just
         # removed — rebuild it from the new layout before anything re-reads
         seen.unpersist()
-        deltas = self.store.read_seen(
-            self.spark, rnd, exclude_compacted=self._seen_bucketed is not None
-        )
-        new_seen = (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()
+        new_seen = self._seen_view(rnd)
         self.compactions.append(
             {
                 "round": rnd,
@@ -592,3 +562,33 @@ class CrawlEngine:
             }
         )
         return new_seen
+
+    # -- seen-set view ------------------------------------------------------------
+    def _choose_seen_layout(self) -> dict | None:
+        """Set ``self._seen_bucketed`` from the checkpoint layout; returns
+        the compacted set's ``_BUCKETS`` info (None before any compaction).
+
+        A compacted seen set is read as a BUCKETED scan the anti-join
+        consumes exchange-free, with only post-compaction deltas unioned
+        beside it.  Size-gated: below ``bucketed_min_seen`` rows the
+        compacted files are read as plain parquet instead (read_seen
+        includes the seed dir), letting the optimizer broadcast/hash-join
+        the small seen side — see the crossover note in ``__init__``.
+        """
+        info = self.store.bucketed_seen_info()
+        use_bucketed = info is not None and (
+            info.get("rows", self.bucketed_min_seen) >= self.bucketed_min_seen
+        )
+        self._seen_bucketed = self.store.read_seen_bucketed(self.spark) if use_bucketed else None
+        return info
+
+    def _seen_view(self, rnd: int, include_frontier_rounds: tuple[int, ...] = ()) -> DataFrame:
+        """The persisted seen set through round ``rnd`` that dedup unions
+        with ``self._seen_bucketed``: every seen delta the bucketed scan
+        does not already cover (empty when compaction left none)."""
+        deltas = self.store.read_seen(
+            self.spark, rnd,
+            include_frontier_rounds=include_frontier_rounds,
+            exclude_compacted=self._seen_bucketed is not None,
+        )
+        return (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()

@@ -1,11 +1,11 @@
-"""Per-host politeness: token buckets + skew-safe per-host top-k selection.
+"""Per-host politeness: static token-bucket budgets + skew-safe per-host top-k.
 
 Reference budget: 1 concurrent request/domain with a 1-second delay
 (settings/domain_spider.py:16-18) == a token bucket refilling at
 1/crawl_delay tokens/sec per host, capacity = round length.  Each crawl
-round selects at most ``floor(tokens)`` frontier URLs per host in FIFO
-(depth, seq) order — the Spark form of Scrapy's downloader-aware fair
-scheduling (settings/domain_spider.py:21).
+round selects at most ``floor(round_seconds / crawl_delay)`` frontier URLs
+per host in FIFO (depth, seq) order — the Spark form of Scrapy's
+downloader-aware fair scheduling (settings/domain_spider.py:21).
 
 Skew: a hot host may hold millions of frontier rows while its budget is
 tiny.  A single ``row_number().over(partitionBy(host))`` would funnel the
@@ -35,8 +35,9 @@ def static_budgets(robots: DataFrame | None, round_seconds: float) -> DataFrame 
     crawl_delay, leftover tokens L >= 0 and refill elapsed == round_seconds,
     refill yields min(C, L + C) = C every round.  The per-round budget is
     therefore the constant floor(round_seconds / crawl_delay) per host, and
-    no host_state evolution is needed.  (The dynamic path below remains for
-    burst capacities != round length.)
+    no per-host bucket state needs to be carried between rounds.  (Burst
+    capacities != round length are served by the streaming path,
+    streaming.stateful.rate_limited_frontier.)
 
     Returns (host, budget) for hosts with robots Crawl-delay overrides; hosts
     absent from the result use the default budget.
@@ -84,85 +85,3 @@ def select_per_host_static(
         .drop("_salt", "_rn1", "_rn2", "budget")
     )
 
-
-def init_host_state(frontier: DataFrame, robots: DataFrame | None, now_s: float) -> DataFrame:
-    """One row per host with its crawl delay (robots Crawl-delay overrides
-    the default 1s budget) and an empty bucket."""
-    hosts = frontier.select("host").distinct()
-    if robots is not None:
-        from ..functions import udfs
-
-        delays = robots.select(
-            F.col("host"),
-            F.coalesce(udfs.robots_crawl_delay(F.col("rules_text")), F.lit(DEFAULT_CRAWL_DELAY)).alias(
-                "crawl_delay"
-            ),
-        )
-        hosts = hosts.join(F.broadcast(delays), "host", "left").fillna(
-            {"crawl_delay": DEFAULT_CRAWL_DELAY}
-        )
-    else:
-        hosts = hosts.withColumn("crawl_delay", F.lit(DEFAULT_CRAWL_DELAY))
-    return hosts.select(
-        "host",
-        "crawl_delay",
-        F.lit(0.0).alias("tokens"),
-        F.lit(float(now_s)).alias("last_refill_s"),
-    )
-
-
-def refill_tokens(host_state: DataFrame, now_s: float, capacity_s: float) -> DataFrame:
-    """tokens += elapsed/crawl_delay, capped at capacity_s/crawl_delay."""
-    cap = F.lit(capacity_s) / F.col("crawl_delay")
-    return host_state.withColumn(
-        "tokens",
-        F.least(cap, F.col("tokens") + (F.lit(now_s) - F.col("last_refill_s")) / F.col("crawl_delay")),
-    ).withColumn("last_refill_s", F.lit(float(now_s)))
-
-
-def add_new_hosts(host_state: DataFrame, frontier: DataFrame, robots: DataFrame | None, now_s: float) -> DataFrame:
-    new_hosts = frontier.select("host").distinct().join(host_state.select("host"), "host", "left_anti")
-    fresh = init_host_state(new_hosts, robots, now_s)
-    return host_state.unionByName(fresh)
-
-
-def select_per_host(
-    frontier: DataFrame,
-    host_state: DataFrame,
-    order_cols: list[str] | None = None,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Politeness-capped FIFO selection: ≤ floor(tokens) rows per host.
-
-    Returns the selected frontier rows (columns preserved).  ``host_state``
-    is small (one row/host) and broadcast.
-    """
-    order_cols = order_cols or ["depth", "seq"]
-    budgets = host_state.select("host", F.floor("tokens").cast("int").alias("budget"))
-    fr = frontier.join(F.broadcast(budgets), "host", "left").fillna({"budget": 0}).filter(F.col("budget") > 0)
-
-    if salt_buckets > 1:
-        # phase 1: salted local prune (hot-host parallelism)
-        fr = fr.withColumn("_salt", F.pmod(F.col("seq"), F.lit(salt_buckets)).cast("int"))
-        fr = fr.repartition(F.col("host"), F.col("_salt"))
-        w1 = Window.partitionBy("host", "_salt").orderBy(*[F.col(c) for c in order_cols])
-        fr = fr.withColumn("_rn1", F.row_number().over(w1)).filter(F.col("_rn1") <= F.col("budget"))
-
-    # phase 2: exact per-host cap over the bounded survivor set
-    w2 = Window.partitionBy("host").orderBy(*[F.col(c) for c in order_cols])
-    selected = (
-        fr.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= F.col("budget"))
-        .drop("_salt", "_rn1", "_rn2", "budget")
-    )
-    return selected
-
-
-def spend_tokens(host_state: DataFrame, selected_counts: DataFrame) -> DataFrame:
-    """Subtract fetched counts: selected_counts = (host, fetched_count)."""
-    return (
-        host_state.join(F.broadcast(selected_counts), "host", "left")
-        .fillna({"fetched_count": 0})
-        .withColumn("tokens", F.greatest(F.lit(0.0), F.col("tokens") - F.col("fetched_count")))
-        .drop("fetched_count")
-    )

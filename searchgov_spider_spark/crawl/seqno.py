@@ -1,18 +1,18 @@
-"""Distributed FIFO sequence assignment (no single-partition window).
+"""FIFO sequence assignment for the crawl frontier.
 
 The frontier needs a dense global discovery sequence (the FIFO contract of
-the reference's Redis queue, job_state/queue.py:4-15).  A naive
-``row_number().over(Window.orderBy(...))`` collapses to ONE partition — a
-non-starter at 10^10 rows.  This helper assigns the same numbers with a
-two-pass range-partitioned scheme that stays fully distributed:
+the reference's Redis queue, job_state/queue.py:4-15).  Two assigners give
+the same numbers ``start..start+n-1`` in the order of ``order_cols``:
 
-  1. range-repartition + sort within partitions by the order columns;
-  2. persist, count rows per partition (tiny driver-side offset table);
-  3. per-partition ``row_number`` (partition-local window — no extra
-     shuffle) + broadcast-joined offset.
-
-The persist between passes pins the range boundaries so both passes see the
-same partitioning (range partitioning samples its input).
+  * :func:`assign_seq_small` — one ``row_number()`` window over a single
+    partition, with no action of its own.  For batches known to be small:
+    the seed list (already held in memory) and rounds whose estimated
+    admits stay under ``SMALL_BATCH_THRESHOLD``.
+  * :func:`assign_seq_bucketed` — a per-bucket window over a precomputed
+    MONOTONE bucket column plus a broadcast table of per-bucket offsets.  It
+    stays fully distributed at any batch size; its one action collects
+    O(buckets) counts.  :func:`monotone_bucket` derives that column from the
+    parent-seq range with arithmetic alone, so no range-sampling pass runs.
 """
 
 from __future__ import annotations
@@ -40,8 +40,7 @@ def assign_seq_bucketed(
     start: int = 0,
     bucket_col: str = "_pid",
 ) -> tuple[DataFrame, int, DataFrame]:
-    """Dense global sequence over a precomputed MONOTONE bucket column —
-    the zero-extra-job variant of :func:`assign_global_seq`.
+    """Dense global sequence over a precomputed MONOTONE bucket column.
 
     ``df[bucket_col]`` must be a non-decreasing integer function of the
     global ``order_cols`` order (the crawl engine derives it arithmetically
@@ -49,10 +48,7 @@ def assign_seq_bucketed(
     is needed).  The single action here — the per-bucket count collect —
     doubles as the materialization of ``df``'s cache; the per-bucket window
     and the broadcast offset join stay lazy for the caller's write to
-    execute.  Versus :func:`assign_global_seq` this removes, per batch: the
-    pre-count job, the range-partitioner sampling job, and the second
-    shuffled+sorted cache (the one bucket shuffle runs inside the caller's
-    write).  The collect is O(buckets) rows at any input size.
+    execute.  The collect is O(buckets) rows at any input size.
 
     Returns ``(df_with_seq, total_rows, cache_handle)``; the caller
     unpersists the handle after materializing the result.
@@ -116,54 +112,3 @@ def monotone_bucket(
     raw = F.floor(((col - F.lit(lo)) * F.lit(int(n_buckets))) / F.lit(int(max(span, 1))))
     return F.least(F.lit(int(n_buckets - 1)), F.greatest(F.lit(0), raw)).cast("int")
 
-
-def assign_global_seq(
-    df: DataFrame,
-    order_cols: list[str],
-    seq_col: str = "seq",
-    start: int = 0,
-    num_partitions: int | None = None,
-    small_threshold: int = SMALL_BATCH_THRESHOLD,
-) -> tuple[DataFrame, int, DataFrame]:
-    """Dense global sequence ``start..start+n-1`` in ``order_cols`` order.
-
-    Returns ``(df_with_seq, total_rows, cache_handle)`` — the handle is the
-    internally persisted intermediate; the caller unpersists it after
-    materializing the result.  Small batches (< small_threshold) take a
-    single-partition window; large batches take the two-pass
-    range-partitioned scheme described above.  Deterministic either way.
-    """
-    spark = df.sparkSession
-    df = df.persist()
-    total = df.count()
-    if total == 0:
-        return df.withColumn(seq_col, F.lit(0).cast("long")), 0, df
-    if total < small_threshold:
-        w = Window.orderBy(*[F.col(c) for c in order_cols])
-        out = df.withColumn(seq_col, (F.row_number().over(w) + F.lit(start) - 1).cast("long"))
-        return out, total, df
-
-    if num_partitions is None:
-        num_partitions = max(1, spark.sparkContext.defaultParallelism)
-    ranged = df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols]).sortWithinPartitions(
-        *order_cols
-    )
-    ranged = ranged.withColumn("_pid", F.spark_partition_id()).persist()
-    counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    df.unpersist()  # superseded by the ranged cache
-    offsets = {}
-    running = start
-    for pid in sorted(counts):
-        offsets[pid] = running
-        running += counts[pid]
-    offsets_df = F.broadcast(
-        spark.createDataFrame([(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long")
-    )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    out = (
-        ranged.withColumn("_rn", F.row_number().over(w))
-        .join(offsets_df, "_pid")
-        .withColumn(seq_col, (F.col("_offset") + F.col("_rn") - F.lit(1)).cast("long"))
-        .drop("_pid", "_rn", "_offset")
-    )
-    return out, total, ranged

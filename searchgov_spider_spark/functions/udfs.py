@@ -10,7 +10,6 @@ single-node reference implementations per row.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -249,18 +248,6 @@ def extract_links(html: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@pandas_udf(DOC_STRUCT)
-def extract_doc(html: pd.Series, url: pd.Series, lang_hint: pd.Series) -> pd.DataFrame:
-    rows = []
-    for body, u, lh in zip(html, url, lang_hint):
-        if body is None:
-            rows.append(("",) * len(_DOC_FIELDS))
-            continue
-        doc = htmlx.extract_html_doc(textproc.decode_bytes(bytes(body)), u or "", lh or "")
-        rows.append(tuple(getattr(doc, f) for f in _DOC_FIELDS))
-    return pd.DataFrame(rows, columns=list(_DOC_FIELDS))
-
-
 @pandas_udf(DOC_LINKS_STRUCT)
 def extract_doc_links(html: pd.Series, url: pd.Series, lang_hint: pd.Series) -> pd.DataFrame:
     rows = []
@@ -402,12 +389,3 @@ def document_fingerprint(text: pd.Series) -> pd.Series:
 def sanitize_text(text: pd.Series) -> pd.Series:
     return text.map(lambda t: textproc.sanitize_text(t) if t else "")
 
-
-def with_url_columns(df, url_col: str = "url"):
-    """Convenience: append canonical/host/query columns used by admission."""
-    return (
-        df.withColumn("url_nojs", strip_jsessionid(F.col(url_col)))
-        .withColumn("url_canon", canonicalize_url(F.col("url_nojs")))
-        .withColumn("host", url_host(F.col("url_canon")))
-        .drop("url_nojs")
-    )

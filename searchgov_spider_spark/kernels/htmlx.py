@@ -148,17 +148,17 @@ class _PageParser(HTMLParser):
 # synthetic web plus adversarial fragments.
 
 _SIMPLE_ENDTAG_RE = re.compile(r"</([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-# attr-less start tag (`<p>`, `<h1>`, `<title>`): one match replaces the
-# locatestarttagend + tagfind + attrfind triple for the dominant tag shape
-_BARE_STARTTAG_RE = re.compile(r"<([a-zA-Z][-.a-zA-Z0-9:_]*)>")
-# one/two double-quoted-attr start tags (`<a href="...">`,
-# `<meta name="..." content="...">`): the other two dominant shapes.  The
-# value class excludes `&<>"` so no _unescape is needed, and the name/tag
-# classes are strict subsets of the tolerant stdlib expressions — anything
-# these do not match falls through to the general tokenizer unchanged.
+# The three dominant start-tag shapes in one match, which replaces the
+# locatestarttagend + tagfind + attrfind triple: attr-less (`<p>`, `<h1>`),
+# one double-quoted attr (`<a href="...">`) and two (`<meta name="..."
+# content="...">`).  The value class excludes `&<>"` so no _unescape is
+# needed, and the name/tag classes are strict subsets of the tolerant stdlib
+# expressions — anything this does not match falls through to the general
+# tokenizer unchanged.
 _ATTR_CORE = r'\s+([a-zA-Z][-a-zA-Z0-9:_]*)\s*=\s*"([^"&<>]*)"'
-_ONEATTR_STARTTAG_RE = re.compile(r"<([a-zA-Z][-.a-zA-Z0-9:_]*)" + _ATTR_CORE + r"\s*>")
-_TWOATTR_STARTTAG_RE = re.compile(r"<([a-zA-Z][-.a-zA-Z0-9:_]*)" + _ATTR_CORE * 2 + r"\s*>")
+_SIMPLE_STARTTAG_RE = re.compile(
+    r"<([a-zA-Z][-.a-zA-Z0-9:_]*)(?:" + _ATTR_CORE + r"(?:" + _ATTR_CORE + r")?\s*)?>"
+)
 _CDATA_CLOSE = {
     "script": re.compile(r"</\s*script", re.IGNORECASE),
     "style": re.compile(r"</\s*style", re.IGNORECASE),
@@ -201,32 +201,19 @@ def _fast_scan(html: str, p: _PageParser) -> bool:
             p.handle_endtag(em.group(1).lower())
             i = em.end()
         elif nxt.isalpha() and nxt.isascii():
-            bm = _BARE_STARTTAG_RE.match(html, lt)
-            if bm is not None:
-                tag = bm.group(1).lower()
-                p.handle_starttag(tag, [])
+            sm = _SIMPLE_STARTTAG_RE.match(html, lt)
+            if sm is not None:
+                tag, n1, v1, n2, v2 = sm.groups()
+                tag = tag.lower()
+                if n1 is None:
+                    p.handle_starttag(tag, [])
+                elif n2 is None:
+                    p.handle_starttag(tag, [(n1.lower(), v1)])
+                else:
+                    p.handle_starttag(tag, [(n1.lower(), v1), (n2.lower(), v2)])
                 if tag in ("script", "style"):
                     cdata = tag
-                i = bm.end()
-                continue
-            am = _ONEATTR_STARTTAG_RE.match(html, lt)
-            if am is not None:
-                tag = am.group(1).lower()
-                p.handle_starttag(tag, [(am.group(2).lower(), am.group(3))])
-                if tag in ("script", "style"):
-                    cdata = tag
-                i = am.end()
-                continue
-            am = _TWOATTR_STARTTAG_RE.match(html, lt)
-            if am is not None:
-                tag = am.group(1).lower()
-                p.handle_starttag(
-                    tag,
-                    [(am.group(2).lower(), am.group(3)), (am.group(4).lower(), am.group(5))],
-                )
-                if tag in ("script", "style"):
-                    cdata = tag
-                i = am.end()
+                i = sm.end()
                 continue
             sm = _hp.locatestarttagend_tolerant.match(html, lt)
             if sm is None:

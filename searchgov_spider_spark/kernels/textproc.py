@@ -17,6 +17,7 @@ Reference behaviors mirrored (semantics only, no code copied):
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 # --- sanitization ----------------------------------------------------------
 
@@ -269,8 +270,6 @@ def split_sentences(text: str) -> list[str]:
 
 def word_frequencies(text: str, lang: str = "en") -> dict[str, int]:
     """Token frequency excluding stopwords/non-alnum (helpers.py:116-127)."""
-    from collections import Counter
-
     sw = STOPWORDS.get(lang, STOPWORDS["en"])
     # Counter over the filtered list runs the tally in C; key order (first
     # occurrence) and counts are identical to the explicit dict loop
@@ -297,8 +296,6 @@ def summarize_text(text: str, lang: str = "en") -> tuple[str, str]:
     Differential-pinned against the explicit derivation in
     tests/test_fast_html_parity.py.
     """
-    from collections import Counter
-
     sw = STOPWORDS.get(lang, STOPWORDS["en"])
     sentences = split_sentences(text)
     sent_tokens = [tokenize(s) for s in sentences]

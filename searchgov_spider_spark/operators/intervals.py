@@ -95,11 +95,12 @@ def running_sum_global(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Running sum of ``value_col`` over the GLOBAL ``order_cols`` order,
-    without a single-partition window: two-pass range-partitioned prefix
-    sum (the pattern of crawl/seqno.py:36, with sum totals instead of row
-    counts).  ``order_cols`` must be a total order (add a tie-break
-    column if the sort keys can repeat); the result keeps all input
-    columns plus ``out_col``.
+    without a single-partition window: range-repartition on the order,
+    per-partition sum totals collected as a P-row offset table, then
+    a partition-local running-sum window plus the broadcast offset.
+    ``order_cols`` must be a total order (add a tie-break column if the
+    sort keys can repeat); the result keeps all input columns plus
+    ``out_col``.
     """
     spark = df.sparkSession
     if num_partitions is None:

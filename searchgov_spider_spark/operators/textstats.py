@@ -1,8 +1,7 @@
 """Text-analysis operators over a documents table (training-data pipeline).
 
 Cheap stats (token counts, char classes) stay JVM-side; the heuristic
-kernels (language-ID, quality, fingerprint) run as Arrow-batched pandas UDFs
-wrapping searchgov_spider_spark.kernels.textproc.
+kernels (fingerprint, BPE encoding) run as Arrow-batched pandas UDFs.
 """
 
 from __future__ import annotations
@@ -52,18 +51,6 @@ def bpe_token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
         F.expr(ws).alias("n_ws_tokens"),
         F.expr(bpe).alias("n_bpe_tokens"),
         F.round(F.expr(bpe) / F.greatest(F.expr(ws), F.lit(1)), 6).alias("bpe_per_ws"),
-    )
-
-
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(F.col(id_col), udfs.detect_language(F.col(text_col)).alias("detected_lang"))
-
-
-def quality_scores(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    return docs.select(
-        F.col(id_col),
-        udfs.quality_score(F.col(text_col)).alias("quality"),
-        udfs.token_count(F.col(text_col)).alias("n_tokens"),
     )
 
 

@@ -167,11 +167,10 @@ def shard_plan(
 
     Scale shape: URLs collapse to a host-weight table first (hosts << URLs;
     one uniform-key groupBy with map-side partial agg), and the exclusive
-    prefix sum over SURT-ordered hosts runs as the same two-pass
-    range-partitioned scheme as ``crawl/seqno.assign_global_seq`` — range
-    repartition + per-partition sums (a P-row driver offset table, never
-    host rows) + partition-local running-sum window — NOT a single-partition
-    global window.  Shard assignment is pure BIGINT arithmetic
+    prefix sum over SURT-ordered hosts runs as a two-pass range-partitioned
+    scheme — range repartition + per-partition sums (a P-row offset
+    table, never host rows) + partition-local running-sum window — NOT a
+    single-partition global window.  Shard assignment is pure BIGINT arithmetic
     (``cum_before * n_shards div total``), so the plan is bit-identical at
     any parallelism.  The tiny result is localCheckpointed so the range
     boundaries can be released immediately.

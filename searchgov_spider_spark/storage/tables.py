@@ -1,8 +1,8 @@
 """Checkpointed crawl-state storage (Iceberg-snapshot semantics on parquet).
 
-The north_rule requires crawl state (frontier, seen-set shards, per-host
-budgets) checkpointed per round so a killed run resumes exactly.  The sandbox
-has no Iceberg runtime jars, so this module provides the same semantics with
+The north_rule requires crawl state (frontier, seen-set shards) checkpointed
+per round so a killed run resumes exactly.  Iceberg runtime jars are not a
+dependency, so this module provides the same semantics with
 parquet round-directories plus an atomically-renamed ``manifest.json`` per
 round (SURVEY.md §7.1 step 7): a round is committed iff its manifest exists,
 and resume reads the highest committed round.  The writer interface is kept
@@ -11,7 +11,6 @@ snapshot tag per round).
 
 Layout:
     <root>/round_00000/frontier/        parquet (unfetched frontier entries)
-    <root>/round_00000/host_state/      parquet
     <root>/round_00000/documents/       parquet (this round's extracted docs)
     <root>/round_00000/manifest.json    commit marker {round, next_seq, counts}
     <root>/seen/round_00000/            parquet delta of newly-seen url hashes
@@ -350,7 +349,7 @@ class CheckpointStore:
 
     def expire_rounds(self, keep_last: int) -> int:
         """Orphan-state GC (T2, reference SCHEDULER_KEY_ORPHAN_AGE):
-        drop frontier/host_state payloads of rounds older than the last
+        drop the frontier payloads of rounds older than the last
         ``keep_last`` committed rounds.  Documents and manifests are kept
         (they are the output / audit trail); resume only ever needs the last
         committed round, so ``keep_last`` is clamped to >= 1 — the last
@@ -364,11 +363,10 @@ class CheckpointStore:
             manifest = self.read_manifest(r)
             if manifest.get("seen_from_frontier"):
                 continue  # frontier dir doubles as a live seen delta
-            for name in ("frontier", "host_state"):
-                p = os.path.join(self.round_dir(r), name)
-                if os.path.isdir(p):
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed += 1
+            p = os.path.join(self.round_dir(r), "frontier")
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
+                removed += 1
         return removed
 
     def read_documents(self, spark: SparkSession, upto_round: int | None = None) -> DataFrame | None:

@@ -94,14 +94,3 @@ def generate_support_tables(spark: SparkSession, n_hosts: int) -> dict[str, Data
         "sitemap_snapshot": spark.createDataFrame(webgen.sitemap_snapshots_pandas(n_hosts)),
     }
 
-
-def sf_from_dir(sf_dir: str) -> float:
-    """Map a testdata dir like /root/testdata/sf0.01 to its scale factor."""
-    base = os.path.basename(sf_dir.rstrip("/"))
-    return float(base.replace("sf", "")) if base.startswith("sf") else 0.01
-
-
-def pages_for_sf(spark: SparkSession, sf: float, cache: bool = True) -> DataFrame:
-    n_pages = webgen.SF_PAGES.get(sf, int(2_000_000 * sf))
-    n_hosts = webgen.SF_HOSTS.get(sf, max(20, int(2_000 * sf)))
-    return generate_pages(spark, n_pages, n_hosts, cache=cache)

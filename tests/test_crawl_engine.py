@@ -142,6 +142,43 @@ def test_resume_reproduces_visited_set(spark, web, tmp_path):
     assert {r["url"] for r in docs.select("url").collect()} == oracle.fetched
 
 
+def test_multi_seed_bootstrap_matches_oracle(spark, web, tmp_path):
+    """Seed admission over a whole list: hosts in non-sorted order, an exact
+    duplicate, an alias canonicalizing to an earlier seed and a
+    robots-denied seed.  The round-0 frontier is numbered densely in
+    first-listing order, and the crawl from it equals the reference BFS."""
+    pages_df, robots_df = web
+    start = [
+        webgen.page_url(3, 0),
+        webgen.page_url(1, 0),
+        webgen.page_url(N_HOSTS - 1, 0),  # robots: Disallow: /
+        webgen.page_url(2, 0),
+        webgen.page_url(1, 0),  # exact duplicate
+        "https://HOST2.example.gov/#top",  # alias of host2's root
+        webgen.page_url(0, 0),
+    ]
+    policy = CrawlPolicy(allowed_domains=[webgen.host_name(h) for h in range(4)], depth_limit=2)
+    oracle = reference_crawl(_pages_dict(), _robots_dict(), start, policy)
+    engine = CrawlEngine(
+        spark, pages_df, robots_df, policy, str(tmp_path / "seeds"),
+        bloom_shards=4, bloom_bits=1 << 14,
+    )
+    run = engine.run(start, max_rounds=64)
+
+    expected_seeds = [webgen.page_url(h, 0) for h in (3, 1, 2, 0)]
+    assert oracle.order[:4] == expected_seeds
+    seeds = spark.read.parquet(engine.store.seed_seen_dir()).orderBy("seq").collect()
+    assert [(r["url_canon"], r["seq"], r["depth"]) for r in seeds] == [
+        (u, i, 0) for i, u in enumerate(expected_seeds)
+    ]
+
+    seen = run.seen(spark)
+    assert {(r["url_canon"], r["depth"]) for r in seen.collect()} == set(oracle.depth.items())
+    ordered = seen.orderBy("seq").collect()
+    assert [r["url_canon"] for r in ordered] == oracle.order
+    assert [r["seq"] for r in ordered] == list(range(len(oracle.order)))
+
+
 def test_generator_fetcher_matches_table_fetcher(spark, web, tmp_path):
     # the live-fetch-shaped GeneratorFetcher must produce the identical crawl
     # (visited set, order, extracted text) as the table-join fetcher

@@ -274,45 +274,30 @@ class TestMultimodal:
 
 class TestSeqno:
     def test_dense_and_ordered(self, spark):
-        from searchgov_spider_spark.crawl.seqno import assign_global_seq
+        from searchgov_spider_spark.crawl.seqno import assign_seq_small
 
         rows = [(i % 7, i, f"u{i}") for i in range(500)]
-        df = spark.createDataFrame(rows, "depth int, pos int, url string")
-        out, total, _ = assign_global_seq(df, ["depth", "pos"], start=100)
-        assert total == 500
+        df = spark.createDataFrame(rows, "depth int, pos int, url string").repartition(5)
+        out = assign_seq_small(df, ["depth", "pos"], start=100)
         got = [(r["depth"], r["pos"], r["seq"]) for r in out.orderBy("seq").collect()]
         expected_order = sorted(rows, key=lambda r: (r[0], r[1]))
         assert [g[2] for g in got] == list(range(100, 600))
         assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in expected_order]
 
-    def test_large_path(self, spark):
-        from searchgov_spider_spark.crawl.seqno import assign_global_seq
-
-        df = spark.range(0, 3000).select(F.col("id").alias("pos"))
-        out, total, _ = assign_global_seq(df, ["pos"], start=0, small_threshold=100, num_partitions=6)
-        assert total == 3000
-        seqs = [r["seq"] for r in out.orderBy("pos").collect()]
-        assert seqs == list(range(3000))
-
     def test_bucketed_matches_global(self, spark):
-        """The sampling-free bucketed scheme assigns the SAME dense FIFO
-        sequence as assign_global_seq, for exact, estimated, and fully
-        out-of-range (clamped) bucket bounds."""
-        from searchgov_spider_spark.crawl.seqno import (
-            assign_global_seq,
-            assign_seq_bucketed,
-            monotone_bucket,
-        )
+        """The sampling-free bucketed scheme assigns the dense global FIFO
+        sequence (rows sorted by (parent_seq, pos), numbered from start)
+        for exact, estimated, and fully out-of-range (clamped) bucket
+        bounds."""
+        from searchgov_spider_spark.crawl.seqno import assign_seq_bucketed, monotone_bucket
 
         # skewed fan-out: parent 13 contributes 60% of rows
         rows = [(p, i, f"u{p}_{i}") for p in range(200, 240) for i in range(8)]
         rows += [(13 + 200, i, f"hot{i}") for i in range(8, 500)]
         df = spark.createDataFrame(rows, "parent_seq long, pos int, url string").repartition(7)
-        ref, ref_total, h = assign_global_seq(
-            df, ["parent_seq", "pos"], start=777, small_threshold=10
-        )
-        expected = {(r["parent_seq"], r["pos"]): r["seq"] for r in ref.collect()}
-        h.unpersist()
+        expected = {
+            (p, i): 777 + n for n, (p, i, _) in enumerate(sorted(rows, key=lambda r: (r[0], r[1])))
+        }
         for lo, span in [(200, 40), (0, 1000), (5000, 3)]:  # exact / loose / all-clamped
             pid = monotone_bucket(F.col("parent_seq"), lo=lo, span=span, n_buckets=16)
             out, total, cache = assign_seq_bucketed(
@@ -320,7 +305,7 @@ class TestSeqno:
             )
             got = {(r["parent_seq"], r["pos"]): r["seq"] for r in out.collect()}
             cache.unpersist()
-            assert total == ref_total == len(rows)
+            assert total == len(rows)
             assert got == expected, f"bounds ({lo},{span})"
         # bucket column must be gone from the output schema
         assert "_pid" not in out.columns

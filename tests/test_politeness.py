@@ -1,7 +1,6 @@
-"""Unit tests for the politeness token bucket (dynamic + static paths)."""
+"""Unit tests for static per-host politeness budgets and their selection."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from searchgov_spider_spark.crawl import politeness
 
@@ -17,67 +16,26 @@ def frontier(spark):
     return spark.createDataFrame(rows, "url_canon string, host string, depth int, seq long")
 
 
-class TestDynamicBucket:
-    def test_refill_caps_at_capacity(self, spark):
-        hs = spark.createDataFrame(
-            [("a.gov", 1.0, 5.0, 0.0), ("slow.gov", 2.0, 5.0, 0.0)],
-            "host string, crawl_delay double, tokens double, last_refill_s double",
-        )
-        out = {r["host"]: r for r in politeness.refill_tokens(hs, now_s=100.0, capacity_s=10.0).collect()}
-        # capacity = 10s / delay; refill = min(cap, tokens + elapsed/delay)
-        assert out["a.gov"]["tokens"] == 10.0
-        assert out["slow.gov"]["tokens"] == 5.0
-        assert out["a.gov"]["last_refill_s"] == 100.0
-
-    def test_spend_subtracts_and_floors(self, spark):
-        hs = spark.createDataFrame(
-            [("a.gov", 1.0, 5.0, 0.0)], "host string, crawl_delay double, tokens double, last_refill_s double"
-        )
-        counts = spark.createDataFrame([("a.gov", 9)], "host string, fetched_count int")
-        out = politeness.spend_tokens(hs, counts).collect()[0]
-        assert out["tokens"] == 0.0
-
-    def test_init_uses_robots_crawl_delay(self, spark, frontier):
+class TestStaticEquivalence:
+    def test_static_budgets_use_robots_crawl_delay(self, spark, frontier):
+        """Budget = floor(round_seconds / crawl_delay) from the robots
+        Crawl-delay (1 s when the rules name none); a host with no robots
+        row falls back to ``default_budget``."""
         robots = spark.createDataFrame(
             [("a.gov", "User-agent: *\nCrawl-delay: 4\nDisallow: /x\n"), ("b.gov", "User-agent: *\nDisallow:\n")],
             "host string, rules_text string",
         )
-        out = {r["host"]: r for r in politeness.init_host_state(frontier, robots, now_s=0.0).collect()}
-        assert out["a.gov"]["crawl_delay"] == 4.0
-        assert out["b.gov"]["crawl_delay"] == politeness.DEFAULT_CRAWL_DELAY
-        assert out["hot.gov"]["crawl_delay"] == politeness.DEFAULT_CRAWL_DELAY
-
-    def test_select_per_host_dynamic(self, spark, frontier):
-        hs = spark.createDataFrame(
-            [("a.gov", 1.0, 4.0, 0.0), ("b.gov", 1.0, 0.0, 0.0), ("hot.gov", 1.0, 2.0, 0.0)],
-            "host string, crawl_delay double, tokens double, last_refill_s double",
-        )
-        got = politeness.select_per_host(frontier, hs, salt_buckets=4).collect()
+        round_s = 8.0
+        budgets = politeness.static_budgets(robots, round_s)
+        assert {r["host"]: r["budget"] for r in budgets.collect()} == {"a.gov": 2, "b.gov": 8}
+        got = politeness.select_per_host_static(frontier, budgets, default_budget=5, salt_buckets=4).collect()
         by_host = {}
         for r in got:
             by_host.setdefault(r["host"], []).append(r["seq"])
-        assert len(by_host.get("a.gov", [])) == 4
-        assert "b.gov" not in by_host
-        assert len(by_host["hot.gov"]) == 2
-        # FIFO: lowest seq first
-        assert sorted(by_host["a.gov"]) == by_host["a.gov"]
-        assert by_host["a.gov"] == [0, 1, 2, 3]
-
-
-class TestStaticEquivalence:
-    def test_static_budget_matches_steady_state_bucket(self, spark, frontier):
-        """With capacity == round length the dynamic bucket refills to the cap
-        every round, so per-round selection must equal the static budget path."""
-        robots = spark.createDataFrame(
-            [("a.gov", "User-agent: *\nCrawl-delay: 2\nDisallow: /zzz\n")], "host string, rules_text string"
-        )
-        round_s = 8.0
-        budgets = politeness.static_budgets(robots, round_s)
-        static_sel = politeness.select_per_host_static(frontier, budgets, default_budget=int(round_s))
-        hs = politeness.init_host_state(frontier, robots, now_s=0.0)
-        hs = politeness.refill_tokens(hs, now_s=round_s, capacity_s=round_s)
-        dyn_sel = politeness.select_per_host(frontier, hs)
-        assert sorted(r["seq"] for r in static_sel.collect()) == sorted(r["seq"] for r in dyn_sel.collect())
+        # FIFO: lowest seqs first, capped per host
+        assert sorted(by_host["a.gov"]) == [0, 1]
+        assert sorted(by_host["b.gov"]) == [10, 11, 12]  # budget 8 > its 3 rows
+        assert sorted(by_host["hot.gov"]) == [13, 14, 15, 16, 17]  # no robots row: default 5
 
     def test_salted_equals_unsalted(self, spark, frontier):
         budgets = None
