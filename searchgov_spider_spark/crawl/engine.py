@@ -3,11 +3,19 @@
 Spark rebuild of the reference's Scrapy engine loop (SURVEY.md §3.1):
 each round is one micro-batch over the frontier —
 
-  frontier -> politeness budget selection (P1) -> simulated fetch join
-  against the pages table (J4; a real deployment swaps in a mapInArrow HTTP
-  client per partition, S4) -> Arrow-UDF extraction (X1-X18) -> link
-  discovery (F1) -> admission filters + dedup (F2-F7) -> global FIFO seq
+  frontier -> politeness budget selection (P1) -> ONE Arrow pass per
+  partition (``round_pass``): fetch (S4/J4) + extraction (X1-X18) +
+  document metadata + per-link admission kernels and robots verdict (F1,
+  F2, F6) -> JVM admission filters + dedup (F2-F7) -> global FIFO seq
   assignment (O1) -> frontier/seen checkpoint (T1) -> metrics (A7).
+
+The pass is the round's only Python node: every Python node costs each of
+its tasks a Python runner start (~250 ms of worker CPU, mostly
+``importlib.invalidate_caches`` re-reading pyspark.zip), more than the
+kernels' whole per-round work on a partition of a small round.  A
+batch-client fetcher runs inside the pass; a join-shaped one (the pages
+table, J4) joins first.  The documents write and the frontier job both
+read the persisted pass; neither has a Python node of its own.
 
 Round state lives in parquet round-directories committed by manifest
 (storage.tables.CheckpointStore) so a killed run resumes from the last
@@ -36,18 +44,20 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import udfs
 from ..storage.tables import CheckpointStore
 from . import politeness
 from .bloom import PartitionedBloom, merge_bitmaps_into
 from .frontier import (
-    apply_admission_filters,
-    apply_robots_filter,
     dedup_against_seen,
     dedup_first_in_batch,
+    filter_admission_parts,
+    pass_candidates,
 )
 from .reference_bfs import CrawlPolicy
 from .seqno import (
@@ -131,11 +141,15 @@ class CrawlEngine:
         self.fetch_partitions = fetch_partitions or max(32, spark.sparkContext.defaultParallelism)
         # robots/budgets are host-table-sized dimensions, but typically
         # arrive as a createDataFrame spread over defaultParallelism
-        # partitions — every ROUND's broadcast build then runs one tiny
-        # task per partition (r06: 32 scheduled tasks per broadcast to read
-        # a few hundred rows).  Coalesce once at init; the per-round
-        # broadcast job becomes a single task.
+        # partitions.  Coalesce once at init so each later read (the
+        # budgets join, the robots map below) is a single task.
         self.robots = robots.coalesce(1).persist() if robots is not None else None
+        # The round's Arrow pass judges robots per link from a host ->
+        # robots.txt map collected here once and shipped as a broadcast
+        # variable (each partition's pass parses a host's rules once).
+        # Memory ceiling: the whole robots table is collected once, as a
+        # broadcast join of it would collect it.
+        self._robots_rules = self._broadcast_robots()
         self.budgets = politeness.static_budgets(self.robots, round_seconds)
         self.min_budget = self.default_budget
         if self.budgets is not None:
@@ -152,6 +166,28 @@ class CrawlEngine:
 
             self.fetcher = TableFetcher(pages, self.fetch_partitions)
 
+    def _broadcast_robots(self):
+        """Host -> rules_text of ``self.robots`` as a broadcast variable
+        (None without a robots table).  Rows with a null host match no URL
+        and are left out.  More than one row for a host is rejected: the
+        reference fetches one robots.txt per host, and a map would keep
+        one of the rows silently."""
+        if self.robots is None:
+            return None
+        rows = self.robots.select("host", "rules_text").collect()
+        rules: dict[str, str | None] = {}
+        dups = set()
+        for r in rows:
+            if r["host"] is None:
+                continue
+            if r["host"] in rules:
+                dups.add(r["host"])
+            rules[r["host"]] = r["rules_text"]
+        if dups:
+            self.robots.unpersist()
+            raise ValueError(f"robots table has more than one row for host(s): {sorted(dups)}")
+        return self.spark.sparkContext.broadcast(rules)
+
     # -- bootstrap -------------------------------------------------------------
     def _bootstrap(self, start_urls: list[str]) -> DataFrame:
         """Admit the seed URLs (depth 0, FIFO = listing order).
@@ -160,17 +196,60 @@ class CrawlEngine:
         paths (reference: start requests carry dont_filter=True and skip
         get_processed_request, middlewares.py:114-115); only the offsite,
         depth and robots checks apply.  The seeds arrive as an in-memory
-        list, so the single-partition window numbering them needs no more
-        memory than the list already holds.
+        list, so one partition holds them: the kernel parts and robots
+        verdicts take one Arrow pass (one Python task), and the
+        single-partition window numbering them needs no more memory than
+        the list already holds.  The list ships as an Arrow table, which
+        the JVM reads without a Python task (a createDataFrame over Python
+        rows unpickles them in one Python task per slice).
         """
+        n = len(start_urls)
         seeds = self.spark.createDataFrame(
-            [(u, 0, "", i) for i, u in enumerate(start_urls)],
-            "url string, depth int, source_url string, pos int",
-        )
-        admitted = apply_admission_filters(seeds, self.policy, is_seed=True)
-        admitted = apply_robots_filter(admitted, self.robots)
-        admitted = dedup_first_in_batch(admitted, ["pos"])
+            pa.table({
+                "url": pa.array(start_urls, pa.string()),
+                "depth": pa.array([0] * n, pa.int32()),
+                "source_url": pa.array([""] * n, pa.string()),
+                "pos": pa.array(range(n), pa.int32()),
+            })
+        ).coalesce(1)
+        rules = self._robots_rules
+
+        def _parts(batches):
+            return udfs.seed_parts(batches, rules.value if rules is not None else None)
+
+        schema = T.StructType(seeds.schema.fields + udfs.LINK_STRUCT.fields)
+        admitted = filter_admission_parts(seeds.mapInArrow(_parts, schema), self.policy, is_seed=True)
+        admitted = dedup_first_in_batch(admitted.filter(F.col("robots_ok")).drop("robots_ok"), ["pos"])
         return assign_seq_small(admitted, ["pos"], start=0).select(*FRONTIER_COLS)
+
+    # -- the round's Python pass ---------------------------------------------------
+    def round_pass(self, batch: DataFrame) -> DataFrame:
+        """Fetch + extraction + document metadata + link parts + robots of a
+        frontier batch as ONE Arrow map node (``udfs.crawl_pass``), so each
+        partition starts one Python task per round.
+
+        A batch-client fetcher (``fetch_partition``: GeneratorFetcher,
+        HttpFetcher) runs inside the pass, which drives its per-partition
+        iterator once — an HTTP client keeps one event loop across the
+        partition's Arrow batches.  A join-shaped fetcher (TableFetcher)
+        joins first and the pass runs on the joined rows.
+        """
+        fetch_partition = getattr(self.fetcher, "fetch_partition", None)
+        fetch = fetch_partition() if fetch_partition is not None else None
+        rules = self._robots_rules
+
+        def _pass(batches):
+            if fetch is None:
+                fetched = (b.to_pydict() for b in batches)
+            else:
+                fetched = (
+                    {c: pdf[c].tolist() for c in pdf.columns}
+                    for pdf in fetch(b.to_pandas() for b in batches)
+                )
+            return udfs.crawl_pass(fetched, rules.value if rules is not None else None)
+
+        src = batch if fetch is not None else self.fetcher.fetch(batch)
+        return src.mapInArrow(_pass, udfs.CRAWL_PASS_SCHEMA)
 
     # -- one round ---------------------------------------------------------------
     def _run_round(
@@ -214,68 +293,17 @@ class CrawlEngine:
         cores = self.spark.sparkContext.defaultParallelism
         parts = min(self.fetch_partitions, max(cores, (frontier_hint // 2000) + 1))
         # NO observe on `selected`: it sits UPSTREAM of the persisted
-        # `extracted`, so both the documents query and the frontier query
+        # `passed`, so both the documents query and the frontier query
         # would carry the same observation node — under concurrent execution
         # whichever query serves from cache reports an empty observation row
         # (toPyRow assertion).  n_selected is derived instead: the frontier
         # hint in the fast path (selection is the identity), a cached count
         # in the binding path.
         batch = selected.repartition(parts, F.col("url_hash"))
-        fetched = self.fetcher.fetch(batch)
-        found = fetched.filter(F.col("html").isNotNull())
-        extracted = (
-            found.withColumn("doc", udfs.extract_doc_links(F.col("html"), F.col("url_canon"), F.col("lang")))
-            .select(
-                "url_canon", "url_hash", "host", "depth", "seq", "source_url",
-                F.length(F.col("html")).alias("download_bytes"),
-                "doc", F.col("doc.links").alias("links"),
-            )
-            .persist()
-        )
-        # full reference document schema (indexing/transform.py:20-101):
-        # created_at/updated_at use null instead of the reference's wall-clock
-        # fallback (X18 nondeterminism exclusion); download_milliseconds and
-        # creator are runtime placeholders upstream too.
-        # r06: doc_id + url parts + BOTH date parses in one fused Arrow UDF
-        # (doc_meta) — the previous projection paid five ArrowEvalPython
-        # evaluations per round (parse_dates ran twice on created_raw alone);
-        # 'updated' reuses the struct's created_at, evaluated once.
-        meta = udfs.doc_meta(
-            F.col("url_canon"), F.col("doc.created_raw"), F.col("doc.changed_raw")
-        )
-        documents = extracted.withColumn("_m", meta).select(
-            F.col("_m.id").alias("id"),
-            F.col("url_canon").alias("url"),
-            F.col("url_canon").alias("path"),
-            F.col("source_url"),
-            F.col("_m.domain_name").alias("domain_name"),
-            F.col("_m.basename").alias("basename"),
-            F.nullif(F.col("_m.extension"), F.lit("")).alias("extension"),
-            F.col("_m.url_path").alias("url_path"),
-            F.col("depth").alias("crawl_depth"),
-            F.col("seq"),
-            F.col("doc.title").alias("title"),
-            F.col("doc.description").alias("description"),
-            F.col("doc.keywords").alias("keywords"),
-            F.col("doc.keywords").alias("tags"),
-            F.col("doc.language").alias("language"),
-            F.col("doc.content").alias("content"),
-            F.nullif(F.col("doc.audience"), F.lit("")).alias("audience"),
-            F.nullif(F.col("doc.thumbnail_url"), F.lit("")).alias("thumbnail_url"),
-            F.col("_m.created_at").alias("created_at"),
-            F.col("_m.changed").alias("changed"),
-            F.col("_m.created_at").alias("updated"),
-            F.lit("text/html").alias("mime_type"),
-            F.lit("article").alias("content_type"),
-            F.lit(None).cast("long").alias("dap_domain_visits_count"),
-            F.struct(
-                F.col("depth").alias("crawl_depth"),
-                F.lit(None).cast("string").alias("creator"),
-                F.col("download_bytes").alias("download_bytes"),
-                F.lit(None).cast("long").alias("download_milliseconds"),
-                F.col("source_url").alias("source_url"),
-            ).alias("metadata"),
-        )
+        # the round's only Python node; the documents and frontier jobs
+        # both read it from cache
+        passed = self.round_pass(batch).persist()
+        documents = documents_from_pass(passed)
         if frontier_hint == 0:
             # empty frontier (resume edge): nothing to fetch this round —
             # checkpoint an unchanged frontier so the round commits.
@@ -283,7 +311,7 @@ class CrawlEngine:
             # n_selected == 0 iff the frontier is empty — gate on the exact
             # hint BEFORE launching any job.)
             remaining = frontier.count()
-            extracted.unpersist()
+            passed.unpersist()
             metrics = {
                 "selected": 0, "fetched": 0, "missed": 0, "admitted": 0,
                 "remaining": remaining, "next_seq": next_seq,
@@ -296,7 +324,7 @@ class CrawlEngine:
 
         # documents write runs CONCURRENTLY with the admission/frontier job
         # (separate driver thread; Spark schedules both jobs at once).  Both
-        # consume the persisted `extracted`; the block manager's per-block
+        # consume the persisted `passed`; the block manager's per-block
         # locking makes concurrent materialization safe.  This hides one of
         # the round's two action latencies — the dominant share of the
         # small-round fixed cost.
@@ -314,18 +342,9 @@ class CrawlEngine:
         docs_thread.start()
 
         # discovery (F1) -> admission (F2-F6) -> dedup (F7) -> FIFO seq (O1)
-        discovered = extracted.select(
-            F.col("url_canon").alias("source_url"),
-            F.col("depth").alias("parent_depth"),
-            F.col("seq").alias("parent_seq"),
-            F.posexplode_outer(F.col("links")).alias("pos", "url"),
-        ).filter(F.col("url").isNotNull())
-        candidates = apply_admission_filters(
-            discovered.withColumn("depth", F.col("parent_depth") + 1).drop("parent_depth"),
-            self.policy,
-        )
-        candidates = apply_robots_filter(candidates, self.robots)
-        candidates = dedup_first_in_batch(candidates, ["parent_seq", "pos"]).persist()
+        candidates = dedup_first_in_batch(
+            pass_candidates(passed, self.policy), ["parent_seq", "pos"]
+        ).persist()
         # Bloom prefiltering pays once the seen set is large (the anti-join
         # shuffle it avoids outweighs the probe); below the threshold the
         # plain anti-join is cheaper.  next_seq == |seen| by construction.
@@ -453,7 +472,7 @@ class CrawlEngine:
         seen_next = self._seen_view(rnd, include_frontier_rounds=(rnd,) if seen_from_frontier else ())
         if budget_binds:
             selected.unpersist()
-        extracted.unpersist()
+        passed.unpersist()
         candidates.unpersist()
         new_admits.unpersist()
         if seq_cache is not None:
@@ -592,3 +611,44 @@ class CrawlEngine:
             exclude_compacted=self._seen_bucketed is not None,
         )
         return (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()
+
+
+def documents_from_pass(passed: DataFrame) -> DataFrame:
+    """The round's documents from its fused pass, in the full reference
+    document schema (indexing/transform.py:20-101): created_at/updated_at
+    use null instead of the reference's wall-clock fallback (X18
+    nondeterminism exclusion); download_milliseconds and creator are
+    runtime placeholders upstream too; 'updated' reuses created_at."""
+    return passed.select(
+        F.col("doc.id").alias("id"),
+        F.col("url_canon").alias("url"),
+        F.col("url_canon").alias("path"),
+        F.col("source_url"),
+        F.col("doc.domain_name").alias("domain_name"),
+        F.col("doc.basename").alias("basename"),
+        F.nullif(F.col("doc.extension"), F.lit("")).alias("extension"),
+        F.col("doc.url_path").alias("url_path"),
+        F.col("depth").alias("crawl_depth"),
+        F.col("seq"),
+        F.col("doc.title").alias("title"),
+        F.col("doc.description").alias("description"),
+        F.col("doc.keywords").alias("keywords"),
+        F.col("doc.keywords").alias("tags"),
+        F.col("doc.language").alias("language"),
+        F.col("doc.content").alias("content"),
+        F.nullif(F.col("doc.audience"), F.lit("")).alias("audience"),
+        F.nullif(F.col("doc.thumbnail_url"), F.lit("")).alias("thumbnail_url"),
+        F.col("doc.created_at").alias("created_at"),
+        F.col("doc.changed").alias("changed"),
+        F.col("doc.created_at").alias("updated"),
+        F.lit("text/html").alias("mime_type"),
+        F.lit("article").alias("content_type"),
+        F.lit(None).cast("long").alias("dap_domain_visits_count"),
+        F.struct(
+            F.col("depth").alias("crawl_depth"),
+            F.lit(None).cast("string").alias("creator"),
+            F.col("download_bytes").alias("download_bytes"),
+            F.lit(None).cast("long").alias("download_milliseconds"),
+            F.col("source_url").alias("source_url"),
+        ).alias("metadata"),
+    )

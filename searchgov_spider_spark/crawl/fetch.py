@@ -9,14 +9,23 @@ Spark the fetch stage is a DataFrame -> DataFrame operator appending
     big side is partitioned once on the key.  Right shape for re-processing
     a stored corpus (WARC/CommonCrawl re-crawls), but costs a corpus scan
     per round.
-  * ``GeneratorFetcher`` — the live-crawl shape: a ``mapInPandas`` batch
-    client whose cost is proportional to the BATCH, not the corpus.  In
-    production the body of ``_fetch_batch`` is an async HTTP client pool
-    (bounded per-partition concurrency, 15s timeout, 15MB cap, no retry per
-    settings/common.py:22-27); in this sandbox it "fetches" from the
+  * ``GeneratorFetcher`` / ``HttpFetcher`` — the live-crawl shape: a batch
+    client whose cost is proportional to the BATCH, not the corpus.
+    ``HttpFetcher`` is an async HTTP client pool (bounded per-partition
+    concurrency, 15s timeout, 15MB cap, no retry per
+    settings/common.py:22-27); ``GeneratorFetcher`` "fetches" from the
     deterministic synthetic web by reconstructing pages from the URL
     (webgen.build_page is a pure function of the URL), which models network
     fetch cost-behavior exactly.
+
+A batch client exposes its per-partition function (``fetch_partition``:
+an iterator of pandas frontier batches in, the same rows plus html/lang
+out).  ``fetch(df)`` is ``mapInPandas`` of that function; the crawl
+engine's round pass (``CrawlEngine.round_pass``) calls the same function
+inside its single Arrow map node, so a round starts one Python task per
+partition and the client still sees all of a partition's batches through
+one iterator.  ``TableFetcher`` has no such function: the engine joins
+first and runs its pass on the joined rows.
 """
 
 from __future__ import annotations
@@ -30,6 +39,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import udfs
+
+
+# a batch client's per-partition function: frontier batches in, the same
+# rows with ``html``/``lang`` appended out
+PartitionFetch = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
+
+
+def fetched_schema(selected: DataFrame) -> T.StructType:
+    return T.StructType(
+        list(selected.schema.fields)
+        + [T.StructField("html", T.BinaryType()), T.StructField("lang", T.StringType())]
+    )
 
 
 @dataclass(frozen=True)
@@ -119,14 +140,15 @@ def _default_transport_factory() -> Callable:
 class HttpFetcher:
     """Async batch HTTP client (S4) — the production live-fetch stage.
 
-    ``mapInPandas`` over the politeness-selected batch: each partition
-    builds ONE transport (``transport_factory()``, e.g. a session pool),
-    fans the batch out under an asyncio semaphore, and applies the
-    reference's downloader semantics (FetchPolicy): per-request timeout,
-    15 MB response cap, and NO retry — any failure (timeout, transport
-    error, non-200, oversize) yields ``html = NULL`` for that URL, exactly
-    like a Scrapy downloader miss with RETRY_ENABLED=False
-    (settings/common.py:22-27).
+    Per partition of the politeness-selected batch (``fetch_partition``,
+    which ``fetch`` maps with ``mapInPandas`` and the crawl engine runs
+    inside its round pass), the client builds ONE transport
+    (``transport_factory()``, e.g. a session pool), fans the batch out
+    under an asyncio semaphore, and applies the reference's downloader
+    semantics (FetchPolicy): per-request timeout, 15 MB response cap, and
+    NO retry — any failure (timeout, transport error, non-200, oversize)
+    yields ``html = NULL`` for that URL, exactly like a Scrapy downloader
+    miss with RETRY_ENABLED=False (settings/common.py:22-27).
 
     The transport is an ``async callable(url, policy) -> (status_code,
     headers_dict, body_bytes)``; the factory must be picklable (it ships to
@@ -142,11 +164,10 @@ class HttpFetcher:
         self.policy = policy
 
     def fetch(self, selected: DataFrame) -> DataFrame:
+        return selected.mapInPandas(self.fetch_partition(), schema=fetched_schema(selected))
+
+    def fetch_partition(self) -> PartitionFetch:
         factory, policy = self.transport_factory, self.policy
-        out_schema = T.StructType(
-            list(selected.schema.fields)
-            + [T.StructField("html", T.BinaryType()), T.StructField("lang", T.StringType())]
-        )
 
         def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             import asyncio
@@ -192,7 +213,7 @@ class HttpFetcher:
                     loop.run_until_complete(aclose())
                 loop.close()
 
-        return selected.mapInPandas(_fetch_batch, schema=out_schema)
+        return _fetch_batch
 
 
 class TableFetcher:
@@ -222,13 +243,12 @@ class GeneratorFetcher:
         self.branch = branch
 
     def fetch(self, selected: DataFrame) -> DataFrame:
+        return selected.mapInPandas(self.fetch_partition(), schema=fetched_schema(selected))
+
+    def fetch_partition(self) -> PartitionFetch:
         from ..synth import webgen
 
         sizes, n_hosts, branch = self.sizes, self.n_hosts, self.branch
-        out_schema = T.StructType(
-            list(selected.schema.fields)
-            + [T.StructField("html", T.BinaryType()), T.StructField("lang", T.StringType())]
-        )
 
         def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # production: open an async HTTP session here, fan out the batch
@@ -248,4 +268,4 @@ class GeneratorFetcher:
                 yield pdf.assign(html=pd.Series(htmls, index=pdf.index, dtype=object),
                                  lang=pd.Series(langs, index=pdf.index, dtype=object))
 
-        return selected.mapInPandas(_fetch_batch, schema=out_schema)
+        return _fetch_batch

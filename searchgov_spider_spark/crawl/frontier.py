@@ -12,10 +12,13 @@ DataFrame transformations over the batch of links discovered in a round
   (job_state/dupefilter.py:8-25).
 
 Everything except canonicalization and robots evaluation stays JVM-side
-(regex/string filters compiled by Catalyst); the two exceptions are
-Arrow-batched pandas UDFs.  Policy regexes are precomputed on the driver
-from the seed config, exactly as the reference builds its LinkExtractor
-deny lists up front (spiders/domain_spider.py:79-92).
+(regex/string filters compiled by Catalyst, ``filter_admission_parts``).
+The crawl engine computes those two kernels inside its round's single
+Arrow pass (``pass_candidates``); ``apply_admission_filters`` and
+``apply_robots_filter`` compute them as Arrow-batched pandas UDFs, the
+unfused form that is the pass's oracle.  Policy regexes are precomputed
+once from the seed config, exactly as the reference builds its
+LinkExtractor deny lists up front (spiders/domain_spider.py:79-92).
 """
 
 from __future__ import annotations
@@ -76,16 +79,21 @@ def apply_admission_filters(links: DataFrame, policy: CrawlPolicy, is_seed: bool
     robots still apply (RobotsTxtMiddleware ignores dont_filter).
     """
     parts = (udfs.admission_parts_seed if is_seed else udfs.admission_parts)(F.col("url"))
-    df = (
-        links.withColumn("_ap", parts)
-        .select(
-            *links.columns,
-            F.col("_ap.url_canon").alias("url_canon"),
-            F.col("_ap.host").alias("host"),
-            F.col("_ap.url_hash").alias("url_hash"),
-        )
-        .withColumn("path", F.coalesce(F.expr("parse_url(url_canon, 'PATH')"), F.lit("")))
+    df = links.withColumn("_ap", parts).select(
+        *links.columns,
+        F.col("_ap.url_canon").alias("url_canon"),
+        F.col("_ap.host").alias("host"),
+        F.col("_ap.url_hash").alias("url_hash"),
     )
+    return filter_admission_parts(df, policy, is_seed)
+
+
+def filter_admission_parts(df: DataFrame, policy: CrawlPolicy, is_seed: bool = False) -> DataFrame:
+    """The JVM-side admission filters over precomputed kernel parts: input
+    needs ``url_canon``/``host`` (the ``admission_parts`` fields) and
+    ``depth``; output adds ``path``.  Offsite, query-string, deny-path and
+    depth checks, with the seed exemptions of ``apply_admission_filters``."""
+    df = df.withColumn("path", F.coalesce(F.expr("parse_url(url_canon, 'PATH')"), F.lit("")))
     if not is_seed:
         df = df.filter(_offsite_condition(policy))
         if not policy.allow_query_string:
@@ -101,6 +109,22 @@ def apply_robots_filter(df: DataFrame, robots: DataFrame | None) -> DataFrame:
         return df
     joined = df.join(F.broadcast(robots.select("host", "rules_text")), "host", "left")
     return joined.filter(udfs.robots_allowed(F.col("rules_text"), F.col("url_canon"))).drop("rules_text")
+
+
+def pass_candidates(passed: DataFrame, policy: CrawlPolicy) -> DataFrame:
+    """Admitted links of a round's fused pass (``udfs.crawl_pass``): one row
+    per link of each fetched page, ``pos`` its index in the page's link
+    list, kept when the JVM filters and the pass's robots verdict allow it.
+    Equals ``apply_robots_filter(apply_admission_filters(links))`` over the
+    posexploded raw links."""
+    links = passed.select(
+        F.col("url_canon").alias("source_url"),
+        (F.col("depth") + 1).alias("depth"),
+        F.col("seq").alias("parent_seq"),
+        F.posexplode("links").alias("pos", "link"),
+    )
+    parts = links.select("source_url", "depth", "parent_seq", "pos", "link.*")
+    return filter_admission_parts(parts, policy).filter(F.col("robots_ok")).drop("robots_ok")
 
 
 def dedup_first_in_batch(df: DataFrame, order_cols: list[str]) -> DataFrame:

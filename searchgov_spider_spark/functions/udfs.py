@@ -1,17 +1,30 @@
-"""Arrow-batched pandas UDFs wrapping the pure-Python kernels.
+"""Arrow-batched pandas UDFs and Arrow map passes wrapping the pure-Python kernels.
 
 This is the only place kernel code crosses into Spark: every UDF is a
 vectorized (Arrow batch) wrapper — no per-row Python UDFs anywhere in the
 engine (BASELINE.json input_hint requirement).  Because the UDF bodies call
 the exact kernel functions, distributed output is byte-identical to the
 single-node reference implementations per row.
+
+The crawl engine's round runs one Arrow map pass per partition instead of a
+chain of UDF nodes (``crawl_pass``): every Python node in a plan starts its
+own Python runner per task, and each runner start costs a fixed ~250 ms of
+worker CPU (``worker_util.setup_spark_files`` -> ``importlib.invalidate_caches``
+re-reads pyspark.zip through every zipimporter), far more than the kernels'
+per-page cost at round sizes.  The single-purpose UDFs below
+(``extract_doc_links``, ``doc_meta``, ``admission_parts``, ``robots_allowed``)
+call the same row kernels as the pass and are its differential oracle.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernels import htmlx, robotstxt, textproc, urlnorm
 
@@ -81,16 +94,17 @@ ADMISSION_STRUCT = T.StructType(
 )
 
 
+def _admission_row(u: str | None, strip: bool) -> tuple[str, str, int]:
+    if not u:
+        return "", "", 0
+    canon = urlnorm.canonicalize_url(urlnorm.strip_jsessionid(u) if strip else u)
+    return canon, urlnorm.url_host(canon), urlnorm.url_seen_hash(canon)
+
+
 def _admission_rows(urls, strip: bool):
-    rows = []
-    for u in urls:
-        if not u:
-            rows.append(("", "", 0))
-            continue
-        nojs = urlnorm.strip_jsessionid(u) if strip else u
-        canon = urlnorm.canonicalize_url(nojs)
-        rows.append((canon, urlnorm.url_host(canon), urlnorm.url_seen_hash(canon)))
-    return pd.DataFrame(rows, columns=["url_canon", "host", "url_hash"])
+    return pd.DataFrame(
+        [_admission_row(u, strip) for u in urls], columns=["url_canon", "host", "url_hash"]
+    )
 
 
 @pandas_udf(ADMISSION_STRUCT)
@@ -165,41 +179,39 @@ def doc_meta(urls: pd.Series, created_raw: pd.Series, changed_raw: pd.Series) ->
     previously 5 ArrowEvalPython column evaluations per round (and three
     urlsplit calls per row inside url_doc_parts alone).  Field semantics
     are identical to the individual UDFs (differential-tested)."""
+    return pd.DataFrame(
+        [_doc_meta_row(u, cr, ch) for u, cr, ch in zip(urls, created_raw, changed_raw)],
+        columns=DOC_META_STRUCT.fieldNames(),
+    )
+
+
+def _doc_meta_row(u: str | None, cr: str | None, ch: str | None) -> tuple:
     from ..kernels import dates
 
-    rows = []
-    for u, cr, ch in zip(urls, created_raw, changed_raw):
-        if not u:
-            rows.append(("", "", "", "", "", None, None))
-            continue
-        m = _HTTP_NETLOC_PATH_RE.match(u)
-        if m is not None:
-            netloc, path = m.group(1), m.group(2)
-            name = path[path.rfind("/") + 1 :]
-            if name.endswith("."):
-                name = name[:-1]
-            if "." in name:
-                stem, _, suffix = name.rpartition(".")
-            else:
-                stem, suffix = name, ""
-        else:  # non-http shapes: the kernels' ensure_http_prefix + urlsplit
-            stem, suffix, _name = urlnorm.url_base_extension(u)
-            path = urlnorm.url_path(u)
-            netloc = urlnorm.domain_name(u)
-        rows.append(
-            (
-                urlnorm.doc_id(u),
-                stem,
-                suffix,
-                path,
-                netloc,
-                dates.parse_dates_safely(cr) if cr else None,
-                dates.parse_dates_safely(ch) if ch else None,
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=["id", "basename", "extension", "url_path", "domain_name", "created_at", "changed"],
+    if not u:
+        return "", "", "", "", "", None, None
+    m = _HTTP_NETLOC_PATH_RE.match(u)
+    if m is not None:
+        netloc, path = m.group(1), m.group(2)
+        name = path[path.rfind("/") + 1 :]
+        if name.endswith("."):
+            name = name[:-1]
+        if "." in name:
+            stem, _, suffix = name.rpartition(".")
+        else:
+            stem, suffix = name, ""
+    else:  # non-http shapes: the kernels' ensure_http_prefix + urlsplit
+        stem, suffix, _name = urlnorm.url_base_extension(u)
+        path = urlnorm.url_path(u)
+        netloc = urlnorm.domain_name(u)
+    return (
+        urlnorm.doc_id(u),
+        stem,
+        suffix,
+        path,
+        netloc,
+        dates.parse_dates_safely(cr) if cr else None,
+        dates.parse_dates_safely(ch) if ch else None,
     )
 
 
@@ -248,6 +260,10 @@ def extract_links(html: pd.Series, base_url: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _extract_doc(body, url: str | None, lang_hint: str | None) -> htmlx.ExtractedDoc:
+    return htmlx.extract_html_doc(textproc.decode_bytes(bytes(body)), url or "", lang_hint or "")
+
+
 @pandas_udf(DOC_LINKS_STRUCT)
 def extract_doc_links(html: pd.Series, url: pd.Series, lang_hint: pd.Series) -> pd.DataFrame:
     rows = []
@@ -255,7 +271,7 @@ def extract_doc_links(html: pd.Series, url: pd.Series, lang_hint: pd.Series) -> 
         if body is None:
             rows.append(("",) * len(_DOC_FIELDS) + ([],))
             continue
-        doc = htmlx.extract_html_doc(textproc.decode_bytes(bytes(body)), u or "", lh or "")
+        doc = _extract_doc(body, u, lh)
         rows.append(tuple(getattr(doc, f) for f in _DOC_FIELDS) + (doc.links,))
     return pd.DataFrame(rows, columns=[*_DOC_FIELDS, "links"])
 
@@ -360,6 +376,101 @@ def robots_crawl_delay(rules_text: pd.Series) -> pd.Series:
             cache[rt] = robotstxt.robots_crawl_delay(rt)
         out.append(cache[rt])
     return pd.Series(out, dtype="float64")
+
+
+# --- the crawl round's fused pass ---------------------------------------------
+
+LINK_STRUCT = T.StructType(
+    list(ADMISSION_STRUCT.fields) + [T.StructField("robots_ok", T.BooleanType())]
+)
+
+CRAWL_PASS_SCHEMA = T.StructType(
+    [
+        T.StructField("url_canon", T.StringType()),
+        T.StructField("url_hash", T.LongType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("depth", T.IntegerType()),
+        T.StructField("seq", T.LongType()),
+        T.StructField("source_url", T.StringType()),
+        T.StructField("download_bytes", T.IntegerType()),
+        # extraction fields + the document metadata computed from them
+        T.StructField("doc", T.StructType(DOC_STRUCT.fields + DOC_META_STRUCT.fields)),
+        T.StructField("links", T.ArrayType(LINK_STRUCT)),
+    ]
+)
+_CRAWL_PASS_ARROW = to_arrow_schema(CRAWL_PASS_SCHEMA)
+_LINK_ARROW = _CRAWL_PASS_ARROW.field("links").type.value_type
+_PASS_CARRY = ("url_canon", "url_hash", "host", "depth", "seq", "source_url")
+
+
+def _robots_checker(robots: dict | None):
+    """``robots_allowed`` as a function of (host, url) under ``robots``
+    (host -> robots.txt body): a missing or empty body allows everything, and
+    each host's body is parsed once, on first use, for the life of the
+    returned function (one partition's pass)."""
+    robots = robots or {}
+    parsed: dict[str, robotstxt.RobotsRules] = {}
+
+    def allowed(host: str | None, url: str | None) -> bool:
+        rules_text = robots.get(host)
+        if not rules_text:
+            return True
+        rules = parsed.get(host)
+        if rules is None:
+            rules = parsed[host] = robotstxt.parse_robots(rules_text)
+        return rules.allowed(url)
+
+    return allowed
+
+
+def _link_row(href: str | None, robots_ok, strip: bool = True) -> tuple:
+    """``admission_parts`` (``admission_parts_seed`` when not ``strip``) +
+    ``robots_allowed`` of one href; ``robots_ok`` from ``_robots_checker``."""
+    canon, host, url_hash = _admission_row(href, strip)
+    return canon, host, url_hash, robots_ok(host, canon)
+
+
+def crawl_pass(fetched: Iterator[dict], robots: dict | None) -> Iterator[pa.RecordBatch]:
+    """The crawl round's Python work over one partition, in one pass.
+
+    ``fetched`` yields column dicts of fetched frontier rows (the frontier
+    columns plus ``html``/``lang``; null html is a fetch miss).  Per fetched
+    page: ``extract_doc_links``, ``doc_meta`` and, per raw link in list
+    order, ``admission_parts`` (jsessionid strip) with the robots verdict of
+    the link's host under ``robots`` (host -> robots.txt body).  Misses are
+    dropped, as the unfused chain's ``html IS NOT NULL`` filter drops them.
+    Yields ``CRAWL_PASS_SCHEMA`` batches.
+    """
+    robots_ok = _robots_checker(robots)
+    for cols in fetched:
+        out: dict[str, list] = {f: [] for f in CRAWL_PASS_SCHEMA.fieldNames()}
+        carry = [(out[c], cols[c]) for c in _PASS_CARRY]
+        for i, (body, url, lang) in enumerate(zip(cols["html"], cols["url_canon"], cols["lang"])):
+            if body is None:
+                continue
+            for dst, src in carry:
+                dst.append(src[i])
+            doc = _extract_doc(body, url, lang)
+            out["download_bytes"].append(len(body))
+            out["doc"].append(
+                tuple(getattr(doc, f) for f in _DOC_FIELDS)
+                + _doc_meta_row(url, doc.created_raw, doc.changed_raw)
+            )
+            out["links"].append([_link_row(h, robots_ok) for h in doc.links])
+        yield pa.RecordBatch.from_pydict(out, schema=_CRAWL_PASS_ARROW)
+
+
+def seed_parts(batches: Iterator[pa.RecordBatch], robots: dict | None) -> Iterator[pa.RecordBatch]:
+    """Append ``url_canon``/``host``/``url_hash``/``robots_ok`` of each
+    batch's ``url`` column (``admission_parts_seed``: no jsessionid
+    rewrite, plus ``robots_allowed``) in one Arrow pass."""
+    robots_ok = _robots_checker(robots)
+    for batch in batches:
+        urls = batch.column("url").to_pylist()
+        links = pa.array([_link_row(u, robots_ok, strip=False) for u in urls], _LINK_ARROW)
+        yield pa.RecordBatch.from_arrays(
+            batch.columns + links.flatten(), names=batch.schema.names + LINK_STRUCT.fieldNames()
+        )
 
 
 # --- text analysis -----------------------------------------------------------

@@ -98,6 +98,53 @@ class TestCrawlPlans:
         # ArrowEvalPython nodes (regression guard)
         assert plan.count("ArrowEvalPython") == 1
 
+    def test_round_has_one_python_pass(self, spark, tmp_path):
+        """A crawl round's Python work is ONE persisted Arrow map node
+        (fetch + extraction + doc meta + link parts + robots): the
+        documents-write and frontier-write plans hold no ArrowEvalPython
+        node and exactly one Python map node, under the cache both read.
+        The seed bootstrap is one Python map node over one partition."""
+        import re
+
+        from searchgov_spider_spark.crawl import CrawlEngine
+        from searchgov_spider_spark.crawl.fetch import GeneratorFetcher
+        from searchgov_spider_spark.crawl.reference_bfs import CrawlPolicy
+        from searchgov_spider_spark.synth import webgen
+
+        def python_maps(plan: str) -> set[tuple[str, str]]:
+            # distinct (function, expression id): a materialized cached plan
+            # prints its initial and final forms, one node twice
+            return set(re.findall(r"MapIn(?:Arrow|Pandas) (\w+)\(.*?\)#(\d+)", plan))
+
+        robots = spark.createDataFrame(webgen.robots_pandas(3))
+        engine = CrawlEngine(
+            spark, None, robots, CrawlPolicy(allowed_domains=["example.gov"], depth_limit=3),
+            str(tmp_path / "ckpt"), fetcher=GeneratorFetcher(60, 3, branch=3),
+        )
+        seeds = [webgen.page_url(h, 0) for h in range(3)]
+        boot = plan_of(engine._bootstrap(seeds), "simple")
+        assert "ArrowEvalPython" not in boot and "BatchEvalPython" not in boot
+        assert [name for name, _ in python_maps(boot)] == ["_parts"]
+        lines = boot.splitlines()
+        below = next(i for i, line in enumerate(lines) if "MapInArrow" in line) + 1
+        assert lines[below].strip().lstrip("+- ") == "Coalesce 1"
+
+        plans: dict[tuple[int, str], str] = {}
+        write_table = engine.store.write_table
+
+        def capture(df, rnd, name):
+            plans[(rnd, name)] = plan_of(df, "simple")
+            return write_table(df, rnd, name)
+
+        engine.store.write_table = capture
+        engine.run(seeds, max_rounds=2)
+        # round 1 reads its frontier from parquet: its plans hold only its own pass
+        for name in ("documents", "frontier"):
+            plan = plans[(1, name)]
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, name
+            assert [fn for fn, _ in python_maps(plan)] == ["_pass"], name
+            assert plan.index("InMemoryRelation") < plan.index("MapInArrow _pass"), name
+
     def test_politeness_selection_no_global_sort(self, spark):
         from searchgov_spider_spark.crawl import politeness
 
