@@ -103,8 +103,7 @@ class CrawlEngine:
         bloom_min_seen: int = 500_000,
         fetch_partitions: int | None = None,
         hot_host_threshold: int = 200_000,
-        bucketed_min_seen: int = 4_000_000,
-        auto_compact_deltas: int | None = 64,
+        auto_compact_deltas: int = 64,
     ):
         self.spark = spark
         self.policy = policy
@@ -115,26 +114,15 @@ class CrawlEngine:
         self.bloom_bits = bloom_bits
         self.bloom_min_seen = bloom_min_seen
         self._bloom_built = False
-        self._seen_bucketed = None  # set per run() from the checkpoint layout
-        # Crossover for consuming a compacted seen set via the bucketed scan
-        # vs. as plain parquet: below ~4M rows the plain side fits Spark's
-        # broadcast/cheap-shuffle regime (autoBroadcastJoinThreshold=64m) and
-        # the bucketed SMJ's per-round candidate sort costs more than the
-        # shuffle it avoids; above it the plain path re-shuffles the whole
-        # seen set every round while the bucketed scan is exchange-free.
-        # Measured on this box (bench.py --phase seenjoin, local[8], 100k
-        # candidates): 2M seen -> bucketed 2.2 s vs plain 1.9 s; 4M -> 0.60
-        # vs 0.92; 8M -> 0.72 vs 1.11.  At the 10^10 design point the
-        # bucketed path is always on; the threshold only protects small
-        # crawls from paying SMJ overhead they don't need.
-        self.bucketed_min_seen = bucketed_min_seen
+        # the compacted seen set's bucketed scan, None before any compaction
+        # (set per run() from the checkpoint layout)
+        self._seen_bucketed = None
         # Auto-compaction (T2): once this many seen-delta directories have
         # accumulated since the last compaction, the engine compacts them
         # into the bucketed seed table between rounds (the maintenance
         # window).  Bounds small-file growth over unbounded crawls — at one
         # delta dir per round a month-long crawl would otherwise union
-        # thousands of parquet paths into every dedup anti-join.  None
-        # disables (compaction stays manual, as before round 5).
+        # thousands of parquet paths into every dedup anti-join.
         self.auto_compact_deltas = auto_compact_deltas
         self.compactions: list[dict] = []
         self.hot_host_threshold = hot_host_threshold
@@ -304,23 +292,6 @@ class CrawlEngine:
         # both read it from cache
         passed = self.round_pass(batch).persist()
         documents = documents_from_pass(passed)
-        if frontier_hint == 0:
-            # empty frontier (resume edge): nothing to fetch this round —
-            # checkpoint an unchanged frontier so the round commits.
-            # (Selection is the identity on a non-empty frontier, so
-            # n_selected == 0 iff the frontier is empty — gate on the exact
-            # hint BEFORE launching any job.)
-            remaining = frontier.count()
-            passed.unpersist()
-            metrics = {
-                "selected": 0, "fetched": 0, "missed": 0, "admitted": 0,
-                "remaining": remaining, "next_seq": next_seq,
-                "round_wall_s": round(time.monotonic() - t0, 3),
-                "timings": timings, "stop": remaining == 0,
-            }
-            self.store.write_table(frontier, rnd, "frontier")
-            self.store.write_seen_delta(seen.limit(0), rnd)
-            return metrics, seen
 
         # documents write runs CONCURRENTLY with the admission/frontier job
         # (separate driver thread; Spark schedules both jobs at once).  Both
@@ -399,7 +370,7 @@ class CrawlEngine:
         # runs before round n's admits are folded in.
         bloom_err: list[BaseException] = []
         bloom_thread: threading.Thread | None = None
-        if self._bloom_built and frontier_hint > 0:
+        if self._bloom_built:
             bloom_src = seq_cache if seq_cache is not None else new_admits
 
             def _merge_bloom() -> None:
@@ -453,8 +424,10 @@ class CrawlEngine:
         n_selected = frontier_hint if not budget_binds else selected.count()
         mark("frontier_write")
 
-        seen_from_frontier = not budget_binds
-        if not seen_from_frontier:
+        # a binding budget defers part of the frontier, so the round's new
+        # admits need their own seen delta; otherwise the frontier dir just
+        # written is exactly the new admits and doubles as the delta
+        if budget_binds:
             self.store.write_seen_delta(new_admits.select(*SEEN_COLS), rnd)
         if bloom_thread is not None and bloom_err:
             # (already joined in the write's finally; usually ~0 residual —
@@ -464,12 +437,12 @@ class CrawlEngine:
 
         # rebuild `seen` from the durable deltas: a single flat multi-path
         # parquet relation — the lineage must NOT chain through this round's
-        # anti-join or the logical plan doubles every round.  In the fast path
-        # the frontier dir IS this round's delta but the manifest is not yet
-        # committed, so it must be included explicitly — otherwise the seen
-        # set lags one round and sibling-discovered URLs get re-admitted.
+        # anti-join or the logical plan doubles every round.  The seen rule
+        # reads directories, so this round's delta is in it before the
+        # commit — otherwise the seen set would lag one round and
+        # sibling-discovered URLs get re-admitted.
         seen.unpersist()
-        seen_next = self._seen_view(rnd, include_frontier_rounds=(rnd,) if seen_from_frontier else ())
+        seen_next = self._seen_view(rnd)
         if budget_binds:
             selected.unpersist()
         passed.unpersist()
@@ -486,7 +459,6 @@ class CrawlEngine:
             "admitted": n_admitted,
             "remaining": remaining,
             "next_seq": next_seq + n_admitted,
-            "seen_from_frontier": seen_from_frontier,
             "round_wall_s": round(time.monotonic() - t0, 3),
             "timings": timings,
             "stop": remaining == 0,
@@ -510,7 +482,7 @@ class CrawlEngine:
                 return run
             frontier = self.store.read_table(spark, last, "frontier")
             next_seq = manifest["next_seq"]
-            self._choose_seen_layout()
+            self._seen_bucketed = self.store.read_seen_bucketed(spark)
             seen = self._seen_view(last)
             start_round = last + 1
             self.store.drop_uncommitted(start_round)
@@ -551,65 +523,35 @@ class CrawlEngine:
         """Maintenance window between rounds: compact accumulated seen
         deltas into the bucketed seed table once ``auto_compact_deltas``
         directories are pending, then re-derive the round-loop seen view
-        (bucketed scan vs plain, per the ``bucketed_min_seen`` crossover).
+        (the bucketed scan plus any later deltas).
 
         Runs strictly AFTER ``commit_round`` — compaction only merges
-        committed deltas, and a crash mid-compaction leaves a readable
-        (possibly duplicated) seen set that resume tolerates
-        (``compact_seen``'s atomic-swap ordering).  The Bloom filter is
-        membership-based, so it stays valid across the rewrite.
+        committed deltas, and a crash mid-compaction leaves a readable seen
+        set that resume tolerates (``compact_seen``'s atomic-swap
+        ordering).  The Bloom filter is membership-based, so it stays valid
+        across the rewrite.
         """
-        if self.auto_compact_deltas is None:
-            return seen
         pending = len(self.store._seen_paths(rnd, include_seed=False))
         if pending < self.auto_compact_deltas:
             return seen
         t0 = time.monotonic()
-        removed = self.store.compact_seen(self.spark, rnd)
-        info = self._choose_seen_layout()
+        merged = self.store.compact_seen(self.spark, rnd)
+        self._seen_bucketed = self.store.read_seen_bucketed(self.spark)
         # the old persisted view references delta files compaction just
         # removed — rebuild it from the new layout before anything re-reads
         seen.unpersist()
         new_seen = self._seen_view(rnd)
         self.compactions.append(
-            {
-                "round": rnd,
-                "deltas_merged": removed,
-                "rows": info.get("rows") if info else None,
-                "bucketed_in_use": self._seen_bucketed is not None,
-                "wall_s": round(time.monotonic() - t0, 3),
-            }
+            {"round": rnd, "deltas_merged": merged, "wall_s": round(time.monotonic() - t0, 3)}
         )
         return new_seen
 
     # -- seen-set view ------------------------------------------------------------
-    def _choose_seen_layout(self) -> dict | None:
-        """Set ``self._seen_bucketed`` from the checkpoint layout; returns
-        the compacted set's ``_BUCKETS`` info (None before any compaction).
-
-        A compacted seen set is read as a BUCKETED scan the anti-join
-        consumes exchange-free, with only post-compaction deltas unioned
-        beside it.  Size-gated: below ``bucketed_min_seen`` rows the
-        compacted files are read as plain parquet instead (read_seen
-        includes the seed dir), letting the optimizer broadcast/hash-join
-        the small seen side — see the crossover note in ``__init__``.
-        """
-        info = self.store.bucketed_seen_info()
-        use_bucketed = info is not None and (
-            info.get("rows", self.bucketed_min_seen) >= self.bucketed_min_seen
-        )
-        self._seen_bucketed = self.store.read_seen_bucketed(self.spark) if use_bucketed else None
-        return info
-
-    def _seen_view(self, rnd: int, include_frontier_rounds: tuple[int, ...] = ()) -> DataFrame:
+    def _seen_view(self, rnd: int) -> DataFrame:
         """The persisted seen set through round ``rnd`` that dedup unions
         with ``self._seen_bucketed``: every seen delta the bucketed scan
         does not already cover (empty when compaction left none)."""
-        deltas = self.store.read_seen(
-            self.spark, rnd,
-            include_frontier_rounds=include_frontier_rounds,
-            exclude_compacted=self._seen_bucketed is not None,
-        )
+        deltas = self.store.read_seen(self.spark, rnd, exclude_compacted=self._seen_bucketed is not None)
         return (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()
 
 

@@ -47,16 +47,6 @@ def url_host(urls: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.StringType())
-def url_path(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urlnorm.url_path(u) if u else "")
-
-
-@pandas_udf(T.StringType())
-def url_query(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urlnorm.url_query(u) if u else "")
-
-
-@pandas_udf(T.StringType())
 def url_extension(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: urlnorm.url_extension(u) if u else "")
 
@@ -64,11 +54,6 @@ def url_extension(urls: pd.Series) -> pd.Series:
 @pandas_udf(T.LongType())
 def url_seen_hash(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: urlnorm.url_seen_hash(u) if u else 0).astype("int64")
-
-
-@pandas_udf(T.StringType())
-def doc_id(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urlnorm.doc_id(u) if u else "")
 
 
 @pandas_udf(T.StringType())
@@ -130,31 +115,6 @@ admission_parts = admission_parts.asNondeterministic()
 admission_parts_seed = admission_parts_seed.asNondeterministic()
 
 
-URL_PARTS_STRUCT = T.StructType(
-    [
-        T.StructField("basename", T.StringType()),
-        T.StructField("extension", T.StringType()),
-        T.StructField("url_path", T.StringType()),
-        T.StructField("domain_name", T.StringType()),
-    ]
-)
-
-
-@pandas_udf(URL_PARTS_STRUCT)
-def url_doc_parts(urls: pd.Series) -> pd.DataFrame:
-    """Document-schema URL fields in one Arrow round (indexing/helpers.py
-    get_base_extension/get_url_path/get_domain_name; extension '' -> None
-    happens at the caller per transform.py:96)."""
-    rows = []
-    for u in urls:
-        if not u:
-            rows.append(("", "", "", ""))
-            continue
-        stem, suffix, _name = urlnorm.url_base_extension(u)
-        rows.append((stem, suffix, urlnorm.url_path(u), urlnorm.domain_name(u)))
-    return pd.DataFrame(rows, columns=["basename", "extension", "url_path", "domain_name"])
-
-
 DOC_META_STRUCT = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -174,11 +134,12 @@ _HTTP_NETLOC_PATH_RE = __import__("re").compile(r"^https?://([^/?#]*)([^?#]*)")
 
 @pandas_udf(DOC_META_STRUCT)
 def doc_meta(urls: pd.Series, created_raw: pd.Series, changed_raw: pd.Series) -> pd.DataFrame:
-    """Fused per-document metadata kernel for the crawl round loop (r06):
-    doc_id + url_doc_parts + both parse_dates in ONE Arrow round trip —
-    previously 5 ArrowEvalPython column evaluations per round (and three
-    urlsplit calls per row inside url_doc_parts alone).  Field semantics
-    are identical to the individual UDFs (differential-tested)."""
+    """Per-document metadata in ONE Arrow round trip: the doc id, the
+    document-schema URL fields (indexing/helpers.py get_base_extension /
+    get_url_path / get_domain_name; extension '' -> None happens at the
+    caller per transform.py:96) and both dates parsed by
+    ``dates.parse_dates_safely``.  The round pass calls the same row
+    function per page."""
     return pd.DataFrame(
         [_doc_meta_row(u, cr, ch) for u, cr, ch in zip(urls, created_raw, changed_raw)],
         columns=DOC_META_STRUCT.fieldNames(),
@@ -215,15 +176,6 @@ def _doc_meta_row(u: str | None, cr: str | None, ch: str | None) -> tuple:
     )
 
 
-@pandas_udf(T.StringType())
-def parse_dates(raw: pd.Series) -> pd.Series:
-    """dateutil fuzzy parse -> ISO string, unparsable -> null (X7,
-    indexing/helpers.py:36-65 parse_dates_safely)."""
-    from ..kernels import dates
-
-    return pd.Series([dates.parse_dates_safely(v) if v else None for v in raw], dtype=object)
-
-
 # --- extraction --------------------------------------------------------------
 
 DOC_STRUCT = T.StructType(
@@ -249,17 +201,6 @@ DOC_LINKS_STRUCT = T.StructType(
 )
 
 
-@pandas_udf(T.ArrayType(T.StringType()))
-def extract_links(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    out = []
-    for body, url in zip(html, base_url):
-        if body is None:
-            out.append([])
-            continue
-        out.append(htmlx.extract_links(textproc.decode_bytes(bytes(body)), url or ""))
-    return pd.Series(out)
-
-
 def _extract_doc(body, url: str | None, lang_hint: str | None) -> htmlx.ExtractedDoc:
     return htmlx.extract_html_doc(textproc.decode_bytes(bytes(body)), url or "", lang_hint or "")
 
@@ -276,12 +217,6 @@ def extract_doc_links(html: pd.Series, url: pd.Series, lang_hint: pd.Series) -> 
     return pd.DataFrame(rows, columns=[*_DOC_FIELDS, "links"])
 
 
-@pandas_udf(T.StringType())
-def extract_text(html: pd.Series, url: pd.Series) -> pd.Series:
-    out = []
-    for body, u in zip(html, url):
-        out.append("" if body is None else htmlx.extract_text(bytes(body), u or ""))
-    return pd.Series(out)
 
 
 # --- PDF (X4/X15; minimal-subset kernel, see kernels/pdfx.py) -----------------
@@ -494,9 +429,3 @@ def token_count(text: pd.Series) -> pd.Series:
 @pandas_udf(T.LongType())
 def document_fingerprint(text: pd.Series) -> pd.Series:
     return text.map(lambda t: textproc.document_fingerprint(t) if t else 0).astype("int64")
-
-
-@pandas_udf(T.StringType())
-def sanitize_text(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: textproc.sanitize_text(t) if t else "")
-

@@ -24,10 +24,9 @@ logger = logging.getLogger(__name__)
 
 # Corpus-size crossover for the SRP exact-verify prune (see
 # embedding_near_dup_pairs): below this the prune's fixed jobs cost more
-# than the raw-vector verify joins they avoid; far above it (the 10^10
-# design point) the prune is mandatory.  A data-size gate, not a
+# than the raw-vector verify joins they avoid.  A data-size gate, not a
 # core-count constant — the same pattern as the crawl engine's
-# bloom_min_seen / bucketed_min_seen crossovers.
+# bloom_min_seen crossover.
 PRUNE_VERIFY_MIN_ROWS = 1_000_000
 
 
@@ -242,16 +241,19 @@ def embedding_near_dup_pairs(
         .distinct()
     )
     # Verify-side prune is SIZE-GATED (same measured-crossover pattern as
-    # the engine's bloom_min_seen / bucketed_min_seen): semi-pruning the
-    # corpus to candidate ids keeps the verify joins' shuffled bytes
-    # proportional to the CANDIDATE count — mandatory at the 10^10-row
-    # design point — but unlike the minhash analog (which avoids
-    # recomputing corpus-wide SHINGLES) the pruned column here is an
-    # already-materialized vector, so below the crossover the prune's fixed
-    # cost (two eager checkpoint jobs + an ids-distinct job + a broadcast)
-    # exceeds everything it saves (measured at sf0.1: q48 3.4-3.6 s pruned
-    # vs 2.3-2.5 s direct).  n_rows is known whenever params were derived;
-    # with explicit bits/bands (no count) the scale assumption applies.
+    # the engine's bloom_min_seen): semi-pruning the corpus to candidate
+    # ids keeps the vectors the verify joins shuffle proportional to the
+    # candidates that have a pair rather than to the corpus.  Unlike the
+    # minhash analog (which avoids recomputing corpus-wide SHINGLES) the
+    # pruned column here is an already-materialized vector, so below the
+    # crossover the prune's fixed cost (two eager checkpoint jobs + an
+    # ids-distinct job) exceeds everything it saves (measured at sf0.1: q48
+    # 3.4-3.6 s pruned vs 2.3-2.5 s direct).  The semi-join carries no
+    # broadcast hint: at ~8 candidates per row (derive_srp_params) the id
+    # set of a 10^10-row corpus is far past any broadcast ceiling, and AQE
+    # still broadcasts it on its own when it is small.  n_rows is known
+    # whenever params were derived; with explicit bits/bands (no count) the
+    # scale assumption applies.
     if n_rows is None or n_rows >= PRUNE_VERIFY_MIN_ROWS:
         # EAGER checkpoints: cand feeds the id-prune and the verify join,
         # vecs feeds both sides of the pair join — lazy would let two
@@ -263,7 +265,7 @@ def embedding_near_dup_pairs(
             .distinct()
         )
         vecs = (
-            embeddings.join(F.broadcast(ids), id_col, "left_semi")
+            embeddings.join(ids, id_col, "left_semi")
             .select(F.col(id_col), F.col(vec_col))
             .localCheckpoint(eager=True)
         )

@@ -14,6 +14,14 @@ Layout:
     <root>/round_00000/documents/       parquet (this round's extracted docs)
     <root>/round_00000/manifest.json    commit marker {round, next_seq, counts}
     <root>/seen/round_00000/            parquet delta of newly-seen url hashes
+                                        (only rounds whose budget bound)
+    <root>/seen/seed/                   bootstrap seeds, later the compacted
+                                        set with its _BUCKETS marker
+
+The directories alone define the seen set (``_seen_paths``): the seed dir,
+then for every round after the compaction watermark (``upto_round`` in the
+``_BUCKETS`` marker, -1 before any compaction) ``seen/round_N`` if it
+exists, else ``round_N/frontier``.
 """
 
 from __future__ import annotations
@@ -176,49 +184,47 @@ class CheckpointStore:
 
     SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
 
-    def _seen_paths(
-        self,
-        upto_round: int,
-        include_frontier_rounds: tuple[int, ...] = (),
-        include_seed: bool = True,
-    ) -> list[str]:
-        paths = (
-            [self.seed_seen_dir()] if include_seed and os.path.isdir(self.seed_seen_dir()) else []
-        )
-        for r in range(upto_round + 1):
-            if os.path.isdir(self.seen_delta_dir(r)):
-                paths.append(self.seen_delta_dir(r))
-            elif r in include_frontier_rounds or (
-                os.path.exists(self.manifest_path(r)) and self.read_manifest(r).get("seen_from_frontier")
-            ):
-                paths.append(os.path.join(self.round_dir(r), "frontier"))
+    def _seen_paths(self, upto_round: int, include_seed: bool = True) -> list[str]:
+        """The directories holding the seen set through ``upto_round``: the
+        seed dir (bootstrap seeds, or the compacted set once ``compact_seen``
+        has run), then for each round after the compaction watermark its
+        seen delta if it has one, else its frontier dir.  Existence alone
+        decides, with no manifest read: a round's frontier equals its new
+        admits exactly when the round writes no separate delta."""
+        info = self.bucketed_seen_info()
+        start = info["upto_round"] + 1 if info is not None else 0
+        paths = [self.seed_seen_dir()] if include_seed and os.path.isdir(self.seed_seen_dir()) else []
+        for r in range(start, upto_round + 1):
+            for p in (self.seen_delta_dir(r), os.path.join(self.round_dir(r), "frontier")):
+                if os.path.isdir(p):
+                    paths.append(p)
+                    break
         return paths
 
     def read_seen(
         self,
         spark: SparkSession,
         upto_round: int,
-        include_frontier_rounds: tuple[int, ...] = (),
         exclude_compacted: bool = False,
     ) -> DataFrame | None:
-        """Union of the seed delta and all seen-deltas up to ``upto_round``.
+        """The seen set through ``upto_round``, read from ``_seen_paths``.
 
-        Rounds where the next frontier exactly equals the newly-admitted set
-        (politeness fast path) skip the separate seen-delta write; their
-        frontier directory doubles as the delta (manifest flag
-        ``seen_from_frontier``).  ``include_frontier_rounds`` forces specific
-        rounds' frontier dirs in regardless of commit state — the engine uses
-        it for the round IN PROGRESS, whose manifest is not yet written (the
-        flag-based fallback alone would lag the seen set one round behind and
-        re-admit sibling-discovered URLs).
+        A round whose budget did not bind (politeness fast path) writes no
+        seen delta: its next frontier is exactly its new admits, so its
+        frontier dir doubles as the delta.  The rule reads directories, not
+        manifests, so it also covers the round in progress — the engine
+        rebuilds its seen view after the round's frontier write and before
+        its commit.  Callers pass the last committed round (or the round in
+        progress); a crashed round's leftover dirs sit above it and are
+        never read.
 
         ``exclude_compacted=True`` skips the seed dir — the engine uses it
-        when it holds the compacted set separately as a BUCKETED table
+        once the compacted set is read separately as a BUCKETED table
         (``read_seen_bucketed``), so only the post-compaction deltas union
         here.  The bucketed files are plain parquet, so the default
         (include) path reads the full set regardless of layout.
         """
-        paths = self._seen_paths(upto_round, include_frontier_rounds, include_seed=not exclude_compacted)
+        paths = self._seen_paths(upto_round, include_seed=not exclude_compacted)
         if not paths:
             return None
         return spark.read.parquet(*paths).select(*self.SEEN_COLS)
@@ -233,11 +239,10 @@ class CheckpointStore:
         return "seen_bucketed_" + hashlib.md5(os.path.abspath(self.root).encode()).hexdigest()[:10]
 
     def bucketed_seen_info(self) -> dict | None:
-        """The ``_BUCKETS`` marker of the compacted seen set (buckets,
-        bucket_cols, rows) or None before the first compaction.  ``rows``
-        lets the engine apply its size-based crossover WITHOUT scanning the
-        table (markers written before the field existed omit it and are
-        treated as large)."""
+        """The ``_BUCKETS`` marker of the compacted seen set or None before
+        the first compaction: ``buckets`` and ``bucket_cols`` of the layout,
+        and ``upto_round``, the compaction watermark — the seed dir covers
+        every round up to it, so ``_seen_paths`` reads only later rounds."""
         marker = os.path.join(self.seed_seen_dir(), self.BUCKET_MARKER)
         if not os.path.exists(marker):
             return None
@@ -282,25 +287,28 @@ class CheckpointStore:
 
     # -- maintenance ------------------------------------------------------------
     def compact_seen(self, spark: SparkSession, upto_round: int, buckets: int = 32) -> int:
-        """Merge the seed delta + all per-round seen deltas up to
-        ``upto_round`` into one hash-BUCKETED parquet table, replacing the
-        seed dir and removing the merged delta dirs.
+        """Merge the seen set through ``upto_round`` (``_seen_paths``) into
+        one hash-BUCKETED parquet table that replaces the seed dir, and
+        remove the merged seen-delta dirs.  A frontier dir that served as a
+        delta stays: it is still its round's frontier.
 
         Bounds file-count growth over long crawls (SURVEY.md §2.7 T2 /
         DESIGN.md known gap) AND writes the result in Spark's bucketed-file
         layout (bucket id per file name, sorted within buckets) plus a
         ``_BUCKETS`` marker, so subsequent rounds' dedup anti-joins read the
         seen side pre-partitioned with no Exchange (``read_seen_bucketed``).
-        Safe ordering: the compacted set is written to a temp dir, atomically
-        swapped in as the seed dir, and only then are the old delta dirs
-        removed — a crash at any point leaves a readable (possibly
-        duplicated) seen set, and dedup semantics tolerate duplicate seen
-        rows.  The bucketed files are plain parquet, so every non-bucketed
-        reader (``read_seen``, resume equivalence) is unaffected.  Returns
-        the number of delta dirs removed.
+        The marker records ``upto_round`` as the watermark below which
+        ``_seen_paths`` reads no round dir.  Safe ordering: the compacted
+        set is written to a temp dir, atomically swapped in as the seed dir,
+        and only then are the old delta dirs removed — from the swap on the
+        watermark hides them, so a crash at any later point leaves the same
+        seen set.  The bucketed files are plain parquet, so every
+        non-bucketed reader (``read_seen``, resume equivalence) is
+        unaffected.  Returns the number of delta dirs merged.
         """
         from pyspark.sql import functions as F
 
+        merged = self._seen_paths(upto_round, include_seed=False)
         seen = self.read_seen(spark, upto_round)
         if seen is None:
             return 0
@@ -321,50 +329,38 @@ class CheckpointStore:
             .saveAsTable(tmp_tbl)
         )
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")  # external table: files remain
-        # footer-only count (parquet row-group metadata): recorded in the
-        # marker so the engine's bucketed-vs-plain crossover check never has
-        # to scan the table
-        rows = spark.read.parquet(tmp).count()
         with open(os.path.join(tmp, self.BUCKET_MARKER), "w") as f:
-            json.dump({"buckets": buckets, "bucket_cols": ["url_hash", "url_canon"], "rows": rows}, f)
+            json.dump({"buckets": buckets, "bucket_cols": ["url_hash", "url_canon"], "upto_round": upto_round}, f)
         old_seed = self.seed_seen_dir() + ".old"
         shutil.rmtree(old_seed, ignore_errors=True)
         if os.path.isdir(self.seed_seen_dir()):
             os.replace(self.seed_seen_dir(), old_seed)
         os.replace(tmp, self.seed_seen_dir())
         shutil.rmtree(old_seed, ignore_errors=True)
-        removed = 0
-        for r in range(upto_round + 1):
-            if os.path.isdir(self.seen_delta_dir(r)):
-                shutil.rmtree(self.seen_delta_dir(r), ignore_errors=True)
-                removed += 1
-            # rounds whose frontier dir doubled as the delta: clear the flag
-            if os.path.exists(self.manifest_path(r)):
-                manifest = self.read_manifest(r)
-                if manifest.get("seen_from_frontier"):
-                    manifest["seen_from_frontier"] = False
-                    self.commit_round(r, {k: v for k, v in manifest.items() if k != "round"})
-                    removed += 1
-        return removed
+        for p in merged:
+            if os.path.basename(p) != "frontier":
+                shutil.rmtree(p, ignore_errors=True)
+        return len(merged)
 
     def expire_rounds(self, keep_last: int) -> int:
         """Orphan-state GC (T2, reference SCHEDULER_KEY_ORPHAN_AGE):
         drop the frontier payloads of rounds older than the last
-        ``keep_last`` committed rounds.  Documents and manifests are kept
-        (they are the output / audit trail); resume only ever needs the last
-        committed round, so ``keep_last`` is clamped to >= 1 — the last
-        committed round's frontier is always retained.  Returns the number of
-        directories removed.
+        ``keep_last`` committed rounds, except a frontier dir that still
+        holds part of the seen set (``_seen_paths``).  Documents and
+        manifests are kept (they are the output / audit trail); resume only
+        ever needs the last committed round, so ``keep_last`` is clamped to
+        >= 1 — the last committed round's frontier is always retained.
+        Returns the number of directories removed.
         """
         keep_last = max(1, keep_last)
         rounds = self.committed_rounds()
+        if not rounds:
+            return 0
+        live = set(self._seen_paths(rounds[-1], include_seed=False))
         removed = 0
         for r in rounds[:-keep_last]:
-            manifest = self.read_manifest(r)
-            if manifest.get("seen_from_frontier"):
-                continue  # frontier dir doubles as a live seen delta
             p = os.path.join(self.round_dir(r), "frontier")
-            if os.path.isdir(p):
+            if os.path.isdir(p) and p not in live:
                 shutil.rmtree(p, ignore_errors=True)
                 removed += 1
         return removed

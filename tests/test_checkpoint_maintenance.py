@@ -10,14 +10,25 @@ from searchgov_spider_spark.synth.spark_gen import PAGES_SCHEMA
 N_PAGES, N_HOSTS = 400, 5
 
 
-def _run_partial(spark, tmp_path, max_rounds):
+def _run_partial(spark, tmp_path, max_rounds, **engine_kw):
     pages = spark.createDataFrame(webgen.pages_pandas(N_PAGES, N_HOSTS), schema=PAGES_SCHEMA)
     robots = spark.createDataFrame(webgen.robots_pandas(N_HOSTS))
     policy = CrawlPolicy(allowed_domains=[webgen.host_name(0)], depth_limit=20)
     ckpt = str(tmp_path / "ckpt")
-    engine = CrawlEngine(spark, pages, robots, policy, ckpt, bloom_shards=4, bloom_bits=1 << 14)
+    engine = CrawlEngine(spark, pages, robots, policy, ckpt, bloom_shards=4, bloom_bits=1 << 14, **engine_kw)
     run = engine.run([webgen.page_url(0, 0)], max_rounds=max_rounds)
     return engine, run, policy
+
+
+def _oracle(policy):
+    from searchgov_spider_spark.kernels.urlnorm import canonicalize_url
+
+    pages_dict = {
+        canonicalize_url(webgen.page_url(h, k)): webgen.build_page(h, k, p, N_HOSTS)["html"]
+        for h, k, p in webgen.page_index(N_PAGES, N_HOSTS)
+    }
+    robots_dict = {webgen.host_name(h): webgen.robots_text(h, N_HOSTS) for h in range(N_HOSTS)}
+    return reference_crawl(pages_dict, robots_dict, [webgen.page_url(0, 0)], policy)
 
 
 def test_compact_then_resume_matches_oracle(spark, tmp_path):
@@ -32,15 +43,9 @@ def test_compact_then_resume_matches_oracle(spark, tmp_path):
     assert after == before  # compaction preserves the seen set exactly
 
     resumed = engine.run([webgen.page_url(0, 0)], max_rounds=64, resume=True)
-    pages_dict = {
-        webgen.page_url(h, k): webgen.build_page(h, k, p, N_HOSTS)["html"]
-        for h, k, p in webgen.page_index(N_PAGES, N_HOSTS)
-    }
-    from searchgov_spider_spark.kernels.urlnorm import canonicalize_url
-
-    pages_dict = {canonicalize_url(u): b for u, b in pages_dict.items()}
-    robots_dict = {webgen.host_name(h): webgen.robots_text(h, N_HOSTS) for h in range(N_HOSTS)}
-    oracle = reference_crawl(pages_dict, robots_dict, [webgen.page_url(0, 0)], policy)
+    # a compacted seen set is always consumed as the bucketed scan
+    assert engine._seen_bucketed is not None
+    oracle = _oracle(policy)
     seen = resumed.seen(spark)
     assert {r["url_canon"] for r in seen.collect()} == set(oracle.depth)
     assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
@@ -109,42 +114,6 @@ def test_compacted_seen_bucketed_anti_join_no_seen_exchange(spark, tmp_path):
     assert {r["url_canon"] for r in again.collect()} == plain_urls
 
 
-def test_bucketed_crossover_rule(spark, tmp_path):
-    """Size-based bucketed-vs-plain choice (bench.py --phase seenjoin):
-    a compacted seen set below ``bucketed_min_seen`` is consumed as plain
-    parquet (optimizer broadcasts/hash-joins the small side), above it via
-    the exchange-free bucketed scan — and the visited set is identical
-    either way.  The marker's row count is what the rule consumes, so no
-    scan happens at decision time."""
-    import shutil
-
-    engine, partial, policy = _run_partial(spark, tmp_path, max_rounds=3)
-    store = engine.store
-    last = store.last_committed()
-    store.compact_seen(spark, last)
-    info = store.bucketed_seen_info()
-    assert info["rows"] == store.read_seen(spark, last).count()
-    # identical checkpoint for the second engine (resume mutates state)
-    ckpt2 = str(tmp_path / "ckpt2")
-    shutil.copytree(str(tmp_path / "ckpt"), ckpt2)
-
-    # default threshold: this toy seen set sits far below the crossover
-    resumed = engine.run([webgen.page_url(0, 0)], max_rounds=64, resume=True)
-    assert engine._seen_bucketed is None, "below-crossover compacted set must use the plain path"
-    plain_urls = [r["url_canon"] for r in resumed.seen(spark).orderBy("seq").collect()]
-
-    pages = spark.createDataFrame(webgen.pages_pandas(N_PAGES, N_HOSTS), schema=PAGES_SCHEMA)
-    robots = spark.createDataFrame(webgen.robots_pandas(N_HOSTS))
-    forced = CrawlEngine(
-        spark, pages, robots, policy, ckpt2,
-        bloom_shards=4, bloom_bits=1 << 14, bucketed_min_seen=0,
-    )
-    resumed2 = forced.run([webgen.page_url(0, 0)], max_rounds=64, resume=True)
-    assert forced._seen_bucketed is not None, "threshold 0 must force the bucketed scan"
-    bucketed_urls = [r["url_canon"] for r in resumed2.seen(spark).orderBy("seq").collect()]
-    assert bucketed_urls == plain_urls
-
-
 def test_auto_compaction_fires_mid_crawl_and_preserves_visited_set(spark, tmp_path):
     """T2 auto-compaction policy: with the delta threshold lowered, the
     engine compacts accumulated seen deltas in the maintenance window
@@ -161,19 +130,16 @@ def test_auto_compaction_fires_mid_crawl_and_preserves_visited_set(spark, tmp_pa
     assert engine.compactions, "threshold 3 must trigger at least one compaction"
     assert engine.compactions[0]["round"] < run.rounds - 1, "must fire MID-crawl, not at the end"
     assert all(c["deltas_merged"] > 0 for c in engine.compactions)
+    assert engine._seen_bucketed is not None
 
-    pages_dict = {
-        webgen.page_url(h, k): webgen.build_page(h, k, p, N_HOSTS)["html"]
-        for h, k, p in webgen.page_index(N_PAGES, N_HOSTS)
-    }
-    from searchgov_spider_spark.kernels.urlnorm import canonicalize_url
-
-    pages_dict = {canonicalize_url(u): b for u, b in pages_dict.items()}
-    robots_dict = {webgen.host_name(h): webgen.robots_text(h, N_HOSTS) for h in range(N_HOSTS)}
-    oracle = reference_crawl(pages_dict, robots_dict, [webgen.page_url(0, 0)], policy)
+    oracle = _oracle(policy)
     seen = run.seen(spark)
     assert {r["url_canon"] for r in seen.collect()} == set(oracle.depth)
     assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
+    docs = run.documents(spark).select("url", "content")
+    assert {r["url"] for r in docs.collect()} == oracle.fetched
+    texts = pages.selectExpr("url", "text as expected_text")
+    assert docs.join(texts, "url").filter("content != expected_text").count() == 0
 
 
 def test_expire_rounds_keeps_resume_state(spark, tmp_path):
@@ -191,6 +157,26 @@ def test_expire_rounds_keeps_resume_state(spark, tmp_path):
     docs = store.read_documents(spark)
     assert docs.count() > 0
     assert store.committed_rounds()  # manifests intact
+
+
+def test_expire_rounds_before_compaction_keeps_seen_set(spark, tmp_path):
+    """Before any compaction a fast-path round's frontier dir IS its seen
+    delta.  On a politeness-bound crawl, which mixes both round kinds,
+    ``expire_rounds`` may drop only the frontier dirs of rounds that wrote a
+    separate seen delta, and the seen set reads back unchanged."""
+    engine, run, _ = _run_partial(spark, tmp_path, max_rounds=64, round_seconds=8.0)
+    store = engine.store
+    rounds = store.committed_rounds()
+    last = rounds[-1]
+    with_delta = {r for r in rounds if os.path.isdir(store.seen_delta_dir(r))}
+    assert with_delta and set(rounds[:-1]) - with_delta, "crawl must mix both round kinds"
+    before = sorted(r["url_canon"] for r in store.read_seen(spark, last).collect())
+
+    assert store.expire_rounds(keep_last=1) == len(with_delta - {last})
+    for r in rounds:
+        kept = os.path.isdir(os.path.join(store.round_dir(r), "frontier"))
+        assert kept == (r == last or r not in with_delta), r
+    assert sorted(r["url_canon"] for r in store.read_seen(spark, last).collect()) == before
 
 
 def test_manifest_records_per_partition_lineage(spark, tmp_path):

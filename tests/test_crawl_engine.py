@@ -5,6 +5,7 @@ The analog of the reference's golden full-crawl tests
 per-URL depths, FIFO discovery order, and byte-identical extracted text.
 """
 
+import os
 import shutil
 
 import pytest
@@ -140,6 +141,64 @@ def test_resume_reproduces_visited_set(spark, web, tmp_path):
     assert ordered == oracle.order
     docs = resumed.documents(spark)
     assert {r["url"] for r in docs.select("url").collect()} == oracle.fetched
+
+
+@pytest.mark.parametrize(
+    "round_seconds,crashed", [(3600.0, 2), (8.0, 5)], ids=["fast", "politeness-bound"]
+)
+def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, crashed):
+    """A crash after a round wrote its tables but before its manifest
+    commit: the seen set through the last committed round reads none of the
+    crashed round's directories, and resume redoes the round to the
+    reference BFS.  The fast crawl's crashed round left a frontier dir that
+    doubles as its seen delta; the politeness-bound one (8 fetches per host
+    per round) left a separate seen delta."""
+    policy = POLICIES["full-depth20"]
+    pages_df, robots_df = web
+    start = [webgen.page_url(0, 0)]
+    oracle = reference_crawl(_pages_dict(), _robots_dict(), start, policy)
+    engine = CrawlEngine(
+        spark, pages_df, robots_df, policy, str(tmp_path / "crash"),
+        round_seconds=round_seconds, bloom_shards=4, bloom_bits=1 << 14,
+    )
+    engine.run(start, max_rounds=crashed + 1)
+    store = engine.store
+    assert os.path.isdir(store.seen_delta_dir(crashed)) == (round_seconds == 8.0)
+    os.remove(store.manifest_path(crashed))
+
+    files = store.read_seen(spark, crashed - 1).inputFiles()
+    assert files
+    for d in (store.round_dir(crashed), store.seen_delta_dir(crashed)):
+        assert not any(os.path.abspath(d) + "/" in f for f in files), d
+
+    resumed = engine.run(start, max_rounds=64, resume=True)
+    assert resumed.metrics[0]["round"] == crashed
+    seen = resumed.seen(spark)
+    assert {(r["url_canon"], r["depth"]) for r in seen.collect()} == set(oracle.depth.items())
+    assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
+    assert {r["url"] for r in resumed.documents(spark).select("url").collect()} == oracle.fetched
+
+
+@pytest.mark.parametrize(
+    "seeds,host",
+    [([], 0), ([webgen.page_url(N_HOSTS - 1, 0)], N_HOSTS - 1)],
+    ids=["no-seeds", "robots-denied-seed"],
+)
+def test_empty_seed_set_runs_one_stopping_round(spark, web, tmp_path, seeds, host):
+    """No admissible seed: one ordinary round over the empty frontier
+    commits an empty frontier, seen set and documents table, and stops."""
+    pages_df, robots_df = web
+    policy = CrawlPolicy(allowed_domains=[webgen.host_name(host)], depth_limit=20)
+    assert not reference_crawl(_pages_dict(), _robots_dict(), seeds, policy).depth
+    engine = CrawlEngine(
+        spark, pages_df, robots_df, policy, str(tmp_path / "empty"), bloom_shards=4, bloom_bits=1 << 14
+    )
+    run = engine.run(seeds, max_rounds=64)
+    assert run.rounds == 1
+    [m] = run.metrics
+    assert (m["stop"], m["remaining"], m["fetched"]) == (True, 0, 0), m
+    assert run.seen(spark).count() == 0
+    assert run.documents(spark).count() == 0
 
 
 def test_multi_seed_bootstrap_matches_oracle(spark, web, tmp_path):
