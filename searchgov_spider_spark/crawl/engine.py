@@ -34,17 +34,29 @@ Scale notes (10^10 frontier design point):
   * per-host selection is salt-parallel on hot hosts
     (politeness.select_per_host_static);
   * per-round lineage is cut by the parquet frontier checkpoint; the seen
-    set is kept as an incrementally-persisted union whose durable copy is
-    the per-round seen-delta parquet.
+    set is a flat multi-path parquet scan of the per-round seen deltas,
+    rebuilt each round without a job (schema from a parquet footer) and
+    never cached — the next round's anti-join is its one reader;
+  * a small round (estimated admits under ``SMALL_BATCH_THRESHOLD``) sends
+    its admitted links to one partition once: in-batch dedup, the
+    broadcast anti-join against the seen set and the FIFO numbering window
+    all run there with no further exchange.  A DataFrame is persisted only
+    when two actions read it (the pass; the admits when the Bloom fold
+    reads them too).
+
+Every job of round N — on the round thread and on the documents-write and
+Bloom-fold threads, which are ``InheritableThread``s — runs in Spark job
+group ``crawl-rN``.
 """
 
 from __future__ import annotations
 
-import threading
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pyarrow as pa
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -298,7 +310,8 @@ class CrawlEngine:
         # consume the persisted `passed`; the block manager's per-block
         # locking makes concurrent materialization safe.  This hides one of
         # the round's two action latencies — the dominant share of the
-        # small-round fixed cost.
+        # small-round fixed cost.  An InheritableThread carries the round's
+        # job group into the thread's jobs.
         obs_docs = Observation()
         docs_df = documents.observe(obs_docs, F.count(F.lit(1)).alias("n"))
         docs_err: list[BaseException] = []
@@ -309,13 +322,26 @@ class CrawlEngine:
             except BaseException as exc:  # re-raised on the round thread
                 docs_err.append(exc)
 
-        docs_thread = threading.Thread(target=_write_docs, name=f"docs-write-{rnd}", daemon=True)
+        docs_thread = InheritableThread(target=_write_docs, name=f"docs-write-{rnd}", daemon=True)
         docs_thread.start()
 
-        # discovery (F1) -> admission (F2-F6) -> dedup (F7) -> FIFO seq (O1)
-        candidates = dedup_first_in_batch(
-            pass_candidates(passed, self.policy), ["parent_seq", "pos"]
-        ).persist()
+        # discovery (F1) -> admission (F2-F6) -> dedup (F7) -> FIFO seq (O1).
+        # Small batches (estimated from fan-out; n_selected <= frontier_hint,
+        # so hint * fan-out bounds the batch) go to ONE partition once: the
+        # in-batch dedup's aggregate, the broadcast anti-join against the
+        # seen set and the numbering window all run there with no further
+        # exchange, and no pre-count pass runs (the exact count comes from
+        # the write Observation).  Big batches keep the partitioned dedup and
+        # take the SAMPLING-FREE bucketed scheme: the frontier's seqs are
+        # exactly [next_seq - |frontier|, next_seq) in the fast path, so a
+        # monotone bucket id is pure arithmetic on parent_seq — no
+        # range-partitioner sampling job, no pre-count job, no second
+        # shuffled cache.  (Out-of-range parents on the budget-binding path
+        # clamp to the end buckets; monotonicity — correctness — holds for
+        # any bounds, per seqno.monotone_bucket.)
+        small = frontier_hint * 8 < SMALL_BATCH_THRESHOLD
+        links = pass_candidates(passed, self.policy)
+        candidates = dedup_first_in_batch(links.repartition(1) if small else links, ["parent_seq", "pos"])
         # Bloom prefiltering pays once the seen set is large (the anti-join
         # shuffle it avoids outweighs the probe); below the threshold the
         # plain anti-join is cheaper.  next_seq == |seen| by construction.
@@ -338,19 +364,8 @@ class CrawlEngine:
             self.spark, candidates, seen, bloom if use_bloom else None,
             seen_bucketed=self._seen_bucketed,
         )
-        # FIFO sequence: small batches (estimated from fan-out) avoid the
-        # pre-count pass; the exact count comes from the write Observation.
-        # (n_selected <= frontier_hint, so hint * fan-out bounds the batch.)
-        # Big batches take the SAMPLING-FREE bucketed scheme: the frontier's
-        # seqs are exactly [next_seq - |frontier|, next_seq) in the fast
-        # path, so a monotone bucket id is pure arithmetic on parent_seq —
-        # no range-partitioner sampling job, no pre-count job, no second
-        # shuffled cache.  (Out-of-range parents on the budget-binding path
-        # clamp to the end buckets; monotonicity — correctness — holds for
-        # any bounds, per seqno.monotone_bucket.)
-        est_admits = frontier_hint * 8
-        seq_cache = None
-        if est_admits < SMALL_BATCH_THRESHOLD:
+        admits_cache = None
+        if small:
             new_admits = assign_seq_small(new_admits, ["parent_seq", "pos"], start=next_seq)
         else:
             n_buckets = max(4 * self.spark.sparkContext.defaultParallelism, 8)
@@ -358,20 +373,22 @@ class CrawlEngine:
                 F.col("parent_seq"), lo=next_seq - frontier_hint, span=frontier_hint,
                 n_buckets=n_buckets,
             )
-            new_admits, _, seq_cache = assign_seq_bucketed(
+            new_admits, _, admits_cache = assign_seq_bucketed(
                 new_admits.withColumn("_pid", pid), ["parent_seq", "pos"], start=next_seq
             )
-        new_admits = new_admits.persist()
         # Incremental Bloom fold OVERLAPPED with the frontier/documents
-        # writes: it reads only url_hash from the already-materialized
-        # pre-window cache (seqs are irrelevant to membership), so it shares
-        # no lineage with the writes.  The join before this round returns
+        # writes: it reads only url_hash (seqs are irrelevant to membership)
+        # from a cache the frontier write shares — the bucketed assigner's
+        # pre-window cache, else the admits persisted here, the one case a
+        # second action reads them.  The join before this round returns
         # keeps the probe-ordering invariant: round n+1's prefilter never
         # runs before round n's admits are folded in.
         bloom_err: list[BaseException] = []
-        bloom_thread: threading.Thread | None = None
+        bloom_thread: InheritableThread | None = None
         if self._bloom_built:
-            bloom_src = seq_cache if seq_cache is not None else new_admits
+            if admits_cache is None:
+                admits_cache = new_admits = new_admits.persist()
+            bloom_src = admits_cache
 
             def _merge_bloom() -> None:
                 try:
@@ -379,7 +396,7 @@ class CrawlEngine:
                 except BaseException as exc:  # re-raised on the round thread
                     bloom_err.append(exc)
 
-            bloom_thread = threading.Thread(target=_merge_bloom, name=f"bloom-merge-{rnd}", daemon=True)
+            bloom_thread = InheritableThread(target=_merge_bloom, name=f"bloom-merge-{rnd}", daemon=True)
             bloom_thread.start()
         mark("admission_plan")
 
@@ -425,10 +442,13 @@ class CrawlEngine:
         mark("frontier_write")
 
         # a binding budget defers part of the frontier, so the round's new
-        # admits need their own seen delta; otherwise the frontier dir just
-        # written is exactly the new admits and doubles as the delta
+        # admits need their own seen delta: the rows of the frontier just
+        # written numbered from next_seq on (every deferred row has a smaller
+        # seq).  Otherwise that frontier is exactly the new admits and
+        # doubles as the delta.
         if budget_binds:
-            self.store.write_seen_delta(new_admits.select(*SEEN_COLS), rnd)
+            written = self.store.read_table(self.spark, rnd, "frontier")
+            self.store.write_seen_delta(written.filter(F.col("seq") >= next_seq).select(*SEEN_COLS), rnd)
         if bloom_thread is not None and bloom_err:
             # (already joined in the write's finally; usually ~0 residual —
             # the fold ran concurrently with the frontier/documents writes)
@@ -441,15 +461,12 @@ class CrawlEngine:
         # reads directories, so this round's delta is in it before the
         # commit — otherwise the seen set would lag one round and
         # sibling-discovered URLs get re-admitted.
-        seen.unpersist()
         seen_next = self._seen_view(rnd)
         if budget_binds:
             selected.unpersist()
         passed.unpersist()
-        candidates.unpersist()
-        new_admits.unpersist()
-        if seq_cache is not None:
-            seq_cache.unpersist()
+        if admits_cache is not None:
+            admits_cache.unpersist()
         mark("seen_rebuild")
 
         metrics = {
@@ -492,8 +509,8 @@ class CrawlEngine:
             next_seq = frontier.count()
             # seeds enter the seen set at admission time (T1/F7)
             frontier.select(*SEEN_COLS).write.mode("overwrite").parquet(self.store.seed_seen_dir())
-            seen = spark.read.parquet(self.store.seed_seen_dir()).persist()
             self._seen_bucketed = None
+            seen = self._seen_view(-1)
             start_round = 0
             frontier_hint = next_seq
         # built lazily (complete) once the seen set crosses bloom_min_seen
@@ -501,22 +518,23 @@ class CrawlEngine:
         self._bloom_built = False
 
         for rnd in range(start_round, start_round + max_rounds):
-            metrics, seen = self._run_round(rnd, frontier, seen, bloom, next_seq, frontier_hint)
-            next_seq = metrics["next_seq"]
-            frontier_hint = metrics["remaining"]
-            t_commit = time.monotonic()
-            self.store.commit_round(rnd, {k: v for k, v in metrics.items() if k != "timings"} | {"timings": metrics["timings"]})
-            # loop-level (core-count-independent) driver costs, visible in
-            # run.metrics for the bench's fixed-cost accounting
-            metrics["timings"]["commit"] = round(time.monotonic() - t_commit, 3)
-            run.metrics.append({"round": rnd, **metrics})
-            run.rounds = rnd + 1
-            if metrics["stop"]:
-                break
-            t_inter = time.monotonic()
-            seen = self._maybe_auto_compact(rnd, seen)
-            frontier = self.store.read_table(spark, rnd, "frontier")
-            metrics["timings"]["interround"] = round(time.monotonic() - t_inter, 3)
+            with job_group(spark.sparkContext, f"crawl-r{rnd}", f"crawl round {rnd}"):
+                metrics, seen = self._run_round(rnd, frontier, seen, bloom, next_seq, frontier_hint)
+                next_seq = metrics["next_seq"]
+                frontier_hint = metrics["remaining"]
+                t_commit = time.monotonic()
+                self.store.commit_round(rnd, {k: v for k, v in metrics.items() if k != "timings"} | {"timings": metrics["timings"]})
+                # loop-level (core-count-independent) driver costs, visible in
+                # run.metrics for the bench's fixed-cost accounting
+                metrics["timings"]["commit"] = round(time.monotonic() - t_commit, 3)
+                run.metrics.append({"round": rnd, **metrics})
+                run.rounds = rnd + 1
+                if metrics["stop"]:
+                    break
+                t_inter = time.monotonic()
+                seen = self._maybe_auto_compact(rnd, seen)
+                frontier = self.store.read_table(spark, rnd, "frontier")
+                metrics["timings"]["interround"] = round(time.monotonic() - t_inter, 3)
         return run
 
     def _maybe_auto_compact(self, rnd: int, seen: DataFrame) -> DataFrame:
@@ -537,9 +555,8 @@ class CrawlEngine:
         t0 = time.monotonic()
         merged = self.store.compact_seen(self.spark, rnd)
         self._seen_bucketed = self.store.read_seen_bucketed(self.spark)
-        # the old persisted view references delta files compaction just
-        # removed — rebuild it from the new layout before anything re-reads
-        seen.unpersist()
+        # the old view references delta files compaction just removed —
+        # rebuild it from the new layout before anything re-reads
         new_seen = self._seen_view(rnd)
         self.compactions.append(
             {"round": rnd, "deltas_merged": merged, "wall_s": round(time.monotonic() - t0, 3)}
@@ -548,11 +565,27 @@ class CrawlEngine:
 
     # -- seen-set view ------------------------------------------------------------
     def _seen_view(self, rnd: int) -> DataFrame:
-        """The persisted seen set through round ``rnd`` that dedup unions
-        with ``self._seen_bucketed``: every seen delta the bucketed scan
-        does not already cover (empty when compaction left none)."""
+        """The seen set through round ``rnd`` that dedup unions with
+        ``self._seen_bucketed``: every seen delta the bucketed scan does not
+        already cover (empty when compaction left none).  A plain parquet
+        scan, not cached: the next round's anti-join is its one reader."""
         deltas = self.store.read_seen(self.spark, rnd, exclude_compacted=self._seen_bucketed is not None)
-        return (deltas if deltas is not None else self._seen_bucketed.limit(0)).persist()
+        return deltas if deltas is not None else self._seen_bucketed.limit(0)
+
+
+@contextmanager
+def job_group(sc, group: str, description: str):
+    """Run the block's Spark jobs in job group ``group``, and the jobs of
+    every ``InheritableThread`` it starts, then restore the caller's group
+    (pinned-thread mode keeps local properties per Python thread)."""
+    keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    saved = [(k, sc.getLocalProperty(k)) for k in keys]
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        for k, v in saved:
+            sc.setLocalProperty(k, v)
 
 
 def documents_from_pass(passed: DataFrame) -> DataFrame:

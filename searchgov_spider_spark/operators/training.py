@@ -224,17 +224,19 @@ def mine_triplets(
         "sqrt(aggregate({v}, cast(0.0 as double), "
         "(acc, v) -> acc + cast(v as double) * cast(v as double)))"
     )
+    # a zero-norm vector has no cosine: try_divide gives null instead of
+    # the ANSI divide-by-zero error, and the pair drops out of both picks
     scored = (
         c.join(a, F.col("cand_id") != F.col("anchor_id"))
         .select(
             "anchor_id",
             "cand_id",
             (F.col("_clbl") == F.col("_albl")).alias("same"),
-            (
-                F.expr(dot)
-                / (F.expr(nrm.format(v="_avec")) * F.expr(nrm.format(v="_cvec")))
+            F.try_divide(
+                F.expr(dot), F.expr(nrm.format(v="_avec")) * F.expr(nrm.format(v="_cvec"))
             ).alias("cosine"),
         )
+        .filter(F.col("cosine").isNotNull())
     )
     # struct max = (max cosine, then min id); map-side combine shrinks each
     # partition to at most 2*|anchors| partial rows before the shuffle

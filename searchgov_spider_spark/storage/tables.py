@@ -31,6 +31,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CheckpointCorrupt(RuntimeError):
@@ -179,8 +180,27 @@ class CheckpointStore:
         with open(self.manifest_path(rnd)) as f:
             return json.load(f)
 
+    @staticmethod
+    def _parquet(spark: SparkSession, *paths: str) -> DataFrame:
+        """``spark.read.parquet(*paths)`` with the schema taken from the
+        first data file's footer, read on the driver with pyarrow like
+        ``_dir_lineage``: the Spark schema every Spark parquet write stores
+        there, which is what Spark's own inference returns, without the
+        one-task inference job it would start.  Files without it (not
+        written by Spark) fall back to that inference."""
+        import pyarrow.parquet as pq
+
+        first = next(
+            (os.path.join(p, fn) for p in paths for fn in sorted(os.listdir(p)) if fn.endswith(".parquet")),
+            None,
+        )
+        meta = (pq.read_schema(first).metadata or {}) if first is not None else {}
+        spark_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+        reader = spark.read if spark_schema is None else spark.read.schema(StructType.fromJson(json.loads(spark_schema)))
+        return reader.parquet(*paths)
+
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.round_dir(rnd), name))
+        return self._parquet(spark, os.path.join(self.round_dir(rnd), name))
 
     SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
 
@@ -223,11 +243,16 @@ class CheckpointStore:
         (``read_seen_bucketed``), so only the post-compaction deltas union
         here.  The bucketed files are plain parquet, so the default
         (include) path reads the full set regardless of layout.
+
+        The schema comes from the first data file's footer (``_parquet``),
+        so building the view starts no Spark job.  Spark's own inference
+        reads one footer too (no schema merging), so the schema is the same:
+        a delta written with int64 ``depth`` still reads as written.
         """
         paths = self._seen_paths(upto_round, include_seed=not exclude_compacted)
         if not paths:
             return None
-        return spark.read.parquet(*paths).select(*self.SEEN_COLS)
+        return self._parquet(spark, *paths).select(*self.SEEN_COLS)
 
     # -- bucketed seen table (F7 at 10^10 scale) --------------------------------
 
@@ -275,7 +300,7 @@ class CheckpointStore:
         keys = ", ".join(info["bucket_cols"])
         tbl = self._bucketed_table_name()
         loc = os.path.abspath(self.seed_seen_dir())
-        schema = spark.read.parquet(loc).schema
+        schema = self._parquet(spark, loc).schema
         cols = ", ".join(f"{fld.name} {fld.dataType.simpleString()}" for fld in schema.fields)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.sql(

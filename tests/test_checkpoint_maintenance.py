@@ -4,6 +4,7 @@ resume-after-compaction equivalence."""
 import os
 
 from searchgov_spider_spark.crawl import CrawlEngine, CrawlPolicy, reference_crawl
+from searchgov_spider_spark.storage.tables import CheckpointStore
 from searchgov_spider_spark.synth import webgen
 from searchgov_spider_spark.synth.spark_gen import PAGES_SCHEMA
 
@@ -226,3 +227,16 @@ def test_resume_refuses_corrupted_checkpoint(spark, tmp_path):
         fh.truncate(os.path.getsize(victim) // 2)
     with pytest.raises(CheckpointCorrupt, match="bytes"):
         engine.run([webgen.page_url(0, 0)], max_rounds=1, resume=True)
+
+
+def test_read_seen_keeps_int64_depth_of_its_deltas(spark, tmp_path):
+    """Seen deltas written with int64 ``depth`` (the engine writes int32)
+    read back as written: the schema comes from the deltas' own footer."""
+    store = CheckpointStore(str(tmp_path / "ckpt"))
+    schema = "url_hash long, url_canon string, depth long, seq long"
+    for rnd in range(2):
+        rows = [(rnd * 10 + i, f"https://h.example.gov/{rnd}/{i}", 4, rnd * 10 + i) for i in range(3)]
+        store.write_seen_delta(spark.createDataFrame(rows, schema), rnd)
+    seen = store.read_seen(spark, 1)
+    assert dict(seen.dtypes)["depth"] == "bigint"
+    assert sorted(r["seq"] for r in seen.collect()) == [0, 1, 2, 10, 11, 12]

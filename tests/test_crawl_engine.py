@@ -179,6 +179,55 @@ def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, cra
     assert {r["url"] for r in resumed.documents(spark).select("url").collect()} == oracle.fetched
 
 
+def _assert_matches_oracle(spark, oracle, run):
+    """FIFO order, visited set with depths and fetched set equal the
+    reference BFS."""
+    seen = run.seen(spark)
+    assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
+    assert {(r["url_canon"], r["depth"]) for r in seen.collect()} == set(oracle.depth.items())
+    assert {r["url"] for r in run.documents(spark).select("url").collect()} == oracle.fetched
+
+
+@pytest.mark.parametrize("round_seconds", [3600.0, 8.0], ids=["fast", "politeness-bound"])
+def test_bloom_branch_matches_oracle(spark, web, tmp_path, round_seconds):
+    """``bloom_min_seen=0``: round 0 builds the complete Bloom filter and
+    every round probes it and folds its admits in on the fold thread.  The
+    politeness-bound crawl (8 fetches per host per round) writes separate
+    seen deltas."""
+    oracle, run, engine = run_both(
+        spark, web, POLICIES["full-depth20"], tmp_path / "bloom",
+        bloom_min_seen=0, round_seconds=round_seconds,
+    )
+    assert engine._bloom_built
+    deltas = [r for r in range(run.rounds) if os.path.isdir(engine.store.seen_delta_dir(r))]
+    assert bool(deltas) == (round_seconds == 8.0)
+    _assert_matches_oracle(spark, oracle, run)
+
+
+def test_bucketed_seq_path_matches_oracle(spark, web, tmp_path, monkeypatch):
+    """With the small-batch threshold at 0 every round numbers its admits
+    with ``assign_seq_bucketed`` over the partitioned dedup."""
+    from searchgov_spider_spark.crawl import engine as engine_mod
+
+    calls = []
+    assign_seq_bucketed = engine_mod.assign_seq_bucketed
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return assign_seq_bucketed(*args, **kwargs)
+
+    monkeypatch.setattr(engine_mod, "SMALL_BATCH_THRESHOLD", 0)
+    monkeypatch.setattr(engine_mod, "assign_seq_bucketed", spy)
+    pages_df, _ = web
+    oracle, run, _ = run_both(spark, web, POLICIES["full-depth20"], tmp_path / "bucketed")
+    assert len(calls) == run.rounds > 1
+    _assert_matches_oracle(spark, oracle, run)
+    docs = run.documents(spark).select("url", "content")
+    joined = docs.join(pages_df.selectExpr("url", "text as expected_text"), "url", "inner")
+    assert joined.count() == docs.count()
+    assert joined.filter("content != expected_text").count() == 0
+
+
 @pytest.mark.parametrize(
     "seeds,host",
     [([], 0), ([webgen.page_url(N_HOSTS - 1, 0)], N_HOSTS - 1)],

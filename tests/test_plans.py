@@ -145,6 +145,39 @@ class TestCrawlPlans:
             assert [fn for fn, _ in python_maps(plan)] == ["_pass"], name
             assert plan.index("InMemoryRelation") < plan.index("MapInArrow _pass"), name
 
+    def test_small_round_one_exchange_above_the_pass(self, spark, tmp_path):
+        """A small round sends its admitted links to one partition once:
+        the frontier-write plan holds exactly one shuffle Exchange above the
+        pass cache, to SinglePartition — the in-batch dedup, the broadcast
+        anti-join against the seen set and the numbering window reuse it —
+        and its only cache is the pass."""
+        from searchgov_spider_spark.crawl import CrawlEngine
+        from searchgov_spider_spark.crawl.fetch import GeneratorFetcher
+        from searchgov_spider_spark.crawl.reference_bfs import CrawlPolicy
+        from searchgov_spider_spark.synth import webgen
+
+        robots = spark.createDataFrame(webgen.robots_pandas(3))
+        engine = CrawlEngine(
+            spark, None, robots, CrawlPolicy(allowed_domains=["example.gov"], depth_limit=3),
+            str(tmp_path / "ckpt"), fetcher=GeneratorFetcher(60, 3, branch=3),
+        )
+        plans: dict[int, str] = {}
+        write_table = engine.store.write_table
+
+        def capture(df, rnd, name):
+            if name == "frontier":
+                plans[rnd] = plan_of(df, "simple")
+            return write_table(df, rnd, name)
+
+        engine.store.write_table = capture
+        engine.run([webgen.page_url(h, 0) for h in range(3)], max_rounds=2)
+        plan = plans[1]
+        assert plan.count("InMemoryRelation") == 1
+        above = plan[: plan.index("InMemoryRelation")].splitlines()
+        shuffles = [line for line in above if "Exchange " in line and "BroadcastExchange" not in line]
+        assert len(shuffles) == 1 and "Exchange SinglePartition" in shuffles[0], shuffles
+        assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+
     def test_politeness_selection_no_global_sort(self, spark):
         from searchgov_spider_spark.crawl import politeness
 

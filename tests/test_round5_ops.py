@@ -333,6 +333,28 @@ def test_mine_triplets_violation_margin_is_negative(spark):
     assert row.margin < 0
 
 
+def test_mine_triplets_zero_vector_has_no_cosine(spark):
+    """An all-zero embedding has no cosine to any row: as a corpus row it is
+    neither positive nor negative, and as an anchor it forms no triplet —
+    where the division by its zero norm used to fail the whole job under
+    ANSI mode."""
+    from searchgov_spider_spark.operators import training
+
+    corpus = _emb(
+        spark,
+        [
+            (0, [1.0, 0.0], 1),
+            (1, [0.0, 0.0], 1),   # zero vector, same label as anchor 0
+            (2, [0.0, 0.0], 2),   # zero vector, other label
+            (3, [0.6, 0.8], 1),
+            (4, [0.0, 1.0], 2),
+        ],
+    )
+    rows = training.mine_triplets(corpus.filter(F.col("vec_id").isin(0, 1)), corpus).collect()
+    assert [(r.anchor_id, r.pos_id, r.neg_id) for r in rows] == [(0, 3, 4)]
+    assert rows[0].pos_cos == 0.6 and rows[0].neg_cos == 0.0
+
+
 def test_mine_triplets_broadcast_plan(spark):
     """The corpus must never shuffle for the join: anchors ride a
     BroadcastNestedLoopJoin; the ONLY Exchange is the final
