@@ -12,9 +12,13 @@ fixed-size bitmaps cross the driver, never URL sets.  Each round:
      through the authoritative ``left_anti`` join against the seen table;
   4. newly admitted hashes are folded into the filter for the next round.
 
-At 10^10 URLs with 64 shards x 2^27 bits ≈ 1 GiB of bitmap on the driver and
-k=4 probes, fpp stays low while the anti-join shuffle shrinks by ~the dup
-rate.  Shard count and bits are configurable; sandbox defaults are small.
+Sizing at 10^10 URLs: 64 shards x 2^27 bits is 1 GiB of bitmap on the
+driver, but it holds 1.56e8 URLs per 1.34e8-bit shard, and with k=4 probes
+fpp = (1 - exp(-4 x 1.56e8 / 1.34e8))^4 ≈ 0.96 — nearly every new URL reads
+as maybe-seen and still goes through the anti-join, so the filter saves
+almost nothing there.  An fpp of 1% at k=4 needs about 10.5 bits per URL,
+13 GB of bitmap at 10^10 URLs, past the 8 GB broadcast ceiling.  Shard
+count and bits are configurable; sandbox defaults are small.
 
 Reference analog: the Redis SET dupefilter probe before enqueue
 (search_gov_crawler/search_gov_spiders/job_state/dupefilter.py:8-25).

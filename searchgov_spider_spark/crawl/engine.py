@@ -19,24 +19,31 @@ read the persisted pass; neither has a Python node of its own.
 
 Round state lives in parquet round-directories committed by manifest
 (storage.tables.CheckpointStore) so a killed run resumes from the last
-committed round with an identical visited-URL set (north_rule).
+committed round with an identical visited-URL set (north_rule).  The
+committed checkpoint is a round's only input: round N reads the frontier
+of round N-1 (``read_table``; round -1's is the seed dir the bootstrap
+wrote) and the seen set through round N-1 (``read_seen``), so starting,
+resuming and
+continuing a crawl run the same loop body.  A fresh run refuses a
+directory that already holds a committed round.
 
 Politeness: per-host budget = floor(round_seconds / crawl_delay), the exact
 token-bucket steady state when the bucket capacity equals the round length
 (see politeness.static_budgets).
 
 Scale notes (10^10 frontier design point):
-  * no driver-side URL collections — only counts, offsets, and Bloom bitmaps
-    cross the driver;
+  * no driver-side URL collections — only counts, offsets, Bloom bitmaps
+    and the host -> robots.txt map (collected once at init, then
+    broadcast; its size is hosts x rules bytes) cross the driver;
   * the pages side of the fetch join is repartitioned once on url_canon and
     persisted, so each round shuffles only the (politeness-bounded) fetch
     batch;
   * per-host selection is salt-parallel on hot hosts
     (politeness.select_per_host_static);
-  * per-round lineage is cut by the parquet frontier checkpoint; the seen
-    set is a flat multi-path parquet scan of the per-round seen deltas,
-    rebuilt each round without a job (schema from a parquet footer) and
-    never cached — the next round's anti-join is its one reader;
+  * per-round lineage is cut by the parquet checkpoint: the frontier and
+    the seen set (a flat multi-path scan of the per-round seen deltas) are
+    read at round start without a job (schema from a parquet footer) and
+    never cached — the round's anti-join is the seen set's one reader;
   * a small round (estimated admits under ``SMALL_BATCH_THRESHOLD``) sends
     its admitted links to one partition once: in-batch dedup, the
     broadcast anti-join against the seen set and the FIFO numbering window
@@ -82,6 +89,14 @@ from .seqno import (
 FRONTIER_COLS = ["url_canon", "url_hash", "host", "depth", "seq", "source_url"]
 SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
 
+# Auto-compaction (T2): once this many seen-delta directories have
+# accumulated since the last compaction, the engine compacts them into the
+# bucketed seed table between rounds (the maintenance window).  Bounds
+# small-file growth over unbounded crawls — at one delta dir per round a
+# month-long crawl would otherwise union thousands of parquet paths into
+# every dedup anti-join.
+AUTO_COMPACT_DELTAS = 64
+
 
 @dataclass
 class CrawlRun:
@@ -101,6 +116,10 @@ class CrawlRun:
 
 
 class CrawlEngine:
+    # a budget-binding round over a frontier larger than this salts each
+    # host's selection over 8 buckets (politeness.select_per_host_static)
+    hot_host_threshold = 200_000
+
     def __init__(
         self,
         spark: SparkSession,
@@ -113,9 +132,6 @@ class CrawlEngine:
         bloom_shards: int = 16,
         bloom_bits: int = 1 << 20,
         bloom_min_seen: int = 500_000,
-        fetch_partitions: int | None = None,
-        hot_host_threshold: int = 200_000,
-        auto_compact_deltas: int = 64,
     ):
         self.spark = spark
         self.policy = policy
@@ -129,16 +145,8 @@ class CrawlEngine:
         # the compacted seen set's bucketed scan, None before any compaction
         # (set per run() from the checkpoint layout)
         self._seen_bucketed = None
-        # Auto-compaction (T2): once this many seen-delta directories have
-        # accumulated since the last compaction, the engine compacts them
-        # into the bucketed seed table between rounds (the maintenance
-        # window).  Bounds small-file growth over unbounded crawls — at one
-        # delta dir per round a month-long crawl would otherwise union
-        # thousands of parquet paths into every dedup anti-join.
-        self.auto_compact_deltas = auto_compact_deltas
         self.compactions: list[dict] = []
-        self.hot_host_threshold = hot_host_threshold
-        self.fetch_partitions = fetch_partitions or max(32, spark.sparkContext.defaultParallelism)
+        self.fetch_partitions = max(32, spark.sparkContext.defaultParallelism)
         # robots/budgets are host-table-sized dimensions, but typically
         # arrive as a createDataFrame spread over defaultParallelism
         # partitions.  Coalesce once at init so each later read (the
@@ -252,15 +260,12 @@ class CrawlEngine:
         return src.mapInArrow(_pass, udfs.CRAWL_PASS_SCHEMA)
 
     # -- one round ---------------------------------------------------------------
-    def _run_round(
-        self,
-        rnd: int,
-        frontier: DataFrame,
-        seen: DataFrame,
-        bloom: PartitionedBloom,
-        next_seq: int,
-        frontier_hint: int = 0,
-    ) -> tuple[dict, DataFrame]:
+    def _run_round(self, rnd: int, bloom: PartitionedBloom, next_seq: int, frontier_hint: int) -> dict:
+        """Round ``rnd`` over the committed checkpoint: its frontier is the
+        one round ``rnd - 1`` wrote (round 0: the seed dir) and its seen
+        deltas are ``read_seen`` through round ``rnd - 1``, beside the
+        compacted bucketed scan once there is one.  Returns the round's
+        metrics."""
         t0 = time.monotonic()
         timings: dict[str, float] = {}
         _last = [t0]
@@ -269,6 +274,10 @@ class CrawlEngine:
             now = time.monotonic()
             timings[name] = round(now - _last[0], 3)
             _last[0] = now
+
+        spark = self.spark
+        frontier = self.store.read_table(spark, rnd - 1, "frontier")
+        seen = self.store.read_seen(spark, rnd - 1, exclude_compacted=self._seen_bucketed is not None)
 
         # politeness-capped FIFO selection (static budgets; see module doc).
         # Fast path: when the whole frontier is within every host's budget the
@@ -349,19 +358,15 @@ class CrawlEngine:
         # seen set — a Bloom with missing members would admit duplicates.
         use_bloom = next_seq >= self.bloom_min_seen
         if use_bloom and not self._bloom_built:
-            # the bloom must cover the FULL seen set (bucketed + deltas)
-            seen_full = (
-                self._seen_bucketed.select(*SEEN_COLS).unionByName(seen)
-                if self._seen_bucketed is not None
-                else seen
-            )
+            # the bloom must cover the FULL seen set: read_seen's default
+            # reads the compacted files as plain parquet beside the deltas.
             # rows_hint = |seen| lets the build pick the shuffle-by-shard
             # topology once the seen set is big enough that direct task
             # emissions would flood the driver (merge_bitmaps_into docstring)
-            merge_bitmaps_into(bloom, seen_full, "url_hash", rows_hint=next_seq)
+            merge_bitmaps_into(bloom, self.store.read_seen(spark, rnd - 1), "url_hash", rows_hint=next_seq)
             self._bloom_built = True
         new_admits = dedup_against_seen(
-            self.spark, candidates, seen, bloom if use_bloom else None,
+            spark, candidates, seen, bloom if use_bloom else None,
             seen_bucketed=self._seen_bucketed,
         )
         admits_cache = None
@@ -455,21 +460,13 @@ class CrawlEngine:
             raise bloom_err[0]
         mark("seen_bloom")
 
-        # rebuild `seen` from the durable deltas: a single flat multi-path
-        # parquet relation — the lineage must NOT chain through this round's
-        # anti-join or the logical plan doubles every round.  The seen rule
-        # reads directories, so this round's delta is in it before the
-        # commit — otherwise the seen set would lag one round and
-        # sibling-discovered URLs get re-admitted.
-        seen_next = self._seen_view(rnd)
         if budget_binds:
             selected.unpersist()
         passed.unpersist()
         if admits_cache is not None:
             admits_cache.unpersist()
-        mark("seen_rebuild")
 
-        metrics = {
+        return {
             "selected": n_selected,
             "fetched": n_docs,
             "missed": n_selected - n_docs,
@@ -480,14 +477,24 @@ class CrawlEngine:
             "timings": timings,
             "stop": remaining == 0,
         }
-        return metrics, seen_next
 
     # -- public API ---------------------------------------------------------------
     def run(self, start_urls: list[str], max_rounds: int = 1000, resume: bool = False) -> CrawlRun:
+        """Crawl from ``start_urls`` for up to ``max_rounds`` rounds.
+
+        A fresh run needs a checkpoint directory without a committed round
+        (it raises ``ValueError`` rather than read another crawl's rounds
+        or delete them); ``resume=True`` continues from the last committed
+        round, or bootstraps when none is committed yet."""
         spark = self.spark
         run = CrawlRun(checkpoint=self.store)
 
-        last = self.store.last_committed() if resume else None
+        last = self.store.last_committed()
+        if last is not None and not resume:
+            raise ValueError(
+                f"checkpoint directory {self.store.root!r} already holds committed round {last}: "
+                "resume it (resume=True) or crawl into an empty directory"
+            )
         if last is not None:
             # refuse to resume from a checkpoint whose data files diverge
             # from their committed lineage (truncated/overwritten parquet
@@ -497,33 +504,32 @@ class CrawlEngine:
             if manifest.get("stop"):
                 run.rounds = last + 1
                 return run
-            frontier = self.store.read_table(spark, last, "frontier")
-            next_seq = manifest["next_seq"]
-            self._seen_bucketed = self.store.read_seen_bucketed(spark)
-            seen = self._seen_view(last)
-            start_round = last + 1
-            self.store.drop_uncommitted(start_round)
-            frontier_hint = manifest.get("remaining", 0)
+        start_round = 0 if last is None else last + 1
+        # a crashed round's leftover dirs must not join the seen set of
+        # the round that reuses their names
+        self.store.drop_uncommitted(start_round)
+        if last is None:
+            # the seed dir is round 0's frontier and, through read_seen, the
+            # seeds' seen delta: seeds enter the seen set at admission (T1/F7)
+            obs = Observation()
+            seeds = self._bootstrap(start_urls).observe(obs, F.count(F.lit(1)).alias("n"))
+            seeds.write.mode("overwrite").parquet(self.store.seed_seen_dir())
+            next_seq = frontier_hint = int(obs.get["n"])
         else:
-            frontier = self._bootstrap(start_urls).persist()
-            next_seq = frontier.count()
-            # seeds enter the seen set at admission time (T1/F7)
-            frontier.select(*SEEN_COLS).write.mode("overwrite").parquet(self.store.seed_seen_dir())
-            self._seen_bucketed = None
-            seen = self._seen_view(-1)
-            start_round = 0
-            frontier_hint = next_seq
+            next_seq = manifest["next_seq"]
+            frontier_hint = manifest.get("remaining", 0)
+        self._seen_bucketed = self.store.read_seen_bucketed(spark)
         # built lazily (complete) once the seen set crosses bloom_min_seen
         bloom = PartitionedBloom(self.bloom_shards, self.bloom_bits)
         self._bloom_built = False
 
         for rnd in range(start_round, start_round + max_rounds):
             with job_group(spark.sparkContext, f"crawl-r{rnd}", f"crawl round {rnd}"):
-                metrics, seen = self._run_round(rnd, frontier, seen, bloom, next_seq, frontier_hint)
+                metrics = self._run_round(rnd, bloom, next_seq, frontier_hint)
                 next_seq = metrics["next_seq"]
                 frontier_hint = metrics["remaining"]
                 t_commit = time.monotonic()
-                self.store.commit_round(rnd, {k: v for k, v in metrics.items() if k != "timings"} | {"timings": metrics["timings"]})
+                self.store.commit_round(rnd, metrics)
                 # loop-level (core-count-independent) driver costs, visible in
                 # run.metrics for the bench's fixed-cost accounting
                 metrics["timings"]["commit"] = round(time.monotonic() - t_commit, 3)
@@ -532,16 +538,15 @@ class CrawlEngine:
                 if metrics["stop"]:
                     break
                 t_inter = time.monotonic()
-                seen = self._maybe_auto_compact(rnd, seen)
-                frontier = self.store.read_table(spark, rnd, "frontier")
+                self._maybe_auto_compact(rnd)
                 metrics["timings"]["interround"] = round(time.monotonic() - t_inter, 3)
         return run
 
-    def _maybe_auto_compact(self, rnd: int, seen: DataFrame) -> DataFrame:
+    def _maybe_auto_compact(self, rnd: int) -> None:
         """Maintenance window between rounds: compact accumulated seen
-        deltas into the bucketed seed table once ``auto_compact_deltas``
-        directories are pending, then re-derive the round-loop seen view
-        (the bucketed scan plus any later deltas).
+        deltas into the bucketed seed table once ``AUTO_COMPACT_DELTAS``
+        directories are pending, and re-read the bucketed scan the next
+        rounds' dedup uses.
 
         Runs strictly AFTER ``commit_round`` — compaction only merges
         committed deltas, and a crash mid-compaction leaves a readable seen
@@ -550,27 +555,14 @@ class CrawlEngine:
         across the rewrite.
         """
         pending = len(self.store._seen_paths(rnd, include_seed=False))
-        if pending < self.auto_compact_deltas:
-            return seen
+        if pending < AUTO_COMPACT_DELTAS:
+            return
         t0 = time.monotonic()
         merged = self.store.compact_seen(self.spark, rnd)
         self._seen_bucketed = self.store.read_seen_bucketed(self.spark)
-        # the old view references delta files compaction just removed —
-        # rebuild it from the new layout before anything re-reads
-        new_seen = self._seen_view(rnd)
         self.compactions.append(
             {"round": rnd, "deltas_merged": merged, "wall_s": round(time.monotonic() - t0, 3)}
         )
-        return new_seen
-
-    # -- seen-set view ------------------------------------------------------------
-    def _seen_view(self, rnd: int) -> DataFrame:
-        """The seen set through round ``rnd`` that dedup unions with
-        ``self._seen_bucketed``: every seen delta the bucketed scan does not
-        already cover (empty when compaction left none).  A plain parquet
-        scan, not cached: the next round's anti-join is its one reader."""
-        deltas = self.store.read_seen(self.spark, rnd, exclude_compacted=self._seen_bucketed is not None)
-        return deltas if deltas is not None else self._seen_bucketed.limit(0)
 
 
 @contextmanager

@@ -393,6 +393,21 @@ _LENGTH_RE = re.compile(rb"/Length\s+(\d+)(?![\d\s]*\d+\s+R)")
 _STR_OR_HEX_RE = re.compile(rb"\((?:[^()\\]|\\.|\([^()]*\))*\)|<[0-9A-Fa-f\s]+>")
 _ENCRYPT_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+(\d+)\s+R")
 _ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f]+)>")
+_XREF_STREAM_DICT_RE = re.compile(rb"\bobj\s*(<<(?:(?!\bendobj\b).)*?/Type\s*/XRef\b.*?)\bstream\b", re.S)
+_TRAILER_RE = re.compile(rb"\btrailer\b.*?(?=\bstartxref\b|\Z)", re.S)
+
+
+def _trailer_spans(body: bytes) -> list[tuple[int, int]]:
+    """Byte spans of every trailer dictionary, in file order: each
+    ``trailer`` section up to its ``startxref`` and each cross-reference
+    stream dictionary.  Only these hold the /Encrypt reference and the
+    file /ID (a page may show the same text).  A file has several after
+    incremental updates, and a linearized one keeps /Encrypt and /ID in
+    its first-page trailer near the top while its final trailer may hold
+    just /Size."""
+    spans = [m.span() for m in _TRAILER_RE.finditer(body)]
+    spans += [m.span(1) for m in _XREF_STREAM_DICT_RE.finditer(body)]
+    return sorted(spans)
 
 
 def _unescape_string(raw: bytes) -> bytes:
@@ -581,15 +596,25 @@ def decrypt_pdf(body: bytes, passwords: tuple = (b"",)) -> bytes:
     ``passwords`` candidates) return the input unchanged (the scanner then
     degrades per its tolerant contract).  Supports /V 1-2 (RC4), /V 4
     (AES-128) and /V 5 /R 5-6 (AES-256)."""
-    ref = _ENCRYPT_REF_RE.search(body)
-    if not ref:
+    # The last trailer dictionary with an /Encrypt reference names the
+    # encryption dictionary and carries the file /ID.
+    refs = [(span, m) for span in _trailer_spans(body) for m in _ENCRYPT_REF_RE.finditer(body, *span)]
+    if not refs:
         return body
+    trailer, ref = refs[-1]
     enc_num = int(ref.group(1))
-    idm = _ID_RE.search(body)
+    idm = _ID_RE.search(body, *trailer)
     file_id = bytes.fromhex(idm.group(1).decode("ascii")) if idm else b""
+    # The result is plaintext-equivalent: blank every trailer's /Encrypt
+    # reference (same byte length, offsets preserved) so a second pass —
+    # e.g. the scanner's own auto-decrypt pre-pass — is a no-op.
+    src = bytearray(body)
+    for _, m in refs:
+        src[m.start() : m.end()] = b" " * (m.end() - m.start())
+    src = bytes(src)
     enc_body = None
     objects = []
-    for m in _OBJ_RE.finditer(body):
+    for m in _OBJ_RE.finditer(src):
         n, g, ob = int(m.group(1)), int(m.group(2)), m.group(3).strip()
         if n == enc_num:
             enc_body = ob
@@ -644,7 +669,7 @@ def decrypt_pdf(body: bytes, passwords: tuple = (b"",)) -> bytes:
     out = bytearray()
     pos = 0
     for n, g, ob, mstart, mend in objects:
-        out += body[pos:mstart]
+        out += src[pos:mstart]
         out += b"%d %d obj\n" % (n, g)
         try:
             out += _rewrite_object(n, g, ob, key, aes, encrypt=False)
@@ -652,8 +677,5 @@ def decrypt_pdf(body: bytes, passwords: tuple = (b"",)) -> bytes:
             out += ob
         out += b"\nendobj"
         pos = mend
-    out += body[pos:]
-    # The result is plaintext-equivalent: drop the trailer's /Encrypt
-    # reference (same byte length, offsets preserved) so a second pass —
-    # e.g. the scanner's own auto-decrypt pre-pass — is a no-op.
-    return _ENCRYPT_REF_RE.sub(lambda m: b" " * len(m.group(0)), bytes(out))
+    out += src[pos:]
+    return bytes(out)

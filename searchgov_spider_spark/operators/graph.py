@@ -373,10 +373,12 @@ def trustrank(
     with t_0 = the seed distribution itself.  Like :func:`pagerank` this
     is the lost-mass dangling contract (no redistribution), keeping every
     score a finite weighted path sum a pure-SQL oracle reproduces exactly.
-    ``seeds``: one row per trusted node id (a curated list — bounded, but
-    joined not collected, so a million-seed whitelist is fine).  Returns
-    (id_col, trust) rounded to 6 dp; non-seed pages unreachable from any
-    seed get exactly 0.0 — the demotion set.
+    ``seeds``: the trusted node ids (a curated list — bounded, but joined
+    not collected, so a million-seed whitelist is fine).  S is the set of
+    distinct seed ids that are also nodes: a repeated id counts once and
+    an id that is no node is ignored; with S empty every node scores 0.0.
+    Returns (id_col, trust) rounded to 6 dp, one row per node; non-seed
+    pages unreachable from any seed get exactly 0.0 — the demotion set.
 
     Scale shape (mirrors :func:`pagerank`): adjacency+outdeg materialized
     once; each iteration is ONE co-partitioned contribution join + one
@@ -384,7 +386,10 @@ def trustrank(
     (no per-iteration seed join); per-iteration ``localCheckpoint`` keeps
     plan depth O(1); no collect anywhere.
     """
-    n_seeds = seeds.count()  # scalar |S|: one job, O(1) driver memory
+    seed_ids = seeds.select(id_col).distinct().join(nodes.select(id_col), id_col, "left_semi")
+    # scalar |S|: one job, O(1) driver memory; with S empty every is_seed
+    # below is 0, so dividing by 1 scores every node 0.0
+    n_seeds = max(seed_ids.count(), 1)
     teleport = (1.0 - damping) / n_seeds
 
     deg = edges.groupBy(src_col).agg(F.count("*").alias("out_deg"))
@@ -394,7 +399,7 @@ def trustrank(
     # (1-d)/|S| thereafter, so iterations touch only (id, rank, is_seed)
     base = (
         nodes.select(F.col(id_col))
-        .join(seeds.select(F.col(id_col), F.lit(1.0).alias("is_seed")), id_col, "left")
+        .join(seed_ids.select(F.col(id_col), F.lit(1.0).alias("is_seed")), id_col, "left")
         .select(id_col, F.coalesce("is_seed", F.lit(0.0)).alias("is_seed"))
         .localCheckpoint(eager=False)
     )

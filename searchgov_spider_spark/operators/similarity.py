@@ -25,8 +25,8 @@ logger = logging.getLogger(__name__)
 # Corpus-size crossover for the SRP exact-verify prune (see
 # embedding_near_dup_pairs): below this the prune's fixed jobs cost more
 # than the raw-vector verify joins they avoid.  A data-size gate, not a
-# core-count constant — the same pattern as the crawl engine's
-# bloom_min_seen crossover.
+# core-count constant.  Only the small side is measured (q48 at sf0.1); the
+# 1M-row value itself is not a measured crossover.
 PRUNE_VERIFY_MIN_ROWS = 1_000_000
 
 
@@ -240,8 +240,7 @@ def embedding_near_dup_pairs(
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
-    # Verify-side prune is SIZE-GATED (same measured-crossover pattern as
-    # the engine's bloom_min_seen): semi-pruning the corpus to candidate
+    # Verify-side prune is SIZE-GATED: semi-pruning the corpus to candidate
     # ids keeps the vectors the verify joins shuffle proportional to the
     # candidates that have a pair rather than to the corpus.  Unlike the
     # minhash analog (which avoids recomputing corpus-wide SHINGLES) the

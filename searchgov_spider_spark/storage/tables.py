@@ -15,8 +15,9 @@ Layout:
     <root>/round_00000/manifest.json    commit marker {round, next_seq, counts}
     <root>/seen/round_00000/            parquet delta of newly-seen url hashes
                                         (only rounds whose budget bound)
-    <root>/seen/seed/                   bootstrap seeds, later the compacted
-                                        set with its _BUCKETS marker
+    <root>/seen/seed/                   bootstrap seeds (round 0's frontier),
+                                        later the compacted set with its
+                                        _BUCKETS marker
 
 The directories alone define the seen set (``_seen_paths``): the seed dir,
 then for every round after the compaction watermark (``upto_round`` in the
@@ -54,7 +55,8 @@ class CheckpointStore:
         return os.path.join(self.root, "seen", f"round_{rnd:05d}")
 
     def seed_seen_dir(self) -> str:
-        """Seen-delta written at bootstrap (seed URLs, before round 0)."""
+        """The bootstrap's admitted seeds: round 0's frontier and the seeds'
+        seen delta (later the compacted seen set)."""
         return os.path.join(self.root, "seen", "seed")
 
     # -- write ----------------------------------------------------------------
@@ -200,6 +202,10 @@ class CheckpointStore:
         return reader.parquet(*paths)
 
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
+        """Round ``rnd``'s ``name`` table.  Round -1's frontier is the seed
+        dir: the bootstrap's admitted seeds are round 0's frontier."""
+        if rnd < 0 and name == "frontier":
+            return self._parquet(spark, self.seed_seen_dir())
         return self._parquet(spark, os.path.join(self.round_dir(rnd), name))
 
     SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
@@ -232,11 +238,11 @@ class CheckpointStore:
         A round whose budget did not bind (politeness fast path) writes no
         seen delta: its next frontier is exactly its new admits, so its
         frontier dir doubles as the delta.  The rule reads directories, not
-        manifests, so it also covers the round in progress — the engine
-        rebuilds its seen view after the round's frontier write and before
-        its commit.  Callers pass the last committed round (or the round in
-        progress); a crashed round's leftover dirs sit above it and are
-        never read.
+        manifests; callers pass the last committed round (the engine reads
+        the seen set through round N-1 at the start of round N), so a
+        crashed round's leftover dirs sit above it and are never read.
+        The seed dir holds the bootstrap's frontier columns (it is round
+        0's frontier); the select keeps ``SEEN_COLS``.
 
         ``exclude_compacted=True`` skips the seed dir — the engine uses it
         once the compacted set is read separately as a BUCKETED table

@@ -4,6 +4,7 @@ resume-after-compaction equivalence."""
 import os
 
 from searchgov_spider_spark.crawl import CrawlEngine, CrawlPolicy, reference_crawl
+from searchgov_spider_spark.crawl import engine as engine_mod
 from searchgov_spider_spark.storage.tables import CheckpointStore
 from searchgov_spider_spark.synth import webgen
 from searchgov_spider_spark.synth.spark_gen import PAGES_SCHEMA
@@ -115,7 +116,7 @@ def test_compacted_seen_bucketed_anti_join_no_seen_exchange(spark, tmp_path):
     assert {r["url_canon"] for r in again.collect()} == plain_urls
 
 
-def test_auto_compaction_fires_mid_crawl_and_preserves_visited_set(spark, tmp_path):
+def test_auto_compaction_fires_mid_crawl_and_preserves_visited_set(spark, tmp_path, monkeypatch):
     """T2 auto-compaction policy: with the delta threshold lowered, the
     engine compacts accumulated seen deltas in the maintenance window
     BETWEEN rounds of one long crawl, and the final visited set and BFS
@@ -123,9 +124,9 @@ def test_auto_compaction_fires_mid_crawl_and_preserves_visited_set(spark, tmp_pa
     pages = spark.createDataFrame(webgen.pages_pandas(N_PAGES, N_HOSTS), schema=PAGES_SCHEMA)
     robots = spark.createDataFrame(webgen.robots_pandas(N_HOSTS))
     policy = CrawlPolicy(allowed_domains=[webgen.host_name(0)], depth_limit=20)
+    monkeypatch.setattr(engine_mod, "AUTO_COMPACT_DELTAS", 3)
     engine = CrawlEngine(
-        spark, pages, robots, policy, str(tmp_path / "ckpt"),
-        bloom_shards=4, bloom_bits=1 << 14, auto_compact_deltas=3,
+        spark, pages, robots, policy, str(tmp_path / "ckpt"), bloom_shards=4, bloom_bits=1 << 14
     )
     run = engine.run([webgen.page_url(0, 0)], max_rounds=64)
     assert engine.compactions, "threshold 3 must trigger at least one compaction"

@@ -6,6 +6,7 @@ per-URL depths, FIFO discovery order, and byte-identical extracted text.
 """
 
 import os
+import re
 import shutil
 
 import pytest
@@ -144,7 +145,9 @@ def test_resume_reproduces_visited_set(spark, web, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "round_seconds,crashed", [(3600.0, 2), (8.0, 5)], ids=["fast", "politeness-bound"]
+    "round_seconds,crashed",
+    [(3600.0, 2), (8.0, 5), (3600.0, 0)],
+    ids=["fast", "politeness-bound", "round-0"],
 )
 def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, crashed):
     """A crash after a round wrote its tables but before its manifest
@@ -152,7 +155,8 @@ def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, cra
     crashed round's directories, and resume redoes the round to the
     reference BFS.  The fast crawl's crashed round left a frontier dir that
     doubles as its seen delta; the politeness-bound one (8 fetches per host
-    per round) left a separate seen delta."""
+    per round) left a separate seen delta.  With round 0 uncommitted
+    nothing is committed, and resume bootstraps again."""
     policy = POLICIES["full-depth20"]
     pages_df, robots_df = web
     start = [webgen.page_url(0, 0)]
@@ -177,6 +181,27 @@ def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, cra
     assert {(r["url_canon"], r["depth"]) for r in seen.collect()} == set(oracle.depth.items())
     assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
     assert {r["url"] for r in resumed.documents(spark).select("url").collect()} == oracle.fetched
+
+
+def test_fresh_run_refuses_a_used_checkpoint_dir(spark, web, tmp_path):
+    """A fresh run (``resume=False``) into a directory holding another
+    crawl's committed rounds raises naming the directory, and leaves that
+    crawl's rounds and documents as they were."""
+    pages_df, robots_df = web
+    ckpt = str(tmp_path / "used")
+    start = [webgen.page_url(0, 0)]
+    first = CrawlEngine(
+        spark, pages_df, robots_df, POLICIES["full-depth20"], ckpt, bloom_shards=4, bloom_bits=1 << 14
+    )
+    first.run(start, max_rounds=3)
+    n_docs = first.store.read_documents(spark).count()
+    second = CrawlEngine(
+        spark, pages_df, robots_df, POLICIES["depth2"], ckpt, bloom_shards=4, bloom_bits=1 << 14
+    )
+    with pytest.raises(ValueError, match=re.escape(ckpt)):
+        second.run(start, max_rounds=4)
+    assert second.store.committed_rounds() == [0, 1, 2]
+    assert second.store.read_documents(spark).count() == n_docs
 
 
 def _assert_matches_oracle(spark, oracle, run):

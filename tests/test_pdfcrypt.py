@@ -2,6 +2,8 @@
 against published vectors, key-derivation algorithms, and end-to-end
 encrypted-document extraction through the pdfx entry points."""
 
+import re
+
 import pytest
 
 from searchgov_spider_spark.kernels import pdfcrypt as pc
@@ -118,6 +120,52 @@ class TestEncryptedDocuments:
             ["Flate body line."], tj_arrays=[["Sec", -30.0, "tion", -250.0, "9"]]
         )
         enc = pc.encrypt_pdf(base, variant=variant)
+        assert pdfx.extract_pdf_text(enc).text == pdfx.extract_pdf_text(base).text
+
+    @staticmethod
+    def _content_stream(pdf: bytes) -> bytes:
+        n = int(re.search(rb"/Contents\s+(\d+)\s+0\s+R", pdf).group(1))
+        ob = next(m.group(3) for m in pc._OBJ_RE.finditer(pdf) if int(m.group(1)) == n)
+        return pc._STREAM_SPLIT_RE.match(ob.strip()).group(2)
+
+    @staticmethod
+    def _layout(pdf: bytes, layout: str) -> bytes:
+        """The same document with its trailer entries moved.  "linearized"
+        puts /Encrypt and /ID in a first-page trailer at the top and leaves
+        the final trailer only /Size (the Fast Web View layout);
+        "xref-stream" turns every trailer into a /Type /XRef stream
+        dictionary (the PDF 1.5 layout)."""
+        m = re.search(rb"trailer\n<<(.*?)>>\n", pdf, re.S)
+        if layout.startswith("linearized"):
+            head = pdf.index(b"\n") + 1
+            size = re.search(rb"/Size\s+\d+", m.group(1)).group(0)
+            first = b"xref\n0 0\ntrailer\n<<" + m.group(1) + b">>\nstartxref\n0\n%%EOF\n"
+            last = b"trailer\n<< " + size + b" >>\n"
+            pdf = pdf[:head] + first + pdf[head : m.start()] + last + pdf[m.end() :]
+        if layout.endswith("xref-stream"):
+            num = iter(range(90, 100))
+            pdf = re.sub(
+                rb"trailer\n<<(.*?)>>\n",
+                lambda t: b"%d 0 obj\n<< /Type /XRef%s/Length 0 >>\nstream\n\nendstream\nendobj\n"
+                % (next(num), t.group(1)),
+                pdf,
+                flags=re.S,
+            )
+        return pdf
+
+    @pytest.mark.parametrize("layout", ["classic", "xref-stream", "linearized", "linearized-xref-stream"])
+    @pytest.mark.parametrize("variant", VARIANTS)
+    def test_encrypt_ref_in_page_text_is_not_the_trailer(self, variant, layout):
+        """Only a trailer's /Encrypt reference names the encryption
+        dictionary and is blanked: a page showing the same text decrypts
+        to its original content stream, whichever trailer layout holds
+        the reference."""
+        base = pdfx.make_simple_pdf(["see /Encrypt 9 0 R here"], compress=False)
+        enc = self._layout(pc.encrypt_pdf(base, variant=variant), layout)
+        dec = pc.decrypt_pdf(enc)
+        assert b"(see /Encrypt 9 0 R here)" in self._content_stream(base)
+        assert self._content_stream(dec) == self._content_stream(base)
+        assert pc.decrypt_pdf(dec) == dec
         assert pdfx.extract_pdf_text(enc).text == pdfx.extract_pdf_text(base).text
 
     def test_convert_pdf_end_to_end(self):

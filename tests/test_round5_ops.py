@@ -237,6 +237,36 @@ def test_trustrank_demotes_spam_farm_pagerank_inflates(spark):
     assert tr[9] == 0.0 and tr[1] > 0  # ...but TrustRank demotes it to zero
 
 
+def _trust(spark, seeds):
+    from searchgov_spider_spark.operators import graph
+
+    rows = graph.trustrank(
+        _edges(spark, [(0, 1), (1, 2), (2, 0)]), _nodes(spark, seeds), _nodes(spark, [0, 1, 2]), n_iter=3
+    ).collect()
+    return sorted((r.id, r.trust) for r in rows)
+
+
+def test_trustrank_duplicate_seed_counts_once(spark):
+    """A seed id listed twice is one seed: one row per node, scores as
+    with the id listed once."""
+    got = _trust(spark, [0, 0])
+    assert [i for i, _ in got] == [0, 1, 2]
+    assert got == _trust(spark, [0])
+
+
+def test_trustrank_seed_outside_nodes_is_ignored(spark):
+    """A seed id that is no node takes no share of the teleport mass: the
+    scores equal those of the node seeds alone."""
+    assert _trust(spark, [0, 99]) == _trust(spark, [0])
+    assert sum(t for _, t in _trust(spark, [0])) > 0.5
+
+
+def test_trustrank_without_seeds_scores_zero(spark):
+    """No seed that is a node: every node scores 0.0, no division by zero."""
+    assert _trust(spark, []) == [(0, 0.0), (1, 0.0), (2, 0.0)]
+    assert _trust(spark, [99]) == [(0, 0.0), (1, 0.0), (2, 0.0)]
+
+
 def test_trustrank_partition_invariance(spark):
     """Bit-identical rounded trust at different input partitionings (the
     repo-wide determinism contract)."""

@@ -71,8 +71,6 @@ def test_checkpoint_reads_start_no_job(spark, grouped_crawl):
         seen = engine.store.read_seen(spark, last)
         assert "seq" in frontier.schema.fieldNames()
         assert seen.schema.fieldNames() == engine.store.SEEN_COLS
-        view = engine._seen_view(last)
-        assert view.columns == engine.store.SEEN_COLS
     assert sc.statusTracker().getJobIdsForGroup("round-jobs-reads") == []
 
 

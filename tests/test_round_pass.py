@@ -97,7 +97,7 @@ def _engine(spark, tmp_path, kind, robots=None):
         pages = spark.createDataFrame(
             [(u, None, bytearray(b), "", "en") for u, b in PAGES.items()], schema=PAGES_SCHEMA
         )
-        return CrawlEngine(spark, pages, robots, POLICY, str(tmp_path / "ckpt"), fetch_partitions=4)
+        return CrawlEngine(spark, pages, robots, POLICY, str(tmp_path / "ckpt"))
     fetcher = HttpFetcher(transport_factory=_http_factory(dict(PAGES)))
     return CrawlEngine(spark, None, robots, POLICY, str(tmp_path / "ckpt"), fetcher=fetcher)
 
