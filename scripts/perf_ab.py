@@ -18,11 +18,22 @@ would measure each other.
 For every end-to-end metric of ``BENCHMARK.json`` it reports, per workload:
 the parent's median and interquartile range, the median of the per-pair
 change/parent ratios with a 95% percentile-bootstrap confidence interval,
-and in how many pairs the change was better.  Every run's result line,
-including ``correct``/``failed`` and the host-contention diagnostics
-``perfbench/run.py`` prints on stderr, is kept in the ``--out`` JSON.
-Progress and the table go to stderr; the last stdout line is the summary
-JSON.  Standard library only.
+in how many pairs the change was better, and a verdict (``verdict``):
+
+  * ``worse`` — the change's median is worse than the parent's by more
+    than the metric's bound;
+  * ``better`` — the change was better in at least nine tenths of the
+    pairs and the medians differ by more than the parent's interquartile
+    range;
+  * ``unresolved`` — the parent's own spread (IQR / median) exceeds the
+    bound, so a regression of the bound's size would not show, and not
+    every change run beats every parent run;
+  * ``within bound`` — otherwise.
+
+Every run's result line, including ``correct``/``failed`` and the
+host-contention diagnostics ``perfbench/run.py`` prints on stderr, is kept
+in the ``--out`` JSON.  Progress and the table go to stderr; the last
+stdout line is the summary JSON.  Standard library only.
 """
 
 from __future__ import annotations
@@ -84,6 +95,23 @@ def bootstrap_ci(ratios: list[float], rng: random.Random) -> tuple[float, float]
     return meds[int(0.025 * RESAMPLES)], meds[int(0.975 * RESAMPLES) - 1]
 
 
+def verdict(par: list[float], chg: list[float], lower: bool, bound: float) -> str:
+    """``worse``, ``better``, ``unresolved`` or ``within bound`` (module
+    docstring) for one metric's parent and change runs, paired by index."""
+    sign = 1 if lower else -1  # sign * (x - y) > 0: x is worse than y
+    par_med, chg_med = statistics.median(par), statistics.median(chg)
+    q1, q3 = quartiles(par)
+    if sign * (chg_med - par_med) > bound * abs(par_med):
+        return "worse"
+    wins = sum(sign * (p - c) > 0 for c, p in zip(chg, par))
+    if wins >= 0.9 * len(par) and sign * (par_med - chg_med) > q3 - q1:
+        return "better"
+    separated = max(chg) < min(par) if lower else min(chg) > max(par)
+    if q3 - q1 > bound * abs(par_med) and not separated:
+        return "unresolved"
+    return "within bound"
+
+
 def summarize(pairs: list[dict], metrics: list[dict], rng: random.Random) -> dict:
     out = {}
     for m in metrics:
@@ -103,6 +131,7 @@ def summarize(pairs: list[dict], metrics: list[dict], rng: random.Random) -> dic
             "pairs": len(pairs),
             "better": m["better"],
             "bound": m["bound"],
+            "verdict": verdict(par, chg, lower, m["bound"]),
         }
     return out
 
@@ -150,12 +179,13 @@ def main(argv=None) -> int:
             for name, s in summary.items():
                 log(f"{wl} {name:15s} parent {s['parent_median']:.4g} (IQR {s['parent_iqr']:.3g})  "
                     f"change/parent {s['ratio_median']:.3f} [{s['ratio_ci95'][0]:.3f}, {s['ratio_ci95'][1]:.3f}]  "
-                    f"better in {s['change_better_pairs']}/{s['pairs']} ({s['better']} is better)")
+                    f"better in {s['change_better_pairs']}/{s['pairs']} ({s['better']} is better)  "
+                    f"{s['verdict']} (bound {s['bound']})")
     if args.out:
         with open(args.out, "w") as f:
             json.dump(report, f, indent=1)
     print(json.dumps({wl: {"all_correct": r["all_correct"], **{
-        n: {k: s[k] for k in ("ratio_median", "ratio_ci95", "change_better_pairs", "pairs")}
+        n: {k: s[k] for k in ("ratio_median", "ratio_ci95", "change_better_pairs", "pairs", "verdict")}
         for n, s in r["summary"].items()}} for wl, r in report["workloads"].items()}), flush=True)
     return 0
 

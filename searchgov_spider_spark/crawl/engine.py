@@ -32,9 +32,9 @@ token-bucket steady state when the bucket capacity equals the round length
 (see politeness.static_budgets).
 
 Scale notes (10^10 frontier design point):
-  * no driver-side URL collections — only counts, offsets, Bloom bitmaps
-    and the host -> robots.txt map (collected once at init, then
-    broadcast; its size is hosts x rules bytes) cross the driver;
+  * no driver-side URL collections — only counts, offsets and the
+    host -> robots.txt map (collected once at init, then broadcast; its
+    size is hosts x rules bytes) cross the driver;
   * the pages side of the fetch join is repartitioned once on url_canon and
     persisted, so each round shuffles only the (politeness-bounded) fetch
     batch;
@@ -43,17 +43,18 @@ Scale notes (10^10 frontier design point):
   * per-round lineage is cut by the parquet checkpoint: the frontier and
     the seen set (a flat multi-path scan of the per-round seen deltas) are
     read at round start without a job (schema from a parquet footer) and
-    never cached — the round's anti-join is the seen set's one reader;
+    never cached — the round's anti-join is the seen set's one reader.
+    That exact anti-join is the round's only dedup: a Bloom prefilter
+    measured slower than it at every seen-set size and new-URL share
+    tried (docs/DESIGN.md, "Dedup crossover");
   * a small round (estimated admits under ``SMALL_BATCH_THRESHOLD``) sends
     its admitted links to one partition once: in-batch dedup, the
     broadcast anti-join against the seen set and the FIFO numbering window
     all run there with no further exchange.  A DataFrame is persisted only
-    when two actions read it (the pass; the admits when the Bloom fold
-    reads them too).
+    when two actions read it (the pass).
 
-Every job of round N — on the round thread and on the documents-write and
-Bloom-fold threads, which are ``InheritableThread``s — runs in Spark job
-group ``crawl-rN``.
+Every job of round N — on the round thread and on the documents-write
+thread, an ``InheritableThread`` — runs in Spark job group ``crawl-rN``.
 """
 
 from __future__ import annotations
@@ -71,7 +72,6 @@ from pyspark.sql import types as T
 from ..functions import udfs
 from ..storage.tables import CheckpointStore
 from . import politeness
-from .bloom import PartitionedBloom, merge_bitmaps_into
 from .frontier import (
     dedup_against_seen,
     dedup_first_in_batch,
@@ -87,7 +87,6 @@ from .seqno import (
 )
 
 FRONTIER_COLS = ["url_canon", "url_hash", "host", "depth", "seq", "source_url"]
-SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
 
 # Auto-compaction (T2): once this many seen-delta directories have
 # accumulated since the last compaction, the engine compacts them into the
@@ -133,15 +132,15 @@ class CrawlEngine:
         bloom_bits: int = 1 << 20,
         bloom_min_seen: int = 500_000,
     ):
+        """``bloom_shards``, ``bloom_bits`` and ``bloom_min_seen`` do
+        nothing: every round dedups by the exact anti-join against the seen
+        set.  They stay accepted for callers written against the engine
+        that sized and switched on a Bloom prefilter."""
         self.spark = spark
         self.policy = policy
         self.store = CheckpointStore(checkpoint_dir)
         self.round_seconds = round_seconds
         self.default_budget = max(1, int(round_seconds / politeness.DEFAULT_CRAWL_DELAY))
-        self.bloom_shards = bloom_shards
-        self.bloom_bits = bloom_bits
-        self.bloom_min_seen = bloom_min_seen
-        self._bloom_built = False
         # the compacted seen set's bucketed scan, None before any compaction
         # (set per run() from the checkpoint layout)
         self._seen_bucketed = None
@@ -260,7 +259,7 @@ class CrawlEngine:
         return src.mapInArrow(_pass, udfs.CRAWL_PASS_SCHEMA)
 
     # -- one round ---------------------------------------------------------------
-    def _run_round(self, rnd: int, bloom: PartitionedBloom, next_seq: int, frontier_hint: int) -> dict:
+    def _run_round(self, rnd: int, next_seq: int, frontier_hint: int) -> dict:
         """Round ``rnd`` over the committed checkpoint: its frontier is the
         one round ``rnd - 1`` wrote (round 0: the seed dir) and its seen
         deltas are ``read_seen`` through round ``rnd - 1``, beside the
@@ -351,24 +350,7 @@ class CrawlEngine:
         small = frontier_hint * 8 < SMALL_BATCH_THRESHOLD
         links = pass_candidates(passed, self.policy)
         candidates = dedup_first_in_batch(links.repartition(1) if small else links, ["parent_seq", "pos"])
-        # Bloom prefiltering pays once the seen set is large (the anti-join
-        # shuffle it avoids outweighs the probe); below the threshold the
-        # plain anti-join is cheaper.  next_seq == |seen| by construction.
-        # On first crossing, the filter is (re)built COMPLETE from the full
-        # seen set — a Bloom with missing members would admit duplicates.
-        use_bloom = next_seq >= self.bloom_min_seen
-        if use_bloom and not self._bloom_built:
-            # the bloom must cover the FULL seen set: read_seen's default
-            # reads the compacted files as plain parquet beside the deltas.
-            # rows_hint = |seen| lets the build pick the shuffle-by-shard
-            # topology once the seen set is big enough that direct task
-            # emissions would flood the driver (merge_bitmaps_into docstring)
-            merge_bitmaps_into(bloom, self.store.read_seen(spark, rnd - 1), "url_hash", rows_hint=next_seq)
-            self._bloom_built = True
-        new_admits = dedup_against_seen(
-            spark, candidates, seen, bloom if use_bloom else None,
-            seen_bucketed=self._seen_bucketed,
-        )
+        new_admits = dedup_against_seen(spark, candidates, seen, None, seen_bucketed=self._seen_bucketed)
         admits_cache = None
         if small:
             new_admits = assign_seq_small(new_admits, ["parent_seq", "pos"], start=next_seq)
@@ -381,28 +363,6 @@ class CrawlEngine:
             new_admits, _, admits_cache = assign_seq_bucketed(
                 new_admits.withColumn("_pid", pid), ["parent_seq", "pos"], start=next_seq
             )
-        # Incremental Bloom fold OVERLAPPED with the frontier/documents
-        # writes: it reads only url_hash (seqs are irrelevant to membership)
-        # from a cache the frontier write shares — the bucketed assigner's
-        # pre-window cache, else the admits persisted here, the one case a
-        # second action reads them.  The join before this round returns
-        # keeps the probe-ordering invariant: round n+1's prefilter never
-        # runs before round n's admits are folded in.
-        bloom_err: list[BaseException] = []
-        bloom_thread: InheritableThread | None = None
-        if self._bloom_built:
-            if admits_cache is None:
-                admits_cache = new_admits = new_admits.persist()
-            bloom_src = admits_cache
-
-            def _merge_bloom() -> None:
-                try:
-                    merge_bitmaps_into(bloom, bloom_src, "url_hash")
-                except BaseException as exc:  # re-raised on the round thread
-                    bloom_err.append(exc)
-
-            bloom_thread = InheritableThread(target=_merge_bloom, name=f"bloom-merge-{rnd}", daemon=True)
-            bloom_thread.start()
         mark("admission_plan")
 
         # state transition + checkpoint.  Fast path: everything in the
@@ -425,16 +385,14 @@ class CrawlEngine:
             )
             timings["frontier_parquet"] = round(time.monotonic() - t_fw, 3)
         finally:
-            # ALWAYS re-join the concurrent writes/folds — if the frontier
-            # write raised, the side threads' own failures must not be
-            # dropped silently (and their cached inputs must not be
-            # unpersisted under them).
+            # ALWAYS re-join the concurrent documents write — if the
+            # frontier write raised, its own failure must not be dropped
+            # silently (and its cached input must not be unpersisted under
+            # it).
             t_join = time.monotonic()
             docs_thread.join()
-            if bloom_thread is not None:
-                bloom_thread.join()
-            # residual wait on the overlapped documents write / bloom fold
-            # beyond the frontier write's own job (fixed-cost accounting)
+            # residual wait on the overlapped documents write beyond the
+            # frontier write's own job (fixed-cost accounting)
             timings["write_join_wait"] = round(time.monotonic() - t_join, 3)
         if docs_err:
             raise docs_err[0]
@@ -453,11 +411,10 @@ class CrawlEngine:
         # doubles as the delta.
         if budget_binds:
             written = self.store.read_table(self.spark, rnd, "frontier")
-            self.store.write_seen_delta(written.filter(F.col("seq") >= next_seq).select(*SEEN_COLS), rnd)
-        if bloom_thread is not None and bloom_err:
-            # (already joined in the write's finally; usually ~0 residual —
-            # the fold ran concurrently with the frontier/documents writes)
-            raise bloom_err[0]
+            delta = written.filter(F.col("seq") >= next_seq).select(*self.store.SEEN_COLS)
+            self.store.write_seen_delta(delta, rnd)
+        # the key keeps its name for the benchmark's trace; it times only
+        # the seen-delta write of a budget-binding round
         mark("seen_bloom")
 
         if budget_binds:
@@ -519,13 +476,10 @@ class CrawlEngine:
             next_seq = manifest["next_seq"]
             frontier_hint = manifest.get("remaining", 0)
         self._seen_bucketed = self.store.read_seen_bucketed(spark)
-        # built lazily (complete) once the seen set crosses bloom_min_seen
-        bloom = PartitionedBloom(self.bloom_shards, self.bloom_bits)
-        self._bloom_built = False
 
         for rnd in range(start_round, start_round + max_rounds):
             with job_group(spark.sparkContext, f"crawl-r{rnd}", f"crawl round {rnd}"):
-                metrics = self._run_round(rnd, bloom, next_seq, frontier_hint)
+                metrics = self._run_round(rnd, next_seq, frontier_hint)
                 next_seq = metrics["next_seq"]
                 frontier_hint = metrics["remaining"]
                 t_commit = time.monotonic()
@@ -551,8 +505,7 @@ class CrawlEngine:
         Runs strictly AFTER ``commit_round`` — compaction only merges
         committed deltas, and a crash mid-compaction leaves a readable seen
         set that resume tolerates (``compact_seen``'s atomic-swap
-        ordering).  The Bloom filter is membership-based, so it stays valid
-        across the rewrite.
+        ordering).
         """
         pending = len(self.store._seen_paths(rnd, include_seed=False))
         if pending < AUTO_COMPACT_DELTAS:

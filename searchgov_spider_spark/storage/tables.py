@@ -407,4 +407,4 @@ class CheckpointStore:
                 paths.append(p)
         if not paths:
             return None
-        return spark.read.parquet(*paths)
+        return self._parquet(spark, *paths)

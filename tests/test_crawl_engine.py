@@ -214,16 +214,15 @@ def _assert_matches_oracle(spark, oracle, run):
 
 
 @pytest.mark.parametrize("round_seconds", [3600.0, 8.0], ids=["fast", "politeness-bound"])
-def test_bloom_branch_matches_oracle(spark, web, tmp_path, round_seconds):
-    """``bloom_min_seen=0``: round 0 builds the complete Bloom filter and
-    every round probes it and folds its admits in on the fold thread.  The
-    politeness-bound crawl (8 fetches per host per round) writes separate
-    seen deltas."""
+def test_bloom_params_are_inert(spark, web, tmp_path, round_seconds):
+    """``bloom_min_seen=0`` (with the Bloom sizing parameters) leaves the
+    crawl the exact anti-join crawl: it matches the reference BFS, and
+    only the politeness-bound crawl (8 fetches per host per round) writes
+    separate seen deltas."""
     oracle, run, engine = run_both(
         spark, web, POLICIES["full-depth20"], tmp_path / "bloom",
         bloom_min_seen=0, round_seconds=round_seconds,
     )
-    assert engine._bloom_built
     deltas = [r for r in range(run.rounds) if os.path.isdir(engine.store.seen_delta_dir(r))]
     assert bool(deltas) == (round_seconds == 8.0)
     _assert_matches_oracle(spark, oracle, run)
