@@ -7,7 +7,7 @@ each round is one micro-batch over the frontier —
   partition (``round_pass``): fetch (S4/J4) + extraction (X1-X18) +
   document metadata + per-link admission kernels and robots verdict (F1,
   F2, F6) -> JVM admission filters + dedup (F2-F7) -> global FIFO seq
-  assignment (O1) -> frontier/seen checkpoint (T1) -> metrics (A7).
+  assignment (O1) -> frontier/deferred checkpoint (T1) -> metrics (A7).
 
 The pass is the round's only Python node: every Python node costs each of
 its tasks a Python runner start (~250 ms of worker CPU, mostly
@@ -19,13 +19,15 @@ read the persisted pass; neither has a Python node of its own.
 
 Round state lives in parquet round-directories committed by manifest
 (storage.tables.CheckpointStore) so a killed run resumes from the last
-committed round with an identical visited-URL set (north_rule).  The
-committed checkpoint is a round's only input: round N reads the frontier
-of round N-1 (``read_table``; round -1's is the seed dir the bootstrap
-wrote) and the seen set through round N-1 (``read_seen``), so starting,
-resuming and
-continuing a crawl run the same loop body.  A fresh run refuses a
-directory that already holds a committed round.
+committed round with an identical visited-URL set (north_rule).  Every
+round writes its new admits, and only those, as its ``frontier`` dir: that
+dir is the round's seen delta.  A round whose politeness budget binds also
+writes the frontier rows it did not select as ``deferred``.  The committed
+checkpoint is a round's only input: round N reads round N-1's frontier
+and deferred dirs (``read_frontier``; round -1's frontier is the seed dir
+the bootstrap wrote) and the seen set through round N-1 (``read_seen``),
+so starting, resuming and continuing a crawl run the same loop body.  A
+fresh run refuses a directory that already holds a committed round.
 
 Politeness: per-host budget = floor(round_seconds / crawl_delay), the exact
 token-bucket steady state when the bucket capacity equals the round length
@@ -261,10 +263,10 @@ class CrawlEngine:
     # -- one round ---------------------------------------------------------------
     def _run_round(self, rnd: int, next_seq: int, frontier_hint: int) -> dict:
         """Round ``rnd`` over the committed checkpoint: its frontier is the
-        one round ``rnd - 1`` wrote (round 0: the seed dir) and its seen
-        deltas are ``read_seen`` through round ``rnd - 1``, beside the
-        compacted bucketed scan once there is one.  Returns the round's
-        metrics."""
+        one round ``rnd - 1`` left (``read_frontier``; round 0: the seed
+        dir) and its seen deltas are ``read_seen`` through round
+        ``rnd - 1``, beside the compacted bucketed scan once there is one.
+        Returns the round's metrics."""
         t0 = time.monotonic()
         timings: dict[str, float] = {}
         _last = [t0]
@@ -275,7 +277,7 @@ class CrawlEngine:
             _last[0] = now
 
         spark = self.spark
-        frontier = self.store.read_table(spark, rnd - 1, "frontier")
+        frontier = self.store.read_frontier(spark, rnd - 1)
         seen = self.store.read_seen(spark, rnd - 1, exclude_compacted=self._seen_bucketed is not None)
 
         # politeness-capped FIFO selection (static budgets; see module doc).
@@ -305,8 +307,7 @@ class CrawlEngine:
         # would carry the same observation node — under concurrent execution
         # whichever query serves from cache reports an empty observation row
         # (toPyRow assertion).  n_selected is derived instead: the frontier
-        # hint in the fast path (selection is the identity), a cached count
-        # in the binding path.
+        # hint less the rows the round defers.
         batch = selected.repartition(parts, F.col("url_hash"))
         # the round's only Python node; the documents and frontier jobs
         # both read it from cache
@@ -365,25 +366,22 @@ class CrawlEngine:
             )
         mark("admission_plan")
 
-        # state transition + checkpoint.  Fast path: everything in the
-        # frontier was selected, so the next frontier is just the new admits.
+        # state transition + checkpoint.  The frontier dir holds the new
+        # admits and only those: it is the round's seen delta.  A binding
+        # budget also writes the frontier rows it did not select as
+        # `deferred`; the next round reads both (read_frontier).
         obs_adm = Observation()
-        admits_obs = new_admits.observe(obs_adm, F.count(F.lit(1)).alias("n")).select(*FRONTIER_COLS)
-        if budget_binds:
-            frontier_next = (
-                frontier.join(selected.select("seq"), "seq", "left_anti")
-                .select(*FRONTIER_COLS)
-                .unionByName(admits_obs)
-            )
-        else:
-            frontier_next = admits_obs
-        obs_frontier = Observation()
+        admits = new_admits.observe(obs_adm, F.count(F.lit(1)).alias("n")).select(*FRONTIER_COLS)
+        n_deferred = 0
         t_fw = time.monotonic()
         try:
-            self.store.write_table(
-                frontier_next.observe(obs_frontier, F.count(F.lit(1)).alias("n")), rnd, "frontier"
-            )
+            self.store.write_table(admits, rnd, "frontier")
             timings["frontier_parquet"] = round(time.monotonic() - t_fw, 3)
+            if budget_binds:
+                obs_def = Observation()
+                deferred = frontier.join(selected.select("seq"), "seq", "left_anti").select(*FRONTIER_COLS)
+                self.store.write_table(deferred.observe(obs_def, F.count(F.lit(1)).alias("n")), rnd, "deferred")
+                n_deferred = int(obs_def.get["n"])
         finally:
             # ALWAYS re-join the concurrent documents write — if the
             # frontier write raised, its own failure must not be dropped
@@ -396,26 +394,11 @@ class CrawlEngine:
             timings["write_join_wait"] = round(time.monotonic() - t_join, 3)
         if docs_err:
             raise docs_err[0]
-        remaining = int(obs_frontier.get["n"])
         n_admitted = int(obs_adm.get["n"])
         n_docs = int(obs_docs.get["n"])
-        # fast path: selection is the identity on the frontier (exact hint);
-        # binding path: count the persisted selection (cache-local)
-        n_selected = frontier_hint if not budget_binds else selected.count()
+        n_selected = frontier_hint - n_deferred
+        remaining = n_admitted + n_deferred
         mark("frontier_write")
-
-        # a binding budget defers part of the frontier, so the round's new
-        # admits need their own seen delta: the rows of the frontier just
-        # written numbered from next_seq on (every deferred row has a smaller
-        # seq).  Otherwise that frontier is exactly the new admits and
-        # doubles as the delta.
-        if budget_binds:
-            written = self.store.read_table(self.spark, rnd, "frontier")
-            delta = written.filter(F.col("seq") >= next_seq).select(*self.store.SEEN_COLS)
-            self.store.write_seen_delta(delta, rnd)
-        # the key keeps its name for the benchmark's trace; it times only
-        # the seen-delta write of a budget-binding round
-        mark("seen_bloom")
 
         if budget_binds:
             selected.unpersist()
@@ -455,8 +438,9 @@ class CrawlEngine:
         if last is not None:
             # refuse to resume from a checkpoint whose data files diverge
             # from their committed lineage (truncated/overwritten parquet
-            # would silently corrupt the visited set)
-            self.store.verify_round(last)
+            # in any round the seen set reads would silently corrupt the
+            # visited set)
+            self.store.verify_resume(last)
             manifest = self.store.read_manifest(last)
             if manifest.get("stop"):
                 run.rounds = last + 1

@@ -10,19 +10,22 @@ narrow so an Iceberg-backed implementation can drop in (append/overwrite +
 snapshot tag per round).
 
 Layout:
-    <root>/round_00000/frontier/        parquet (unfetched frontier entries)
+    <root>/round_00000/frontier/        parquet (this round's new admits: its
+                                        seen delta)
+    <root>/round_00000/deferred/        parquet (frontier rows a binding
+                                        budget left unselected; only rounds
+                                        whose budget bound)
     <root>/round_00000/documents/       parquet (this round's extracted docs)
     <root>/round_00000/manifest.json    commit marker {round, next_seq, counts}
-    <root>/seen/round_00000/            parquet delta of newly-seen url hashes
-                                        (only rounds whose budget bound)
     <root>/seen/seed/                   bootstrap seeds (round 0's frontier),
                                         later the compacted set with its
                                         _BUCKETS marker
 
-The directories alone define the seen set (``_seen_paths``): the seed dir,
-then for every round after the compaction watermark (``upto_round`` in the
-``_BUCKETS`` marker, -1 before any compaction) ``seen/round_N`` if it
-exists, else ``round_N/frontier``.
+Round N+1's frontier is round N's ``frontier`` plus its ``deferred``
+(``read_frontier``).  The directories alone define the seen set
+(``_seen_paths``): the seed dir, then ``round_N/frontier`` for every round
+after the compaction watermark (``upto_round`` in the ``_BUCKETS`` marker,
+-1 before any compaction).
 """
 
 from __future__ import annotations
@@ -52,7 +55,8 @@ class CheckpointStore:
         return os.path.join(self.round_dir(rnd), "manifest.json")
 
     def seen_delta_dir(self, rnd: int) -> str:
-        return os.path.join(self.root, "seen", f"round_{rnd:05d}")
+        """Round ``rnd``'s seen delta: its frontier dir (its new admits)."""
+        return os.path.join(self.round_dir(rnd), "frontier")
 
     def seed_seen_dir(self) -> str:
         """The bootstrap's admitted seeds: round 0's frontier and the seeds'
@@ -97,7 +101,7 @@ class CheckpointStore:
         }
 
     def round_lineage(self, rnd: int) -> dict:
-        """Lineage of every table this round wrote (incl. its seen delta)."""
+        """Lineage of every table this round wrote (its round dir)."""
         lineage = {}
         rd = self.round_dir(rnd)
         if os.path.isdir(rd):
@@ -105,9 +109,6 @@ class CheckpointStore:
                 entry = self._dir_lineage(os.path.join(rd, name))
                 if entry is not None:
                     lineage[name] = entry
-        seen = self._dir_lineage(self.seen_delta_dir(rnd))
-        if seen is not None:
-            lineage["seen_delta"] = seen
         return lineage
 
     def commit_round(self, rnd: int, manifest: dict) -> None:
@@ -135,16 +136,12 @@ class CheckpointStore:
         if lineage is None:  # pre-lineage checkpoint (older layout): nothing to check
             return
         for table, entry in lineage.items():
-            base = (
-                self.seen_delta_dir(rnd)
-                if table == "seen_delta"
-                else os.path.join(self.round_dir(rnd), table)
-            )
+            base = os.path.join(self.round_dir(rnd), table)
             if not os.path.isdir(base):
-                # whole table dir absent = declared GC (compact_seen merges
-                # delta dirs away, expire_rounds drops old frontier payloads);
-                # partial damage inside an EXISTING dir is what corruption
-                # looks like, and is never legitimate
+                # whole table dir absent = declared GC (expire_rounds drops
+                # old frontier and deferred payloads); partial damage inside
+                # an EXISTING dir is what corruption looks like, and is never
+                # legitimate
                 continue
             for f in entry["files"]:
                 fp = os.path.join(base, f["file"])
@@ -156,11 +153,18 @@ class CheckpointStore:
                         f"round {rnd}: {fp} is {size} bytes, manifest committed {f['bytes']}"
                     )
 
+    def verify_resume(self, last: int) -> None:
+        """``verify_round`` on every round a resume from round ``last``
+        reads: each round whose frontier dir is part of the seen set (after
+        the compaction watermark), and ``last``, whose frontier and
+        deferred dirs are the next round's frontier."""
+        for rnd in range(min(self._first_delta_round(), last), last + 1):
+            self.verify_round(rnd)
+
     def drop_uncommitted(self, rnd: int) -> None:
         """Remove a partially-written round (crash cleanup before rerun)."""
         if not os.path.exists(self.manifest_path(rnd)):
             shutil.rmtree(self.round_dir(rnd), ignore_errors=True)
-            shutil.rmtree(self.seen_delta_dir(rnd), ignore_errors=True)
 
     # -- read -----------------------------------------------------------------
     def committed_rounds(self) -> list[int]:
@@ -202,30 +206,35 @@ class CheckpointStore:
         return reader.parquet(*paths)
 
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
-        """Round ``rnd``'s ``name`` table.  Round -1's frontier is the seed
-        dir: the bootstrap's admitted seeds are round 0's frontier."""
-        if rnd < 0 and name == "frontier":
-            return self._parquet(spark, self.seed_seen_dir())
         return self._parquet(spark, os.path.join(self.round_dir(rnd), name))
 
+    def read_frontier(self, spark: SparkSession, rnd: int) -> DataFrame:
+        """The frontier round ``rnd`` leaves to round ``rnd + 1``: its new
+        admits and, when its budget bound, its deferred rows.  Round -1's
+        is the seed dir: the bootstrap's admitted seeds are round 0's
+        frontier."""
+        if rnd < 0:
+            return self._parquet(spark, self.seed_seen_dir())
+        tables = (os.path.join(self.round_dir(rnd), name) for name in ("frontier", "deferred"))
+        return self._parquet(spark, *(p for p in tables if os.path.isdir(p)))
+
     SEEN_COLS = ["url_hash", "url_canon", "depth", "seq"]
+
+    def _first_delta_round(self) -> int:
+        """The first round whose frontier dir is part of the seen set: the
+        one after the compaction watermark, 0 before any compaction."""
+        info = self.bucketed_seen_info()
+        return info["upto_round"] + 1 if info is not None else 0
 
     def _seen_paths(self, upto_round: int, include_seed: bool = True) -> list[str]:
         """The directories holding the seen set through ``upto_round``: the
         seed dir (bootstrap seeds, or the compacted set once ``compact_seen``
-        has run), then for each round after the compaction watermark its
-        seen delta if it has one, else its frontier dir.  Existence alone
-        decides, with no manifest read: a round's frontier equals its new
-        admits exactly when the round writes no separate delta."""
-        info = self.bucketed_seen_info()
-        start = info["upto_round"] + 1 if info is not None else 0
-        paths = [self.seed_seen_dir()] if include_seed and os.path.isdir(self.seed_seen_dir()) else []
-        for r in range(start, upto_round + 1):
-            for p in (self.seen_delta_dir(r), os.path.join(self.round_dir(r), "frontier")):
-                if os.path.isdir(p):
-                    paths.append(p)
-                    break
-        return paths
+        has run), then the frontier dir (new admits) of each round after the
+        compaction watermark.  Existence alone decides, with no manifest
+        read."""
+        seed = [self.seed_seen_dir()] if include_seed else []
+        deltas = (self.seen_delta_dir(r) for r in range(self._first_delta_round(), upto_round + 1))
+        return [p for p in (*seed, *deltas) if os.path.isdir(p)]
 
     def read_seen(
         self,
@@ -235,12 +244,13 @@ class CheckpointStore:
     ) -> DataFrame | None:
         """The seen set through ``upto_round``, read from ``_seen_paths``.
 
-        A round whose budget did not bind (politeness fast path) writes no
-        seen delta: its next frontier is exactly its new admits, so its
-        frontier dir doubles as the delta.  The rule reads directories, not
-        manifests; callers pass the last committed round (the engine reads
-        the seen set through round N-1 at the start of round N), so a
-        crashed round's leftover dirs sit above it and are never read.
+        Every round's frontier dir holds its new admits and only those (a
+        binding budget's unselected rows go to its ``deferred`` dir), so the
+        frontier dir is the round's seen delta.  The rule reads
+        directories, not manifests; callers pass the last committed round
+        (the engine reads the seen set through round N-1 at the start of
+        round N), so a crashed round's leftover dirs sit above it and are
+        never read.
         The seed dir holds the bootstrap's frontier columns (it is round
         0's frontier); the select keeps ``SEEN_COLS``.
 
@@ -319,23 +329,24 @@ class CheckpointStore:
     # -- maintenance ------------------------------------------------------------
     def compact_seen(self, spark: SparkSession, upto_round: int, buckets: int = 32) -> int:
         """Merge the seen set through ``upto_round`` (``_seen_paths``) into
-        one hash-BUCKETED parquet table that replaces the seed dir, and
-        remove the merged seen-delta dirs.  A frontier dir that served as a
-        delta stays: it is still its round's frontier.
+        one hash-BUCKETED parquet table that replaces the seed dir.  The
+        merged frontier dirs stay (the last one is the next round's input);
+        from the swap on the watermark hides them from the seen set, and
+        ``expire_rounds`` may drop them.
 
-        Bounds file-count growth over long crawls (SURVEY.md §2.7 T2 /
-        DESIGN.md known gap) AND writes the result in Spark's bucketed-file
+        Bounds the seen read's path count over long crawls (SURVEY.md §2.7
+        T2 / DESIGN.md known gap) AND writes the result in Spark's bucketed-file
         layout (bucket id per file name, sorted within buckets) plus a
         ``_BUCKETS`` marker, so subsequent rounds' dedup anti-joins read the
         seen side pre-partitioned with no Exchange (``read_seen_bucketed``).
         The marker records ``upto_round`` as the watermark below which
         ``_seen_paths`` reads no round dir.  Safe ordering: the compacted
-        set is written to a temp dir, atomically swapped in as the seed dir,
-        and only then are the old delta dirs removed — from the swap on the
-        watermark hides them, so a crash at any later point leaves the same
-        seen set.  The bucketed files are plain parquet, so every
-        non-bucketed reader (``read_seen``, resume equivalence) is
-        unaffected.  Returns the number of delta dirs merged.
+        set is written to a temp dir and renamed in as the seed dir, and no
+        merged round dir is removed, so a crash before the swap leaves the
+        old seen set and one after it the same set compacted.  The bucketed
+        files are plain parquet, so every non-bucketed reader
+        (``read_seen``, resume equivalence) is unaffected.  Returns the
+        number of delta dirs merged.
         """
         from pyspark.sql import functions as F
 
@@ -368,20 +379,19 @@ class CheckpointStore:
             os.replace(self.seed_seen_dir(), old_seed)
         os.replace(tmp, self.seed_seen_dir())
         shutil.rmtree(old_seed, ignore_errors=True)
-        for p in merged:
-            if os.path.basename(p) != "frontier":
-                shutil.rmtree(p, ignore_errors=True)
         return len(merged)
 
     def expire_rounds(self, keep_last: int) -> int:
         """Orphan-state GC (T2, reference SCHEDULER_KEY_ORPHAN_AGE):
-        drop the frontier payloads of rounds older than the last
-        ``keep_last`` committed rounds, except a frontier dir that still
-        holds part of the seen set (``_seen_paths``).  Documents and
-        manifests are kept (they are the output / audit trail); resume only
-        ever needs the last committed round, so ``keep_last`` is clamped to
-        >= 1 — the last committed round's frontier is always retained.
-        Returns the number of directories removed.
+        drop the deferred and frontier payloads of rounds older than the
+        last ``keep_last`` committed rounds, except a frontier dir that
+        still holds part of the seen set (``_seen_paths``): before any
+        compaction that is every frontier dir.  Documents and manifests are
+        kept (they are the output / audit trail); resume reads the seen set
+        and only the last committed round's frontier, so ``keep_last`` is
+        clamped to >= 1 — the last committed round's frontier and deferred
+        dirs are always retained.  Returns the number of directories
+        removed.
         """
         keep_last = max(1, keep_last)
         rounds = self.committed_rounds()
@@ -390,10 +400,11 @@ class CheckpointStore:
         live = set(self._seen_paths(rounds[-1], include_seed=False))
         removed = 0
         for r in rounds[:-keep_last]:
-            p = os.path.join(self.round_dir(r), "frontier")
-            if os.path.isdir(p) and p not in live:
-                shutil.rmtree(p, ignore_errors=True)
-                removed += 1
+            for name in ("frontier", "deferred"):
+                p = os.path.join(self.round_dir(r), name)
+                if os.path.isdir(p) and p not in live:
+                    shutil.rmtree(p, ignore_errors=True)
+                    removed += 1
         return removed
 
     def read_documents(self, spark: SparkSession, upto_round: int | None = None) -> DataFrame | None:

@@ -162,50 +162,54 @@ def test_expire_rounds_keeps_resume_state(spark, tmp_path):
 
 
 def test_expire_rounds_before_compaction_keeps_seen_set(spark, tmp_path):
-    """Before any compaction a fast-path round's frontier dir IS its seen
-    delta.  On a politeness-bound crawl, which mixes both round kinds,
-    ``expire_rounds`` may drop only the frontier dirs of rounds that wrote a
-    separate seen delta, and the seen set reads back unchanged."""
+    """Before any compaction every round's frontier dir is its seen delta.
+    On a politeness-bound crawl, which mixes rounds with and without a
+    deferred backlog, ``expire_rounds`` drops only the deferred dirs of the
+    rounds before the last, and the seen set reads back unchanged."""
     engine, run, _ = _run_partial(spark, tmp_path, max_rounds=64, round_seconds=8.0)
     store = engine.store
     rounds = store.committed_rounds()
     last = rounds[-1]
-    with_delta = {r for r in rounds if os.path.isdir(store.seen_delta_dir(r))}
-    assert with_delta and set(rounds[:-1]) - with_delta, "crawl must mix both round kinds"
+    deferred = {r for r in rounds if os.path.isdir(os.path.join(store.round_dir(r), "deferred"))}
+    assert deferred - {last} and set(rounds[:-1]) - deferred, "crawl must mix both round kinds"
     before = sorted(r["url_canon"] for r in store.read_seen(spark, last).collect())
 
-    assert store.expire_rounds(keep_last=1) == len(with_delta - {last})
+    assert store.expire_rounds(keep_last=1) == len(deferred - {last})
     for r in rounds:
-        kept = os.path.isdir(os.path.join(store.round_dir(r), "frontier"))
-        assert kept == (r == last or r not in with_delta), r
+        assert os.path.isdir(os.path.join(store.round_dir(r), "frontier")), r
+        kept = os.path.isdir(os.path.join(store.round_dir(r), "deferred"))
+        assert kept == (r == last and r in deferred), r
     assert sorted(r["url_canon"] for r in store.read_seen(spark, last).collect()) == before
 
 
 def test_manifest_records_per_partition_lineage(spark, tmp_path):
     """Every committed round's manifest carries per-file lineage (name,
     bytes, footer row count) whose totals match the tables on disk — the
-    Iceberg-manifest analog the north_rule's checkpoint contract names."""
-    engine, run, _ = _run_partial(spark, tmp_path, max_rounds=2)
-    store = engine.store
-    for rnd in store.committed_rounds():
-        manifest = store.read_manifest(rnd)
-        lineage = manifest["lineage"]
-        assert "frontier" in lineage and "documents" in lineage
-        for table, entry in lineage.items():
-            assert entry["rows"] == sum(f["rows"] for f in entry["files"])
-            assert entry["bytes"] == sum(f["bytes"] for f in entry["files"])
-            base = (
-                store.seen_delta_dir(rnd)
-                if table == "seen_delta"
-                else os.path.join(store.round_dir(rnd), table)
-            )
-            on_disk = sorted(f for f in os.listdir(base) if f.endswith(".parquet"))
-            assert on_disk == [f["file"] for f in entry["files"]]
-        # row counts agree with what Spark reads back
-        docs = spark.read.parquet(os.path.join(store.round_dir(rnd), "documents"))
-        assert docs.count() == lineage["documents"]["rows"]
-        # frontier rows == the metrics' remaining count
-        assert lineage["frontier"]["rows"] == manifest["remaining"]
+    Iceberg-manifest analog the north_rule's checkpoint contract names.
+    On a fast and on a politeness-bound crawl, the frontier rows plus the
+    deferred rows are the metrics' remaining count."""
+    bound_rounds = 0
+    for name, kw in (("fast", {"max_rounds": 2}), ("politeness-bound", {"max_rounds": 4, "round_seconds": 8.0})):
+        engine, run, _ = _run_partial(spark, tmp_path / name, **kw)
+        store = engine.store
+        for rnd in store.committed_rounds():
+            manifest = store.read_manifest(rnd)
+            lineage = manifest["lineage"]
+            assert "frontier" in lineage and "documents" in lineage
+            for table, entry in lineage.items():
+                assert entry["rows"] == sum(f["rows"] for f in entry["files"])
+                assert entry["bytes"] == sum(f["bytes"] for f in entry["files"])
+                base = os.path.join(store.round_dir(rnd), table)
+                on_disk = sorted(f for f in os.listdir(base) if f.endswith(".parquet"))
+                assert on_disk == [f["file"] for f in entry["files"]]
+            # row counts agree with what Spark reads back
+            docs = spark.read.parquet(os.path.join(store.round_dir(rnd), "documents"))
+            assert docs.count() == lineage["documents"]["rows"]
+            # frontier (new admits) + deferred rows == the metrics' remaining count
+            deferred = lineage.get("deferred", {"rows": 0})["rows"]
+            assert lineage["frontier"]["rows"] + deferred == manifest["remaining"]
+            bound_rounds += "deferred" in lineage
+    assert bound_rounds, "the politeness-bound crawl must defer in some round"
 
 
 def test_resume_refuses_corrupted_checkpoint(spark, tmp_path):
@@ -227,6 +231,25 @@ def test_resume_refuses_corrupted_checkpoint(spark, tmp_path):
     with open(victim, "r+b") as fh:
         fh.truncate(os.path.getsize(victim) // 2)
     with pytest.raises(CheckpointCorrupt, match="bytes"):
+        engine.run([webgen.page_url(0, 0)], max_rounds=1, resume=True)
+
+
+def test_resume_refuses_a_missing_file_in_an_earlier_round(spark, tmp_path):
+    """The seen set reads the frontier dir of every round after the
+    compaction watermark, so resume verifies each of them, not only the
+    last: a data file deleted from round 0's frontier of a 3-round crawl
+    fails the resume instead of dropping its URLs from the seen set."""
+    import pytest
+
+    from searchgov_spider_spark.storage.tables import CheckpointCorrupt
+
+    engine, run, _ = _run_partial(spark, tmp_path, max_rounds=3)
+    store = engine.store
+    assert store.last_committed() == 2
+    frontier_dir = os.path.join(store.round_dir(0), "frontier")
+    victim = next(f for f in sorted(os.listdir(frontier_dir)) if f.endswith(".parquet"))
+    os.remove(os.path.join(frontier_dir, victim))
+    with pytest.raises(CheckpointCorrupt, match="round 0: missing data file"):
         engine.run([webgen.page_url(0, 0)], max_rounds=1, resume=True)
 
 

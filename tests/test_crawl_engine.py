@@ -144,6 +144,25 @@ def test_resume_reproduces_visited_set(spark, web, tmp_path):
     assert {r["url"] for r in docs.select("url").collect()} == oracle.fetched
 
 
+def _assert_round_layout(engine, metrics):
+    """Every round of ``metrics`` wrote a frontier dir (its new admits);
+    exactly the rounds whose frontier outgrew the smallest host budget
+    wrote a ``deferred`` dir; and the crawl wrote nothing outside its
+    round dirs but the seed dir.  Returns the rounds with a deferred dir."""
+    store = engine.store
+    rounds = [m["round"] for m in metrics]
+    # round 0's frontier is the admitted seeds, a later round's what the
+    # round before it left
+    hints = [store._dir_lineage(store.seed_seen_dir())["rows"]] + [m["remaining"] for m in metrics[:-1]]
+    for r in rounds:
+        assert os.path.isdir(os.path.join(store.round_dir(r), "frontier")), r
+    deferred = [r for r in rounds if os.path.isdir(os.path.join(store.round_dir(r), "deferred"))]
+    assert deferred == [r for r, hint in zip(rounds, hints) if hint > engine.min_budget]
+    assert sorted(os.listdir(store.root)) == [os.path.basename(store.round_dir(r)) for r in rounds] + ["seen"]
+    assert os.listdir(os.path.join(store.root, "seen")) == ["seed"]
+    return deferred
+
+
 @pytest.mark.parametrize(
     "round_seconds,crashed",
     [(3600.0, 2), (8.0, 5), (3600.0, 0)],
@@ -153,10 +172,10 @@ def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, cra
     """A crash after a round wrote its tables but before its manifest
     commit: the seen set through the last committed round reads none of the
     crashed round's directories, and resume redoes the round to the
-    reference BFS.  The fast crawl's crashed round left a frontier dir that
-    doubles as its seen delta; the politeness-bound one (8 fetches per host
-    per round) left a separate seen delta.  With round 0 uncommitted
-    nothing is committed, and resume bootstraps again."""
+    reference BFS.  Every round left a frontier dir (its seen delta); the
+    politeness-bound crashed round (8 fetches per host per round) also left
+    a deferred dir, and no round wrote outside its round dir.  With round 0
+    uncommitted nothing is committed, and resume bootstraps again."""
     policy = POLICIES["full-depth20"]
     pages_df, robots_df = web
     start = [webgen.page_url(0, 0)]
@@ -165,15 +184,14 @@ def test_resume_after_uncommitted_round(spark, web, tmp_path, round_seconds, cra
         spark, pages_df, robots_df, policy, str(tmp_path / "crash"),
         round_seconds=round_seconds, bloom_shards=4, bloom_bits=1 << 14,
     )
-    engine.run(start, max_rounds=crashed + 1)
+    first = engine.run(start, max_rounds=crashed + 1)
     store = engine.store
-    assert os.path.isdir(store.seen_delta_dir(crashed)) == (round_seconds == 8.0)
+    assert (crashed in _assert_round_layout(engine, first.metrics)) == (round_seconds == 8.0)
     os.remove(store.manifest_path(crashed))
 
     files = store.read_seen(spark, crashed - 1).inputFiles()
     assert files
-    for d in (store.round_dir(crashed), store.seen_delta_dir(crashed)):
-        assert not any(os.path.abspath(d) + "/" in f for f in files), d
+    assert not any(os.path.abspath(store.round_dir(crashed)) + "/" in f for f in files)
 
     resumed = engine.run(start, max_rounds=64, resume=True)
     assert resumed.metrics[0]["round"] == crashed
@@ -218,13 +236,12 @@ def test_bloom_params_are_inert(spark, web, tmp_path, round_seconds):
     """``bloom_min_seen=0`` (with the Bloom sizing parameters) leaves the
     crawl the exact anti-join crawl: it matches the reference BFS, and
     only the politeness-bound crawl (8 fetches per host per round) writes
-    separate seen deltas."""
+    deferred dirs."""
     oracle, run, engine = run_both(
         spark, web, POLICIES["full-depth20"], tmp_path / "bloom",
         bloom_min_seen=0, round_seconds=round_seconds,
     )
-    deltas = [r for r in range(run.rounds) if os.path.isdir(engine.store.seen_delta_dir(r))]
-    assert bool(deltas) == (round_seconds == 8.0)
+    assert bool(_assert_round_layout(engine, run.metrics)) == (round_seconds == 8.0)
     _assert_matches_oracle(spark, oracle, run)
 
 

@@ -3,9 +3,10 @@
 The engine runs each round's jobs in job group ``crawl-r{rnd}``, on the
 round thread and on the documents-write thread it starts.  These tests
 count those jobs with the status tracker: every job carries its round, the
-Bloom parameters add no job, a warm fast-path round stays within its job
-and task budget at the benchmark's width, and reading a round's
-checkpoint starts no job.
+Bloom parameters add no job, a round whose politeness budget binds stays
+within its job budget, a warm fast-path round stays within its job and
+task budget at the benchmark's width, and reading a round's checkpoint
+starts no job.
 """
 
 import json
@@ -24,19 +25,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_PAGES, N_HOSTS, ROUNDS = 300, 3, 3
 
 
-def _crawl(spark, ckpt, **engine_kw):
-    """A 3-round crawl of the small generated web; returns the engine, the
-    run and, per round, how many jobs its ``crawl-r{rnd}`` group gained
-    (group names repeat across the session's crawls)."""
+def _crawl(spark, ckpt, rounds=ROUNDS, **engine_kw):
+    """A crawl of ``rounds`` rounds of the small generated web; returns the
+    engine, the run and, per round, how many jobs its ``crawl-r{rnd}``
+    group gained (group names repeat across the session's crawls)."""
     tracker = spark.sparkContext.statusTracker()
     robots = spark.createDataFrame(webgen.robots_pandas(N_HOSTS))
     engine = CrawlEngine(
         spark, None, robots, CrawlPolicy(allowed_domains=["example.gov"], depth_limit=4), ckpt,
         fetcher=GeneratorFetcher(N_PAGES, N_HOSTS, branch=3), **engine_kw,
     )
-    before = [set(tracker.getJobIdsForGroup(f"crawl-r{r}")) for r in range(ROUNDS)]
-    run = engine.run([webgen.page_url(h, 0) for h in range(N_HOSTS)], max_rounds=ROUNDS)
-    jobs = [len(set(tracker.getJobIdsForGroup(f"crawl-r{r}")) - before[r]) for r in range(ROUNDS)]
+    before = [set(tracker.getJobIdsForGroup(f"crawl-r{r}")) for r in range(rounds)]
+    run = engine.run([webgen.page_url(h, 0) for h in range(N_HOSTS)], max_rounds=rounds)
+    jobs = [len(set(tracker.getJobIdsForGroup(f"crawl-r{r}")) - before[r]) for r in range(rounds)]
     return engine, run, jobs
 
 
@@ -89,6 +90,29 @@ def test_bloom_params_add_no_job(spark, tmp_path):
     assert bloom_jobs == jobs
 
 
+def test_budget_bound_round_jobs(spark, tmp_path):
+    """A politeness-bound crawl (8-second rounds: 8 fetches per host per
+    round), with adaptive execution off as in
+    ``test_bloom_params_add_no_job``: each round whose budget binds runs at
+    most 6 Spark jobs, and the rounds before them, whose frontier fits
+    every budget, run as many as the same rounds of the fast-path crawl."""
+    conf = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, _, fast_jobs = _crawl(spark, str(tmp_path / "fast"))
+        engine, run, jobs = _crawl(spark, str(tmp_path / "polite"), rounds=4, round_seconds=8.0)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", conf)
+    store = engine.store
+    # round 0's frontier is the admitted seeds, a later round's what the
+    # round before it left
+    hints = [store._dir_lineage(store.seed_seen_dir())["rows"]] + [m["remaining"] for m in run.metrics[:-1]]
+    assert [h > engine.min_budget for h in hints] == [False, False, True, True], (hints, engine.min_budget)
+    assert run.metrics[3]["selected"] < hints[3]  # round 3 defers part of its frontier
+    assert all(0 < j <= 6 for j in jobs[2:]), jobs
+    assert jobs[:2] == fast_jobs[:2], (jobs, fast_jobs)
+
+
 def test_checkpoint_reads_start_no_job(spark, grouped_crawl):
     """The frontier, seen-set and documents reads take their schema from
     a parquet footer on the driver: building them (and asking their
@@ -97,7 +121,7 @@ def test_checkpoint_reads_start_no_job(spark, grouped_crawl):
     sc = spark.sparkContext
     last = run.rounds - 1
     with job_group(sc, "round-jobs-reads", "checkpoint reads"):
-        frontier = engine.store.read_table(spark, last, "frontier")
+        frontier = engine.store.read_frontier(spark, last)
         seen = engine.store.read_seen(spark, last)
         documents = engine.store.read_documents(spark)
         assert "seq" in frontier.schema.fieldNames()
@@ -140,7 +164,13 @@ def test_warm_fast_path_round_jobs_and_tasks_at_bench_width(tmp_path):
     session of its own — runs at most 7 Spark jobs and 16 tasks: the
     frontier read's shuffle, the pass cache and the documents write, the
     seen set's broadcast, the one exchange to a single partition and the
-    frontier write."""
+    frontier write.  With adaptive execution on, identical rounds run 6 or
+    7 jobs, depending on how the documents write on its side thread and
+    the frontier write share the pass's query stages; ``<= 7`` is the top
+    of that timing-dependent range.  Writing the documents on the round
+    thread first would fix the count, but a scratch prototype of that
+    measured ``bulk_crawl`` urls_per_s at 0.857x [0.781, 0.911], better
+    in 0 of 8 pairs, so the side thread stays."""
     env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEMORY="1g", TMPDIR=str(tmp_path))
     proc = subprocess.run(
         [sys.executable, "-c", _BENCH_WIDTH_CRAWL],
