@@ -29,6 +29,9 @@ the bootstrap wrote) and the seen set through round N-1 (``read_seen``),
 so starting, resuming and continuing a crawl run the same loop body.  A
 fresh run refuses a directory that already holds a committed round.
 
+The bootstrap is no round: the seed list is a driver argument, so
+``_bootstrap`` admits it there, and the seed-dir write is one JVM job.
+
 Politeness: per-host budget = floor(round_seconds / crawl_delay), the exact
 token-bucket steady state when the bucket capacity equals the round length
 (see politeness.static_budgets).
@@ -69,17 +72,11 @@ import pyarrow as pa
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions import udfs
 from ..storage.tables import CheckpointStore
 from . import politeness
-from .frontier import (
-    dedup_against_seen,
-    dedup_first_in_batch,
-    filter_admission_parts,
-    pass_candidates,
-)
+from .frontier import dedup_against_seen, dedup_first_in_batch, pass_candidates
 from .reference_bfs import CrawlPolicy
 from .seqno import (
     SMALL_BATCH_THRESHOLD,
@@ -88,7 +85,11 @@ from .seqno import (
     monotone_bucket,
 )
 
-FRONTIER_COLS = ["url_canon", "url_hash", "host", "depth", "seq", "source_url"]
+FRONTIER_ARROW = pa.schema([
+    ("url_canon", pa.string()), ("url_hash", pa.int64()), ("host", pa.string()),
+    ("depth", pa.int32()), ("seq", pa.int64()), ("source_url", pa.string()),
+])
+FRONTIER_COLS = FRONTIER_ARROW.names
 
 # Auto-compaction (T2): once this many seen-delta directories have
 # accumulated since the last compaction, the engine compacts them into the
@@ -198,38 +199,26 @@ class CrawlEngine:
         return self.spark.sparkContext.broadcast(rules)
 
     # -- bootstrap -------------------------------------------------------------
-    def _bootstrap(self, start_urls: list[str]) -> DataFrame:
-        """Admit the seed URLs (depth 0, FIFO = listing order).
+    def _bootstrap(self, start_urls: list[str]) -> pa.Table:
+        """The admitted seed URLs as round 0's frontier: depth 0, ``seq``
+        numbered densely in first-listing order.
 
-        Seeds bypass the query-string filter, jsessionid rewrite and deny
-        paths (reference: start requests carry dont_filter=True and skip
-        get_processed_request, middlewares.py:114-115); only the offsite,
-        depth and robots checks apply.  The seeds arrive as an in-memory
-        list, so one partition holds them: the kernel parts and robots
-        verdicts take one Arrow pass (one Python task), and the
-        single-partition window numbering them needs no more memory than
-        the list already holds.  The list ships as an Arrow table, which
-        the JVM reads without a Python task (a createDataFrame over Python
-        rows unpickles them in one Python task per slice).
+        Seeds bypass the offsite, query-string and deny-path filters and
+        the jsessionid rewrite (reference: start requests carry
+        dont_filter=True and skip get_processed_request,
+        middlewares.py:114-115); only the depth and robots checks apply,
+        and a later alias of an admitted seed is dropped.  The row kernels
+        are the ones a round's pass runs per link.
         """
-        n = len(start_urls)
-        seeds = self.spark.createDataFrame(
-            pa.table({
-                "url": pa.array(start_urls, pa.string()),
-                "depth": pa.array([0] * n, pa.int32()),
-                "source_url": pa.array([""] * n, pa.string()),
-                "pos": pa.array(range(n), pa.int32()),
-            })
-        ).coalesce(1)
-        rules = self._robots_rules
-
-        def _parts(batches):
-            return udfs.seed_parts(batches, rules.value if rules is not None else None)
-
-        schema = T.StructType(seeds.schema.fields + udfs.LINK_STRUCT.fields)
-        admitted = filter_admission_parts(seeds.mapInArrow(_parts, schema), self.policy, is_seed=True)
-        admitted = dedup_first_in_batch(admitted.filter(F.col("robots_ok")).drop("robots_ok"), ["pos"])
-        return assign_seq_small(admitted, ["pos"], start=0).select(*FRONTIER_COLS)
+        robots_ok = udfs._robots_checker(self._robots_rules.value if self._robots_rules is not None else None)
+        rows: dict[str, dict] = {}
+        if self.policy.depth_limit >= 0:
+            for url in start_urls:
+                canon, host, url_hash, ok = udfs._link_row(url, robots_ok, strip=False)
+                if ok and canon not in rows:
+                    rows[canon] = {"url_canon": canon, "url_hash": url_hash, "host": host,
+                                   "depth": 0, "seq": len(rows), "source_url": ""}
+        return pa.Table.from_pylist(list(rows.values()), schema=FRONTIER_ARROW)
 
     # -- the round's Python pass ---------------------------------------------------
     def round_pass(self, batch: DataFrame) -> DataFrame:
@@ -248,13 +237,7 @@ class CrawlEngine:
         rules = self._robots_rules
 
         def _pass(batches):
-            if fetch is None:
-                fetched = (b.to_pydict() for b in batches)
-            else:
-                fetched = (
-                    {c: pdf[c].tolist() for c in pdf.columns}
-                    for pdf in fetch(b.to_pandas() for b in batches)
-                )
+            fetched = batches if fetch is None else fetch(batches)
             return udfs.crawl_pass(fetched, rules.value if rules is not None else None)
 
         src = batch if fetch is not None else self.fetcher.fetch(batch)
@@ -452,10 +435,9 @@ class CrawlEngine:
         if last is None:
             # the seed dir is round 0's frontier and, through read_seen, the
             # seeds' seen delta: seeds enter the seen set at admission (T1/F7)
-            obs = Observation()
-            seeds = self._bootstrap(start_urls).observe(obs, F.count(F.lit(1)).alias("n"))
-            seeds.write.mode("overwrite").parquet(self.store.seed_seen_dir())
-            next_seq = frontier_hint = int(obs.get["n"])
+            seeds = self._bootstrap(start_urls)
+            self.store.write_seeds(spark.createDataFrame(seeds))
+            next_seq = frontier_hint = seeds.num_rows
         else:
             next_seq = manifest["next_seq"]
             frontier_hint = manifest.get("remaining", 0)

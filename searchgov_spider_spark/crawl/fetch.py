@@ -19,8 +19,8 @@ Spark the fetch stage is a DataFrame -> DataFrame operator appending
     fetch cost-behavior exactly.
 
 A batch client exposes its per-partition function (``fetch_partition``:
-an iterator of pandas frontier batches in, the same rows plus html/lang
-out).  ``fetch(df)`` is ``mapInPandas`` of that function; the crawl
+an iterator of Arrow frontier batches in, the same rows plus html/lang
+out).  ``fetch(df)`` is ``mapInArrow`` of that function; the crawl
 engine's round pass (``CrawlEngine.round_pass``) calls the same function
 inside its single Arrow map node, so a round starts one Python task per
 partition and the client still sees all of a partition's batches through
@@ -33,7 +33,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,7 +43,13 @@ from ..functions import udfs
 
 # a batch client's per-partition function: frontier batches in, the same
 # rows with ``html``/``lang`` appended out
-PartitionFetch = Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]
+PartitionFetch = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
+
+
+def _with_fetched(batch: pa.RecordBatch, html: list, lang: list) -> pa.RecordBatch:
+    """``batch`` with its fetch results appended (``fetched_schema``)."""
+    batch = batch.append_column("html", pa.array(html, pa.binary()))
+    return batch.append_column("lang", pa.array(lang, pa.string()))
 
 
 def fetched_schema(selected: DataFrame) -> T.StructType:
@@ -141,7 +147,7 @@ class HttpFetcher:
     """Async batch HTTP client (S4) — the production live-fetch stage.
 
     Per partition of the politeness-selected batch (``fetch_partition``,
-    which ``fetch`` maps with ``mapInPandas`` and the crawl engine runs
+    which ``fetch`` maps with ``mapInArrow`` and the crawl engine runs
     inside its round pass), the client builds ONE transport
     (``transport_factory()``, e.g. a session pool), fans the batch out
     under an asyncio semaphore, and applies the reference's downloader
@@ -164,12 +170,12 @@ class HttpFetcher:
         self.policy = policy
 
     def fetch(self, selected: DataFrame) -> DataFrame:
-        return selected.mapInPandas(self.fetch_partition(), schema=fetched_schema(selected))
+        return selected.mapInArrow(self.fetch_partition(), schema=fetched_schema(selected))
 
     def fetch_partition(self) -> PartitionFetch:
         factory, policy = self.transport_factory, self.policy
 
-        def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def _fetch_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             import asyncio
 
             transport = factory()  # one client per partition
@@ -201,12 +207,9 @@ class HttpFetcher:
             # dying with the first batch's asyncio.run loop.
             loop = asyncio.new_event_loop()
             try:
-                for pdf in batches:
-                    results = loop.run_until_complete(run(list(pdf["url_canon"]))) if len(pdf) else []
-                    yield pdf.assign(
-                        html=pd.Series([r[0] for r in results], index=pdf.index, dtype=object),
-                        lang=pd.Series([r[1] for r in results], index=pdf.index, dtype=object),
-                    )
+                for batch in batches:
+                    results = loop.run_until_complete(run(batch.column("url_canon").to_pylist()))
+                    yield _with_fetched(batch, [r[0] for r in results], [r[1] for r in results])
             finally:
                 aclose = getattr(transport, "aclose", None)
                 if aclose is not None:
@@ -243,19 +246,19 @@ class GeneratorFetcher:
         self.branch = branch
 
     def fetch(self, selected: DataFrame) -> DataFrame:
-        return selected.mapInPandas(self.fetch_partition(), schema=fetched_schema(selected))
+        return selected.mapInArrow(self.fetch_partition(), schema=fetched_schema(selected))
 
     def fetch_partition(self) -> PartitionFetch:
         from ..synth import webgen
 
         sizes, n_hosts, branch = self.sizes, self.n_hosts, self.branch
 
-        def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def _fetch_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             # production: open an async HTTP session here, fan out the batch
-            for pdf in batches:
+            for batch in batches:
                 htmls: list[bytes | None] = []
                 langs: list[str | None] = []
-                for url in pdf["url_canon"]:
+                for url in batch.column("url_canon").to_pylist():
                     hk = webgen.url_to_hk(url)
                     if hk is None or hk[0] >= n_hosts or hk[1] >= sizes[hk[0]]:
                         htmls.append(None)
@@ -265,7 +268,6 @@ class GeneratorFetcher:
                     row = webgen.build_page(h, k, sizes[h], n_hosts, branch, with_text=False)
                     htmls.append(row["html"])
                     langs.append(row["lang"])
-                yield pdf.assign(html=pd.Series(htmls, index=pdf.index, dtype=object),
-                                 lang=pd.Series(langs, index=pdf.index, dtype=object))
+                yield _with_fetched(batch, htmls, langs)
 
         return _fetch_batch

@@ -8,7 +8,7 @@ DataFrame transformations over the batch of links discovered in a round
   fingerprint semantics) -> offsite host/path filter (middlewares.py:205-264)
   -> query-string filter (middlewares.py:45-56) -> depth cap
   (DEPTH_LIMIT) -> robots allow (ROBOTSTXT_OBEY) -> within-batch FIFO-first
-  dedup -> Bloom-prefiltered anti-join against the seen table
+  dedup -> exact anti-join against the seen table
   (job_state/dupefilter.py:8-25).
 
 Everything except canonicalization and robots evaluation stays JVM-side
@@ -19,6 +19,10 @@ Arrow pass (``pass_candidates``); ``apply_admission_filters`` and
 unfused form that is the pass's oracle.  Policy regexes are precomputed
 once from the seed config, exactly as the reference builds its
 LinkExtractor deny lists up front (spiders/domain_spider.py:79-92).
+Seeds skip these filters (dont_filter=True, middlewares.py:114-115): the
+engine admits them on the driver (``CrawlEngine._bootstrap``).  The engine
+dedups by the exact anti-join; ``dedup_against_seen`` keeps its Bloom
+branch only because the ``seen_dedup`` benchmark calls it.
 """
 
 from __future__ import annotations
@@ -66,40 +70,29 @@ def _offsite_condition(policy: CrawlPolicy):
     return cond
 
 
-def apply_admission_filters(links: DataFrame, policy: CrawlPolicy, is_seed: bool = False) -> DataFrame:
+def apply_admission_filters(links: DataFrame, policy: CrawlPolicy) -> DataFrame:
     """Filters every discovered link; input needs a raw ``url`` column and a
-    ``depth`` column.  Output adds url_canon/host/path/url_hash columns.
-
-    ``is_seed`` exempts the batch from the query-string filter, jsessionid
-    rewrite, deny paths AND the offsite filter — the reference's start
-    requests carry dont_filter=True and bypass get_processed_request
-    entirely (middlewares.py:114-115), and Scrapy's downloader
-    OffsiteMiddleware also exempts dont_filter requests (process_request:
-    ``if request.dont_filter or self.should_follow(...)``).  Depth and
-    robots still apply (RobotsTxtMiddleware ignores dont_filter).
-    """
-    parts = (udfs.admission_parts_seed if is_seed else udfs.admission_parts)(F.col("url"))
-    df = links.withColumn("_ap", parts).select(
+    ``depth`` column.  Output adds url_canon/host/path/url_hash columns."""
+    df = links.withColumn("_ap", udfs.admission_parts(F.col("url"))).select(
         *links.columns,
         F.col("_ap.url_canon").alias("url_canon"),
         F.col("_ap.host").alias("host"),
         F.col("_ap.url_hash").alias("url_hash"),
     )
-    return filter_admission_parts(df, policy, is_seed)
+    return filter_admission_parts(df, policy)
 
 
-def filter_admission_parts(df: DataFrame, policy: CrawlPolicy, is_seed: bool = False) -> DataFrame:
+def filter_admission_parts(df: DataFrame, policy: CrawlPolicy) -> DataFrame:
     """The JVM-side admission filters over precomputed kernel parts: input
     needs ``url_canon``/``host`` (the ``admission_parts`` fields) and
     ``depth``; output adds ``path``.  Offsite, query-string, deny-path and
-    depth checks, with the seed exemptions of ``apply_admission_filters``."""
+    depth checks."""
     df = df.withColumn("path", F.coalesce(F.expr("parse_url(url_canon, 'PATH')"), F.lit("")))
-    if not is_seed:
-        df = df.filter(_offsite_condition(policy))
-        if not policy.allow_query_string:
-            df = df.filter(F.expr("parse_url(url_canon, 'QUERY')").isNull())
-        for dp in policy.deny_paths:
-            df = df.filter(~F.col("path").contains(dp))
+    df = df.filter(_offsite_condition(policy))
+    if not policy.allow_query_string:
+        df = df.filter(F.expr("parse_url(url_canon, 'QUERY')").isNull())
+    for dp in policy.deny_paths:
+        df = df.filter(~F.col("path").contains(dp))
     return df.filter(F.col("depth") <= F.lit(policy.depth_limit))
 
 

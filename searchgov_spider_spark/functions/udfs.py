@@ -1,4 +1,4 @@
-"""Arrow-batched pandas UDFs and Arrow map passes wrapping the pure-Python kernels.
+"""Arrow-batched pandas UDFs and the crawl round's Arrow pass, wrapping the pure-Python kernels.
 
 This is the only place kernel code crosses into Spark: every UDF is a
 vectorized (Arrow batch) wrapper — no per-row Python UDFs anywhere in the
@@ -13,7 +13,9 @@ worker CPU (``worker_util.setup_spark_files`` -> ``importlib.invalidate_caches``
 re-reads pyspark.zip through every zipimporter), far more than the kernels'
 per-page cost at round sizes.  The single-purpose UDFs below
 (``extract_doc_links``, ``doc_meta``, ``admission_parts``, ``robots_allowed``)
-call the same row kernels as the pass and are its differential oracle.
+call the same row kernels as the pass and are its differential oracle.  The
+engine admits its seed list on the driver with the pass's per-link row
+kernel (``_link_row``), so the bootstrap has no Python node.
 """
 
 from __future__ import annotations
@@ -80,16 +82,12 @@ ADMISSION_STRUCT = T.StructType(
 
 
 def _admission_row(u: str | None, strip: bool) -> tuple[str, str, int]:
-    if not u:
+    # only a null URL short-cuts: "" canonicalizes to "http:///", as the
+    # reference's admission does
+    if u is None:
         return "", "", 0
     canon = urlnorm.canonicalize_url(urlnorm.strip_jsessionid(u) if strip else u)
     return canon, urlnorm.url_host(canon), urlnorm.url_seen_hash(canon)
-
-
-def _admission_rows(urls, strip: bool):
-    return pd.DataFrame(
-        [_admission_row(u, strip) for u in urls], columns=["url_canon", "host", "url_hash"]
-    )
 
 
 @pandas_udf(ADMISSION_STRUCT)
@@ -97,22 +95,17 @@ def admission_parts(urls: pd.Series) -> pd.DataFrame:
     """Fused admission kernel chain (jsessionid strip -> canonicalize ->
     host -> seen-hash) in ONE Arrow round trip — the dependent chain would
     otherwise compile to 3-4 serial ArrowEvalPython nodes per round."""
-    return _admission_rows(urls, strip=True)
-
-
-@pandas_udf(ADMISSION_STRUCT)
-def admission_parts_seed(urls: pd.Series) -> pd.DataFrame:
-    """Seed variant: no jsessionid rewrite (dont_filter semantics)."""
-    return _admission_rows(urls, strip=False)
+    return pd.DataFrame(
+        [_admission_row(u, strip=True) for u in urls], columns=["url_canon", "host", "url_hash"]
+    )
 
 
 # The kernels are pure functions, but Catalyst re-substitutes deterministic
 # UDFs into filters pushed below their projection — evaluating the whole
-# admission kernel TWICE per link (plan-test-pinned).  Marking them
+# admission kernel TWICE per link (plan-test-pinned).  Marking it
 # nondeterministic forbids that duplication; task-retry re-execution still
 # yields identical values.
 admission_parts = admission_parts.asNondeterministic()
-admission_parts_seed = admission_parts_seed.asNondeterministic()
 
 
 DOC_META_STRUCT = T.StructType(
@@ -334,7 +327,6 @@ CRAWL_PASS_SCHEMA = T.StructType(
     ]
 )
 _CRAWL_PASS_ARROW = to_arrow_schema(CRAWL_PASS_SCHEMA)
-_LINK_ARROW = _CRAWL_PASS_ARROW.field("links").type.value_type
 _PASS_CARRY = ("url_canon", "url_hash", "host", "depth", "seq", "source_url")
 
 
@@ -359,16 +351,17 @@ def _robots_checker(robots: dict | None):
 
 
 def _link_row(href: str | None, robots_ok, strip: bool = True) -> tuple:
-    """``admission_parts`` (``admission_parts_seed`` when not ``strip``) +
-    ``robots_allowed`` of one href; ``robots_ok`` from ``_robots_checker``."""
+    """``admission_parts`` + ``robots_allowed`` of one href; ``robots_ok``
+    from ``_robots_checker``.  ``strip=False`` skips the jsessionid rewrite,
+    as a seed's admission does (``CrawlEngine._bootstrap``)."""
     canon, host, url_hash = _admission_row(href, strip)
     return canon, host, url_hash, robots_ok(host, canon)
 
 
-def crawl_pass(fetched: Iterator[dict], robots: dict | None) -> Iterator[pa.RecordBatch]:
+def crawl_pass(fetched: Iterator[pa.RecordBatch], robots: dict | None) -> Iterator[pa.RecordBatch]:
     """The crawl round's Python work over one partition, in one pass.
 
-    ``fetched`` yields column dicts of fetched frontier rows (the frontier
+    ``fetched`` yields Arrow batches of fetched frontier rows (the frontier
     columns plus ``html``/``lang``; null html is a fetch miss).  Per fetched
     page: ``extract_doc_links``, ``doc_meta`` and, per raw link in list
     order, ``admission_parts`` (jsessionid strip) with the robots verdict of
@@ -377,7 +370,8 @@ def crawl_pass(fetched: Iterator[dict], robots: dict | None) -> Iterator[pa.Reco
     Yields ``CRAWL_PASS_SCHEMA`` batches.
     """
     robots_ok = _robots_checker(robots)
-    for cols in fetched:
+    for batch in fetched:
+        cols = batch.to_pydict()
         out: dict[str, list] = {f: [] for f in CRAWL_PASS_SCHEMA.fieldNames()}
         carry = [(out[c], cols[c]) for c in _PASS_CARRY]
         for i, (body, url, lang) in enumerate(zip(cols["html"], cols["url_canon"], cols["lang"])):
@@ -393,19 +387,6 @@ def crawl_pass(fetched: Iterator[dict], robots: dict | None) -> Iterator[pa.Reco
             )
             out["links"].append([_link_row(h, robots_ok) for h in doc.links])
         yield pa.RecordBatch.from_pydict(out, schema=_CRAWL_PASS_ARROW)
-
-
-def seed_parts(batches: Iterator[pa.RecordBatch], robots: dict | None) -> Iterator[pa.RecordBatch]:
-    """Append ``url_canon``/``host``/``url_hash``/``robots_ok`` of each
-    batch's ``url`` column (``admission_parts_seed``: no jsessionid
-    rewrite, plus ``robots_allowed``) in one Arrow pass."""
-    robots_ok = _robots_checker(robots)
-    for batch in batches:
-        urls = batch.column("url").to_pylist()
-        links = pa.array([_link_row(u, robots_ok, strip=False) for u in urls], _LINK_ARROW)
-        yield pa.RecordBatch.from_arrays(
-            batch.columns + links.flatten(), names=batch.schema.names + LINK_STRUCT.fieldNames()
-        )
 
 
 # --- text analysis -----------------------------------------------------------

@@ -19,7 +19,8 @@ Layout:
     <root>/round_00000/manifest.json    commit marker {round, next_seq, counts}
     <root>/seen/seed/                   bootstrap seeds (round 0's frontier),
                                         later the compacted set with its
-                                        _BUCKETS marker
+                                        _BUCKETS marker; its _LINEAGE file
+                                        records its data files either way
 
 Round N+1's frontier is round N's ``frontier`` plus its ``deferred``
 (``read_frontier``).  The directories alone define the seen set
@@ -69,6 +70,13 @@ class CheckpointStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
+    def write_seeds(self, df: DataFrame) -> None:
+        """Write the bootstrap's admitted seeds as the seed dir, with its
+        lineage.  One file: every seen-set read scans the seed dir, and a
+        file per input slice would add tasks to each of them."""
+        df.coalesce(1).write.mode("overwrite").parquet(self.seed_seen_dir())
+        self._record_lineage(self.seed_seen_dir())
+
     def write_seen_delta(self, df: DataFrame, rnd: int) -> str:
         path = self.seen_delta_dir(rnd)
         df.write.mode("overwrite").parquet(path)
@@ -99,6 +107,14 @@ class CheckpointStore:
             "rows": sum(f["rows"] for f in files),
             "bytes": sum(f["bytes"] for f in files),
         }
+
+    LINEAGE_FILE = "_LINEAGE"
+
+    def _record_lineage(self, tdir: str) -> None:
+        """Store ``_dir_lineage(tdir)`` in ``tdir`` (the seed dir is in no
+        round's manifest); Spark's readers skip ``_``-prefixed files."""
+        with open(os.path.join(tdir, self.LINEAGE_FILE), "w") as f:
+            json.dump(self._dir_lineage(tdir), f)
 
     def round_lineage(self, rnd: int) -> dict:
         """Lineage of every table this round wrote (its round dir)."""
@@ -143,21 +159,35 @@ class CheckpointStore:
                 # an EXISTING dir is what corruption looks like, and is never
                 # legitimate
                 continue
-            for f in entry["files"]:
-                fp = os.path.join(base, f["file"])
-                if not os.path.exists(fp):
-                    raise CheckpointCorrupt(f"round {rnd}: missing data file {fp}")
-                size = os.path.getsize(fp)
-                if size != f["bytes"]:
-                    raise CheckpointCorrupt(
-                        f"round {rnd}: {fp} is {size} bytes, manifest committed {f['bytes']}"
-                    )
+            self._verify_files(f"round {rnd}", base, entry["files"])
+
+    @staticmethod
+    def _verify_files(label: str, base: str, files: list[dict]) -> None:
+        """Raise ``CheckpointCorrupt`` naming the first of ``files`` (lineage
+        entries of directory ``base``) that is missing or has another size."""
+        for f in files:
+            fp = os.path.join(base, f["file"])
+            if not os.path.exists(fp):
+                raise CheckpointCorrupt(f"{label}: missing data file {fp}")
+            size = os.path.getsize(fp)
+            if size != f["bytes"]:
+                raise CheckpointCorrupt(f"{label}: {fp} is {size} bytes, lineage recorded {f['bytes']}")
 
     def verify_resume(self, last: int) -> None:
-        """``verify_round`` on every round a resume from round ``last``
-        reads: each round whose frontier dir is part of the seen set (after
-        the compaction watermark), and ``last``, whose frontier and
-        deferred dirs are the next round's frontier."""
+        """Check everything a resume from round ``last`` reads: the seed dir
+        (round 0's frontier, later the compacted seen set) against its
+        ``_LINEAGE``, written by the bootstrap or the last ``compact_seen``;
+        then, with ``verify_round``, each round whose frontier dir is part
+        of the seen set (after the compaction watermark), and ``last``,
+        whose frontier and deferred dirs are the next round's frontier.
+        Driver-side file stats only, no Spark job."""
+        seed = self.seed_seen_dir()
+        if not os.path.isdir(seed):
+            raise CheckpointCorrupt(f"missing seed dir {seed}")
+        lineage = os.path.join(seed, self.LINEAGE_FILE)
+        if os.path.exists(lineage):  # a seed dir written before the file existed has none
+            with open(lineage) as f:
+                self._verify_files("seed dir", seed, json.load(f)["files"])
         for rnd in range(min(self._first_delta_round(), last), last + 1):
             self.verify_round(rnd)
 
@@ -373,6 +403,7 @@ class CheckpointStore:
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")  # external table: files remain
         with open(os.path.join(tmp, self.BUCKET_MARKER), "w") as f:
             json.dump({"buckets": buckets, "bucket_cols": ["url_hash", "url_canon"], "upto_round": upto_round}, f)
+        self._record_lineage(tmp)
         old_seed = self.seed_seen_dir() + ".old"
         shutil.rmtree(old_seed, ignore_errors=True)
         if os.path.isdir(self.seed_seen_dir()):

@@ -3,6 +3,8 @@ resume-after-compaction equivalence."""
 
 import os
 
+import pytest
+
 from searchgov_spider_spark.crawl import CrawlEngine, CrawlPolicy, reference_crawl
 from searchgov_spider_spark.crawl import engine as engine_mod
 from searchgov_spider_spark.storage.tables import CheckpointStore
@@ -250,6 +252,25 @@ def test_resume_refuses_a_missing_file_in_an_earlier_round(spark, tmp_path):
     victim = next(f for f in sorted(os.listdir(frontier_dir)) if f.endswith(".parquet"))
     os.remove(os.path.join(frontier_dir, victim))
     with pytest.raises(CheckpointCorrupt, match="round 0: missing data file"):
+        engine.run([webgen.page_url(0, 0)], max_rounds=1, resume=True)
+
+
+@pytest.mark.parametrize("compacted", [False, True], ids=["bootstrap-seeds", "compacted-set"])
+def test_resume_refuses_a_missing_file_in_the_seed_dir(spark, tmp_path, compacted):
+    """The seed dir is round 0's frontier and part of every seen set (after
+    a compaction it holds the compacted set), so resume checks the lineage
+    it records: a data file deleted from it fails the resume instead of
+    dropping its URLs from the seen set."""
+    from searchgov_spider_spark.storage.tables import CheckpointCorrupt
+
+    engine, run, _ = _run_partial(spark, tmp_path, max_rounds=2)
+    store = engine.store
+    if compacted:
+        assert store.compact_seen(spark, store.last_committed()) > 0
+    seed_dir = store.seed_seen_dir()
+    victim = next(f for f in sorted(os.listdir(seed_dir)) if f.endswith(".parquet"))
+    os.remove(os.path.join(seed_dir, victim))
+    with pytest.raises(CheckpointCorrupt, match="seed dir: missing data file"):
         engine.run([webgen.page_url(0, 0)], max_rounds=1, resume=True)
 
 

@@ -328,6 +328,24 @@ def test_multi_seed_bootstrap_matches_oracle(spark, web, tmp_path):
     assert [r["seq"] for r in ordered] == list(range(len(oracle.order)))
 
 
+def test_empty_string_seed_matches_oracle(spark, web, tmp_path):
+    """An empty-string seed is admitted as the reference admits it:
+    canonicalized to ``http:///`` (host "", a fetch miss) and numbered
+    before the next seed, so the FIFO order and the visited set with depths
+    equal the reference BFS."""
+    pages_df, robots_df = web
+    start = ["", webgen.page_url(0, 0)]
+    policy = POLICIES["depth2"]
+    oracle = reference_crawl(_pages_dict(), _robots_dict(), start, policy)
+    assert oracle.order[0] == "http:///"
+    engine = CrawlEngine(spark, pages_df, robots_df, policy, str(tmp_path / "empty-url"))
+    run = engine.run(start, max_rounds=64)
+    seen = run.seen(spark)
+    assert {(r["url_canon"], r["depth"]) for r in seen.collect()} == set(oracle.depth.items())
+    assert [r["url_canon"] for r in seen.orderBy("seq").collect()] == oracle.order
+    assert {r["url"] for r in run.documents(spark).select("url").collect()} == oracle.fetched
+
+
 def test_generator_fetcher_matches_table_fetcher(spark, web, tmp_path):
     # the live-fetch-shaped GeneratorFetcher must produce the identical crawl
     # (visited set, order, extracted text) as the table-join fetcher

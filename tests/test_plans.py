@@ -103,7 +103,8 @@ class TestCrawlPlans:
         (fetch + extraction + doc meta + link parts + robots): the
         documents-write and frontier-write plans hold no ArrowEvalPython
         node and exactly one Python map node, under the cache both read.
-        The seed bootstrap is one Python map node over one partition."""
+        The seed-dir write holds no Python node: the bootstrap admits the
+        seed list on the driver."""
         import re
 
         from searchgov_spider_spark.crawl import CrawlEngine
@@ -122,22 +123,23 @@ class TestCrawlPlans:
             str(tmp_path / "ckpt"), fetcher=GeneratorFetcher(60, 3, branch=3),
         )
         seeds = [webgen.page_url(h, 0) for h in range(3)]
-        boot = plan_of(engine._bootstrap(seeds), "simple")
-        assert "ArrowEvalPython" not in boot and "BatchEvalPython" not in boot
-        assert [name for name, _ in python_maps(boot)] == ["_parts"]
-        lines = boot.splitlines()
-        below = next(i for i, line in enumerate(lines) if "MapInArrow" in line) + 1
-        assert lines[below].strip().lstrip("+- ") == "Coalesce 1"
-
         plans: dict[tuple[int, str], str] = {}
-        write_table = engine.store.write_table
+        write_table, write_seeds = engine.store.write_table, engine.store.write_seeds
 
         def capture(df, rnd, name):
             plans[(rnd, name)] = plan_of(df, "simple")
             return write_table(df, rnd, name)
 
+        def capture_seeds(df):
+            plans[(-1, "seeds")] = plan_of(df, "simple")
+            return write_seeds(df)
+
         engine.store.write_table = capture
+        engine.store.write_seeds = capture_seeds
         engine.run(seeds, max_rounds=2)
+        boot = plans[(-1, "seeds")]
+        for node in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in boot, boot
         # round 1 reads its frontier from parquet: its plans hold only its own pass
         for name in ("documents", "frontier"):
             plan = plans[(1, name)]
