@@ -160,7 +160,7 @@ class CrawlEngine:
         # Memory ceiling: the whole robots table is collected once, as a
         # broadcast join of it would collect it.
         self._robots_rules = self._broadcast_robots()
-        self.budgets = politeness.static_budgets(self.robots, round_seconds)
+        self.budgets = politeness.static_budgets(self.robots, round_seconds, policy.agent)
         self.min_budget = self.default_budget
         if self.budgets is not None:
             self.budgets = self.budgets.coalesce(1).persist()
@@ -210,7 +210,9 @@ class CrawlEngine:
         and a later alias of an admitted seed is dropped.  The row kernels
         are the ones a round's pass runs per link.
         """
-        robots_ok = udfs._robots_checker(self._robots_rules.value if self._robots_rules is not None else None)
+        robots_ok = udfs._robots_checker(
+            self._robots_rules.value if self._robots_rules is not None else None, self.policy.agent
+        )
         rows: dict[str, dict] = {}
         if self.policy.depth_limit >= 0:
             for url in start_urls:
@@ -228,17 +230,17 @@ class CrawlEngine:
 
         A batch-client fetcher (``fetch_partition``: GeneratorFetcher,
         HttpFetcher) runs inside the pass, which drives its per-partition
-        iterator once — an HTTP client keeps one event loop across the
-        partition's Arrow batches.  A join-shaped fetcher (TableFetcher)
-        joins first and the pass runs on the joined rows.
+        iterator once — an HTTP client keeps one transport and one thread
+        pool across the partition's Arrow batches.  A join-shaped fetcher
+        (TableFetcher) joins first and the pass runs on the joined rows.
         """
         fetch_partition = getattr(self.fetcher, "fetch_partition", None)
         fetch = fetch_partition() if fetch_partition is not None else None
-        rules = self._robots_rules
+        rules, agent = self._robots_rules, self.policy.agent
 
         def _pass(batches):
             fetched = batches if fetch is None else fetch(batches)
-            return udfs.crawl_pass(fetched, rules.value if rules is not None else None)
+            return udfs.crawl_pass(fetched, rules.value if rules is not None else None, agent)
 
         src = batch if fetch is not None else self.fetcher.fetch(batch)
         return src.mapInArrow(_pass, udfs.CRAWL_PASS_SCHEMA)

@@ -11,12 +11,12 @@ Spark the fetch stage is a DataFrame -> DataFrame operator appending
     per round.
   * ``GeneratorFetcher`` / ``HttpFetcher`` — the live-crawl shape: a batch
     client whose cost is proportional to the BATCH, not the corpus.
-    ``HttpFetcher`` is an async HTTP client pool (bounded per-partition
-    concurrency, 15s timeout, 15MB cap, no retry per
-    settings/common.py:22-27); ``GeneratorFetcher`` "fetches" from the
-    deterministic synthetic web by reconstructing pages from the URL
-    (webgen.build_page is a pure function of the URL), which models network
-    fetch cost-behavior exactly.
+    ``HttpFetcher`` downloads each partition's URLs on one thread pool of
+    ``max_concurrency`` threads (15s timeout counted from each request's
+    own start, 15MB cap, no retry per settings/common.py:22-27);
+    ``GeneratorFetcher`` "fetches" from the deterministic synthetic web by
+    reconstructing pages from the URL (webgen.build_page is a pure function
+    of the URL), which models network fetch cost-behavior exactly.
 
 A batch client exposes its per-partition function (``fetch_partition``:
 an iterator of Arrow frontier batches in, the same rows plus html/lang
@@ -59,6 +59,13 @@ def fetched_schema(selected: DataFrame) -> T.StructType:
     )
 
 
+class _BatchClient:
+    """A fetcher with a per-partition function; ``fetch`` maps it."""
+
+    def fetch(self, selected: DataFrame) -> DataFrame:
+        return selected.mapInArrow(self.fetch_partition(), schema=fetched_schema(selected))
+
+
 @dataclass(frozen=True)
 class FetchPolicy:
     """Downloader bounds mirroring the reference's Scrapy settings
@@ -68,95 +75,49 @@ class FetchPolicy:
     timeout_s: float = 15.0  # DOWNLOAD_TIMEOUT
     max_bytes: int = 15_728_640  # DOWNLOAD_MAXSIZE
     user_agent: str = "usasearch"  # USER_AGENT
-    max_concurrency: int = 20  # REACTOR_THREADPOOL_MAXSIZE analog, per partition
+    max_concurrency: int = 20  # REACTOR_THREADPOOL_MAXSIZE analog: a partition's fetch threads
 
 
 class _UrllibTransport:
-    """stdlib HTTP transport: ``urllib.request`` driven on the event loop's
-    default thread-pool executor.  The production fallback when aiohttp is
-    absent — a REAL network path (loopback-integration-tested in
-    tests/test_http_loopback.py), not a stub.  Enforces the byte cap DURING
-    the chunked read, like the aiohttp path; non-2xx raises HTTPError which
-    the fetch wrapper turns into a downloader miss (html NULL, no retry)."""
+    """stdlib HTTP transport (``urllib.request``), the default.  Stops
+    reading once ``timeout_s`` has passed since its own start and enforces
+    the byte cap DURING the read (an oversize body comes back as None);
+    non-2xx raises HTTPError, which the fetch turns into a miss."""
 
-    async def __call__(self, url: str, policy: FetchPolicy):
-        import asyncio
+    def __call__(self, url: str, policy: FetchPolicy):
+        import time
         import urllib.request
 
-        def get():
-            req = urllib.request.Request(url, headers={"User-Agent": policy.user_agent})
-            with urllib.request.urlopen(req, timeout=policy.timeout_s) as resp:
-                body = bytearray()
-                while True:
-                    chunk = resp.read(1 << 16)
-                    if not chunk:
-                        break
-                    body.extend(chunk)
-                    if len(body) > policy.max_bytes:
-                        return resp.status, dict(resp.headers), None
-                return resp.status, dict(resp.headers), bytes(body)
-
-        return await asyncio.get_running_loop().run_in_executor(None, get)
+        deadline = time.monotonic() + policy.timeout_s
+        req = urllib.request.Request(url, headers={"User-Agent": policy.user_agent})
+        with urllib.request.urlopen(req, timeout=policy.timeout_s) as resp:
+            body = bytearray()
+            while chunk := resp.read1(1 << 16):
+                body.extend(chunk)
+                if len(body) > policy.max_bytes:
+                    return resp.status, dict(resp.headers), None
+                if time.monotonic() > deadline:
+                    raise TimeoutError(url)
+            return resp.status, dict(resp.headers), bytes(body)
 
 
-def _default_transport_factory() -> Callable:
-    """Real aiohttp transport when the library exists; otherwise the stdlib
-    urllib transport (thread-pool-driven) — both real network paths.
-    Injectable so tests and replays supply fakes."""
-    try:
-        import aiohttp  # noqa: F401
-    except ImportError:
-        return _UrllibTransport()
-
-    class _AiohttpTransport:  # pragma: no cover - requires network
-        """Lazily opens one ClientSession on the event loop that first calls
-        it; HttpFetcher drives ALL batches of a partition on a single loop,
-        so the session stays bound to a live loop, and ``aclose`` releases
-        it before the loop shuts down."""
-
-        def __init__(self):
-            self._session = None
-
-        async def __call__(self, url: str, policy: FetchPolicy):
-            import aiohttp
-
-            if self._session is None:
-                self._session = aiohttp.ClientSession(
-                    headers={"User-Agent": policy.user_agent},
-                    timeout=aiohttp.ClientTimeout(total=policy.timeout_s),
-                )
-            async with self._session.get(url) as resp:
-                # enforce the byte cap DURING streaming, as Scrapy cancels
-                # oversize downloads mid-flight
-                body = bytearray()
-                async for chunk in resp.content.iter_chunked(1 << 16):
-                    body.extend(chunk)
-                    if len(body) > policy.max_bytes:
-                        return resp.status, dict(resp.headers), None
-                return resp.status, dict(resp.headers), bytes(body)
-
-        async def aclose(self):
-            if self._session is not None:
-                await self._session.close()
-                self._session = None
-
-    return _AiohttpTransport()
-
-
-class HttpFetcher:
-    """Async batch HTTP client (S4) — the production live-fetch stage.
+class HttpFetcher(_BatchClient):
+    """Batch HTTP client (S4) — the production live-fetch stage.
 
     Per partition of the politeness-selected batch (``fetch_partition``,
     which ``fetch`` maps with ``mapInArrow`` and the crawl engine runs
     inside its round pass), the client builds ONE transport
-    (``transport_factory()``, e.g. a session pool), fans the batch out
-    under an asyncio semaphore, and applies the reference's downloader
-    semantics (FetchPolicy): per-request timeout, 15 MB response cap, and
-    NO retry — any failure (timeout, transport error, non-200, oversize)
-    yields ``html = NULL`` for that URL, exactly like a Scrapy downloader
-    miss with RETRY_ENABLED=False (settings/common.py:22-27).
+    (``transport_factory()``) and one thread pool of
+    ``policy.max_concurrency`` threads; every Arrow batch of the partition
+    is fetched on that pool in row order, and the pool is joined before the
+    partition's iterator ends.  The reference's downloader semantics apply
+    (FetchPolicy): a request that completes later than ``timeout_s`` after
+    its OWN start (time queued for a thread does not count), a transport
+    error, a non-200 and an oversize body each yield ``html = NULL`` with
+    NO retry, exactly like a Scrapy downloader miss with
+    RETRY_ENABLED=False (settings/common.py:22-27).
 
-    The transport is an ``async callable(url, policy) -> (status_code,
+    The transport is a thread-safe ``callable(url, policy) -> (status_code,
     headers_dict, body_bytes)``; the factory must be picklable (it ships to
     executors), the transport it builds need not be.
     """
@@ -166,29 +127,26 @@ class HttpFetcher:
         transport_factory: Callable[[], Callable] | None = None,
         policy: FetchPolicy = FetchPolicy(),
     ):
-        self.transport_factory = transport_factory or _default_transport_factory
+        self.transport_factory = transport_factory or _UrllibTransport
         self.policy = policy
-
-    def fetch(self, selected: DataFrame) -> DataFrame:
-        return selected.mapInArrow(self.fetch_partition(), schema=fetched_schema(selected))
 
     def fetch_partition(self) -> PartitionFetch:
         factory, policy = self.transport_factory, self.policy
 
         def _fetch_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import asyncio
+            import time
+            from concurrent.futures import ThreadPoolExecutor
 
             transport = factory()  # one client per partition
 
-            async def one(url: str, sem: "asyncio.Semaphore"):
-                async with sem:
-                    try:
-                        status, headers, body = await asyncio.wait_for(
-                            transport(url, policy), policy.timeout_s
-                        )
-                    except Exception:  # timeout / transport error: no retry
-                        return None, None
-                if status != 200 or body is None or len(body) > policy.max_bytes:
+            def one(url: str) -> tuple[bytes | None, str | None]:
+                start = time.monotonic()
+                try:
+                    status, headers, body = transport(url, policy)
+                except Exception:  # timeout / transport error: no retry
+                    return None, None
+                late = time.monotonic() - start > policy.timeout_s
+                if late or status != 200 or body is None or len(body) > policy.max_bytes:
                     return None, None
                 lang = None
                 for k, v in (headers or {}).items():
@@ -197,24 +155,10 @@ class HttpFetcher:
                         break
                 return bytes(body), lang
 
-            async def run(urls: list[str]):
-                sem = asyncio.Semaphore(policy.max_concurrency)
-                return await asyncio.gather(*(one(u, sem) for u in urls))
-
-            # ONE event loop for the whole partition: a transport that opens
-            # a connection pool (e.g. aiohttp.ClientSession) on first use
-            # stays bound to a live loop across Arrow batches, instead of
-            # dying with the first batch's asyncio.run loop.
-            loop = asyncio.new_event_loop()
-            try:
+            with ThreadPoolExecutor(max_workers=policy.max_concurrency) as pool:
                 for batch in batches:
-                    results = loop.run_until_complete(run(batch.column("url_canon").to_pylist()))
+                    results = list(pool.map(one, batch.column("url_canon").to_pylist()))
                     yield _with_fetched(batch, [r[0] for r in results], [r[1] for r in results])
-            finally:
-                aclose = getattr(transport, "aclose", None)
-                if aclose is not None:
-                    loop.run_until_complete(aclose())
-                loop.close()
 
         return _fetch_batch
 
@@ -235,7 +179,7 @@ class TableFetcher:
         return selected.join(self.pages, "url_canon", "left")
 
 
-class GeneratorFetcher:
+class GeneratorFetcher(_BatchClient):
     """Live-fetch shape: per-partition batch client over the synthetic web."""
 
     def __init__(self, n_pages: int, n_hosts: int, branch: int = 3):
@@ -245,16 +189,12 @@ class GeneratorFetcher:
         self.n_hosts = n_hosts
         self.branch = branch
 
-    def fetch(self, selected: DataFrame) -> DataFrame:
-        return selected.mapInArrow(self.fetch_partition(), schema=fetched_schema(selected))
-
     def fetch_partition(self) -> PartitionFetch:
         from ..synth import webgen
 
         sizes, n_hosts, branch = self.sizes, self.n_hosts, self.branch
 
         def _fetch_batch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            # production: open an async HTTP session here, fan out the batch
             for batch in batches:
                 htmls: list[bytes | None] = []
                 langs: list[str | None] = []

@@ -25,10 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..kernels.robotstxt import DEFAULT_AGENT
+
 DEFAULT_CRAWL_DELAY = 1.0
 
 
-def static_budgets(robots: DataFrame | None, round_seconds: float) -> DataFrame | None:
+def static_budgets(
+    robots: DataFrame | None, round_seconds: float, agent: str = DEFAULT_AGENT
+) -> DataFrame | None:
     """Per-host budget when bucket capacity == round length.
 
     Algebraic collapse of the token bucket: with capacity C = round_seconds /
@@ -39,19 +43,18 @@ def static_budgets(robots: DataFrame | None, round_seconds: float) -> DataFrame 
     capacities != round length are served by the streaming path,
     streaming.stateful.rate_limited_frontier.)
 
-    Returns (host, budget) for hosts with robots Crawl-delay overrides; hosts
-    absent from the result use the default budget.
+    Returns (host, budget) for hosts with robots Crawl-delay overrides (the
+    Crawl-delay of the rule group ``agent`` selects); hosts absent from the
+    result use the default budget.
     """
     if robots is None:
         return None
     from ..functions import udfs
 
+    delay = udfs.robots_crawl_delay(F.col("rules_text"), F.lit(agent))
     return robots.select(
         F.col("host"),
-        F.floor(
-            F.lit(round_seconds)
-            / F.coalesce(udfs.robots_crawl_delay(F.col("rules_text")), F.lit(DEFAULT_CRAWL_DELAY))
-        )
+        F.floor(F.lit(round_seconds) / F.coalesce(delay, F.lit(DEFAULT_CRAWL_DELAY)))
         .cast("int")
         .alias("budget"),
     )

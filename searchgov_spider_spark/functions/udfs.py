@@ -293,16 +293,17 @@ def robots_allowed(rules_text: pd.Series, url: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.DoubleType())
-def robots_crawl_delay(rules_text: pd.Series) -> pd.Series:
-    cache: dict[str, float | None] = {}
+def robots_crawl_delay(rules_text: pd.Series, agent: pd.Series) -> pd.Series:
+    """Crawl-delay of the group ``agent`` selects in each robots body."""
+    cache: dict[tuple[str, str], float | None] = {}
     out = []
-    for rt in rules_text:
+    for rt, ag in zip(rules_text, agent):
         if rt is None or not rt:
             out.append(None)
             continue
-        if rt not in cache:
-            cache[rt] = robotstxt.robots_crawl_delay(rt)
-        out.append(cache[rt])
+        if (rt, ag) not in cache:
+            cache[rt, ag] = robotstxt.robots_crawl_delay(rt, ag)
+        out.append(cache[rt, ag])
     return pd.Series(out, dtype="float64")
 
 
@@ -330,11 +331,12 @@ _CRAWL_PASS_ARROW = to_arrow_schema(CRAWL_PASS_SCHEMA)
 _PASS_CARRY = ("url_canon", "url_hash", "host", "depth", "seq", "source_url")
 
 
-def _robots_checker(robots: dict | None):
+def _robots_checker(robots: dict | None, agent: str):
     """``robots_allowed`` as a function of (host, url) under ``robots``
-    (host -> robots.txt body): a missing or empty body allows everything, and
-    each host's body is parsed once, on first use, for the life of the
-    returned function (one partition's pass)."""
+    (host -> robots.txt body), judged by the rule group for ``agent``: a
+    missing or empty body allows everything, and each host's body is parsed
+    once, on first use, for the life of the returned function (one
+    partition's pass)."""
     robots = robots or {}
     parsed: dict[str, robotstxt.RobotsRules] = {}
 
@@ -344,7 +346,7 @@ def _robots_checker(robots: dict | None):
             return True
         rules = parsed.get(host)
         if rules is None:
-            rules = parsed[host] = robotstxt.parse_robots(rules_text)
+            rules = parsed[host] = robotstxt.parse_robots(rules_text, agent)
         return rules.allowed(url)
 
     return allowed
@@ -358,18 +360,21 @@ def _link_row(href: str | None, robots_ok, strip: bool = True) -> tuple:
     return canon, host, url_hash, robots_ok(host, canon)
 
 
-def crawl_pass(fetched: Iterator[pa.RecordBatch], robots: dict | None) -> Iterator[pa.RecordBatch]:
+def crawl_pass(
+    fetched: Iterator[pa.RecordBatch], robots: dict | None, agent: str
+) -> Iterator[pa.RecordBatch]:
     """The crawl round's Python work over one partition, in one pass.
 
     ``fetched`` yields Arrow batches of fetched frontier rows (the frontier
     columns plus ``html``/``lang``; null html is a fetch miss).  Per fetched
     page: ``extract_doc_links``, ``doc_meta`` and, per raw link in list
     order, ``admission_parts`` (jsessionid strip) with the robots verdict of
-    the link's host under ``robots`` (host -> robots.txt body).  Misses are
+    the link's host under ``robots`` (host -> robots.txt body) for the
+    crawl's user ``agent``.  Misses are
     dropped, as the unfused chain's ``html IS NOT NULL`` filter drops them.
     Yields ``CRAWL_PASS_SCHEMA`` batches.
     """
-    robots_ok = _robots_checker(robots)
+    robots_ok = _robots_checker(robots, agent)
     for batch in fetched:
         cols = batch.to_pydict()
         out: dict[str, list] = {f: [] for f in CRAWL_PASS_SCHEMA.fieldNames()}

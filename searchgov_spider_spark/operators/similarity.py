@@ -22,13 +22,6 @@ from pyspark.sql import types as T
 
 logger = logging.getLogger(__name__)
 
-# Corpus-size crossover for the SRP exact-verify prune (see
-# embedding_near_dup_pairs): below this the prune's fixed jobs cost more
-# than the raw-vector verify joins they avoid.  A data-size gate, not a
-# core-count constant.  Only the small side is measured (q48 at sf0.1); the
-# 1M-row value itself is not a measured crossover.
-PRUNE_VERIFY_MIN_ROWS = 1_000_000
-
 
 def derive_srp_params(
     threshold: float,
@@ -240,40 +233,14 @@ def embedding_near_dup_pairs(
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
         .distinct()
     )
-    # Verify-side prune is SIZE-GATED: semi-pruning the corpus to candidate
-    # ids keeps the vectors the verify joins shuffle proportional to the
-    # candidates that have a pair rather than to the corpus.  Unlike the
-    # minhash analog (which avoids recomputing corpus-wide SHINGLES) the
-    # pruned column here is an already-materialized vector, so below the
-    # crossover the prune's fixed cost (two eager checkpoint jobs + an
-    # ids-distinct job) exceeds everything it saves (measured at sf0.1: q48
-    # 3.4-3.6 s pruned vs 2.3-2.5 s direct).  The semi-join carries no
-    # broadcast hint: at ~8 candidates per row (derive_srp_params) the id
-    # set of a 10^10-row corpus is far past any broadcast ceiling, and AQE
-    # still broadcasts it on its own when it is small.  n_rows is known
-    # whenever params were derived; with explicit bits/bands (no count) the
-    # scale assumption applies.
-    if n_rows is None or n_rows >= PRUNE_VERIFY_MIN_ROWS:
-        # EAGER checkpoints: cand feeds the id-prune and the verify join,
-        # vecs feeds both sides of the pair join — lazy would let two
-        # downstream stages race to materialize them
-        cand = cand.localCheckpoint(eager=True)
-        ids = (
-            cand.select(F.col("id_a").alias(id_col))
-            .unionByName(cand.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        vecs = (
-            embeddings.join(ids, id_col, "left_semi")
-            .select(F.col(id_col), F.col(vec_col))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # small corpus: cand's only consumer is the pair join (no
-        # checkpoint, no race) and the raw vector column joins directly —
-        # the inner joins on candidate ids drop non-candidates anyway, so
-        # the pair set and verified rows are identical by construction
-        vecs = embeddings.select(F.col(id_col), F.col(vec_col))
+    # The raw vector column joins the candidates directly: the inner joins
+    # on candidate ids drop non-candidates, and cand's only consumer is the
+    # pair join.  No id prune runs first: at the parameters
+    # derive_srp_params picks, each row expects about ten random candidate
+    # pairs, so a semi-join to candidate ids keeps nearly every row, and its
+    # checkpoint and distinct jobs cost more than they save (q48 at sf0.1:
+    # 3.4-3.6 s with the prune, 2.3-2.5 s without).
+    vecs = embeddings.select(F.col(id_col), F.col(vec_col))
     pairs = (
         cand.join(vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a")
         .join(vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")), "id_b")

@@ -347,7 +347,7 @@ def q24_crawl_bfs(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="crawl_q24_")
     ckpt, out_dir = os.path.join(root, "ckpt"), os.path.join(root, "out")
     try:
-        engine = CrawlEngine(spark, pages, robots, policy, ckpt, bloom_shards=4, bloom_bits=1 << 16)
+        engine = CrawlEngine(spark, pages, robots, policy, ckpt)
         run = engine.run([webgen.page_url(0, 0)], max_rounds=32)
         docs = run.documents(spark)
         # result persists to its own parquet dir (never through the driver —
@@ -3890,7 +3890,7 @@ def entry(spark: SparkSession) -> DataFrame:
     root = tempfile.mkdtemp(prefix="crawl_entry_")
     ckpt, out_dir = os.path.join(root, "ckpt"), os.path.join(root, "out")
     try:
-        engine = CrawlEngine(spark, pages, robots, policy, ckpt, bloom_shards=4, bloom_bits=1 << 16)
+        engine = CrawlEngine(spark, pages, robots, policy, ckpt)
         run = engine.run([webgen.page_url(0, 0)], max_rounds=16)
         docs = run.documents(spark)
         enriched = docs.select(

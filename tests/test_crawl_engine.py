@@ -372,8 +372,8 @@ def test_generator_fetcher_matches_table_fetcher(spark, web, tmp_path):
 
 
 def test_http_fetcher_matches_table_fetcher(spark, web, tmp_path):
-    """The async HTTP client stage (S4, settings/common.py:22-27) with a
-    fake transport must produce the identical crawl as the table join."""
+    """The HTTP client stage (S4, settings/common.py:22-27) with a fake
+    transport must produce the identical crawl as the table join."""
     from searchgov_spider_spark.crawl.fetch import HttpFetcher
 
     # closure (not module-level) so cloudpickle ships it by VALUE — test
@@ -383,7 +383,7 @@ def test_http_fetcher_matches_table_fetcher(spark, web, tmp_path):
 
         sizes = wg.host_sizes(N_PAGES, N_HOSTS)
 
-        async def transport(url, policy):
+        def transport(url, policy):
             hk = wg.url_to_hk(url)
             if hk is None or hk[0] >= N_HOSTS or hk[1] >= sizes[hk[0]]:
                 return 404, {}, b""
@@ -425,14 +425,13 @@ def test_http_fetcher_downloader_semantics(spark, tmp_path):
     marker_dir = str(markers)
 
     def _flaky_transport_factory():
-        import asyncio
         import time
 
-        async def transport(url, policy):
+        def transport(url, policy):
             name = url.rsplit("/", 1)[-1]
             open(os.path.join(marker_dir, f"{name}.{time.time_ns()}"), "w").close()
             if name == "timeout":
-                await asyncio.sleep(5)
+                time.sleep(1.5)  # ignores the deadline: the fetch must drop it
                 return 200, {}, b"late"
             if name == "big":
                 return 200, {}, b"x" * 200
@@ -458,55 +457,45 @@ def test_http_fetcher_downloader_semantics(spark, tmp_path):
 
 
 def test_http_fetcher_session_survives_arrow_batches(spark, tmp_path):
-    """Regression (ADVICE r3 medium): a transport that lazily binds a
-    connection pool to the event loop of its FIRST call (the aiohttp
-    ClientSession shape) must keep working across Arrow batches of the same
-    partition — the old per-batch asyncio.run left the session on a closed
-    loop, silently nulling every fetch after batch 1 — and its aclose()
-    must run before the loop shuts down."""
+    """One transport per partition: the factory is called once for each
+    partition, and the transport it builds (a client holding a connection
+    pool) serves every Arrow batch of that partition."""
     import os
+
+    from pyspark.sql import functions as F
 
     from searchgov_spider_spark.crawl.fetch import HttpFetcher
 
-    closed_dir = tmp_path / "closed"
-    closed_dir.mkdir()
-    closed_marker = str(closed_dir)
+    made = tmp_path / "made"
+    made.mkdir()
+    made_dir = str(made)
 
-    def _loop_bound_transport_factory():
-        import asyncio
+    def _tagged_transport_factory():
+        import uuid
 
-        class T:
-            def __init__(self):
-                self.loop = None  # "session" bound to the first caller's loop
+        tag = uuid.uuid4().hex
+        open(os.path.join(made_dir, tag), "w").close()
 
-            async def __call__(self, url, policy):
-                running = asyncio.get_running_loop()
-                if self.loop is None:
-                    self.loop = running
-                if self.loop is not running or self.loop.is_closed():
-                    raise RuntimeError("Event loop is closed")  # aiohttp's symptom
-                return 200, {}, url.encode()
+        def transport(url, policy):
+            return 200, {}, tag.encode()
 
-            async def aclose(self):
-                # must be awaited on the SAME still-live loop
-                assert self.loop is asyncio.get_running_loop() and not self.loop.is_closed()
-                open(os.path.join(closed_marker, "closed"), "w").close()
+        return transport
 
-        return T()
-
-    urls = [(f"https://loop.gov/p{i}",) for i in range(10)]
-    df = spark.createDataFrame(urls, "url_canon string").coalesce(1)
+    urls = [(f"https://pool.gov/p{i}",) for i in range(10)]
+    df = spark.createDataFrame(urls, "url_canon string").repartition(2)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")  # 4 batches
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")  # >= 2 batches a partition
     try:
-        fetcher = HttpFetcher(transport_factory=_loop_bound_transport_factory)
-        got = {r["url_canon"]: r["html"] for r in fetcher.fetch(df).collect()}
+        fetcher = HttpFetcher(transport_factory=_tagged_transport_factory)
+        rows = fetcher.fetch(df).select("url_canon", "html", F.spark_partition_id().alias("pid")).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert len(got) == 10
-    for u, html in got.items():
-        assert html is not None and bytes(html) == u.encode(), u
-    assert os.listdir(closed_marker) == ["closed"]
+    assert sorted(r["url_canon"] for r in rows) == sorted(u for (u,) in urls)
+    tags: dict[int, set[str]] = {}
+    for r in rows:
+        tags.setdefault(r["pid"], set()).add(bytes(r["html"]).decode())
+    assert len(tags) == 2 and all(len(t) == 1 for t in tags.values())
+    assert sorted(os.listdir(made)) == sorted(t for ts in tags.values() for t in ts)
 
 
 def test_oracle_sanity():

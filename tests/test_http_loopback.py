@@ -1,23 +1,53 @@
-"""Loopback HTTP integration: the REAL network transports (stdlib urllib
-fallback of crawl.fetch._default_transport_factory, and the urllib POST
-transport of flows.HttpEndpointSink) exercised end-to-end against a stdlib
+"""Loopback HTTP integration: the REAL network transports (HttpFetcher's
+default stdlib urllib transport, and the urllib POST transport of
+flows.HttpEndpointSink) exercised end-to-end against a stdlib
 ``http.server`` on 127.0.0.1 — no external network, no fakes (VERDICT r4
 #5: the production paths previously ran only under injected transports).
 
-The server runs threads in the TEST process; Spark's local-mode Python
-workers reach it over loopback TCP, so captured request state is directly
-assertable here.
+The ``server`` fixture runs threads in the TEST process; Spark's local-mode
+Python workers reach it over loopback TCP, so captured request state is
+directly assertable here.  The ``sleep_server`` fixture runs in a
+subprocess, so the fetch's own threads are the only new threads here.
 """
 
 import json
+import subprocess
+import sys
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import urlsplit
 
+import pyarrow as pa
 import pytest
 
-from searchgov_spider_spark.crawl.fetch import FetchPolicy, HttpFetcher, _default_transport_factory
+from searchgov_spider_spark.crawl.fetch import FetchPolicy, HttpFetcher
 from searchgov_spider_spark.flows import HttpEndpointSink
+
+# GET /sleep/<seconds>/<name> answers with its own path after <seconds>
+_SLEEP_SERVER = """
+import time
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+class Handler(BaseHTTPRequestHandler):
+    def log_message(self, *args):
+        pass
+
+    def do_GET(self):
+        time.sleep(float(self.path.split("/")[2]))
+        body = self.path.encode()
+        self.send_response(200)
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+class Server(ThreadingHTTPServer):
+    request_queue_size = 128  # a burst of connections must not hit the backlog
+
+httpd = Server(("127.0.0.1", 0), Handler)
+print(httpd.server_address[1], flush=True)
+httpd.serve_forever()
+"""
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -72,9 +102,45 @@ def server():
         httpd.shutdown()
 
 
+@pytest.fixture(scope="module")
+def sleep_server():
+    proc = subprocess.Popen([sys.executable, "-c", _SLEEP_SERVER], stdout=subprocess.PIPE, text=True)
+    try:
+        yield f"http://127.0.0.1:{int(proc.stdout.readline())}/sleep"
+    finally:
+        proc.kill()
+        proc.wait()
+
+
+def _fetch_one_partition(policy: FetchPolicy, urls: list[str]) -> pa.Table:
+    fetch = HttpFetcher(policy=policy).fetch_partition()
+    return pa.Table.from_batches(list(fetch(iter([pa.record_batch({"url_canon": urls})]))))
+
+
+def test_http_fetcher_timeout_counts_from_request_start(sleep_server):
+    """A request's timeout counts from its own start, not from when it was
+    queued: 40 URLs that each answer in 0.6 s all arrive under a 1 s
+    timeout with 40 fetch threads (a smaller pool would queue a second
+    wave past the timeout)."""
+    urls = [f"{sleep_server}/0.6/p{i}" for i in range(40)]
+    out = _fetch_one_partition(FetchPolicy(timeout_s=1.0, max_concurrency=40), urls)
+    assert out.column("url_canon").to_pylist() == urls
+    assert out.column("html").to_pylist() == [urlsplit(u).path.encode() for u in urls]
+
+
+def test_http_fetcher_joins_its_threads(sleep_server):
+    """Once a partition's iterator is exhausted, no thread the fetch started
+    is still alive, even after requests that outlast the timeout."""
+    before = set(threading.enumerate())
+    urls = [f"{sleep_server}/3/s{i}" for i in range(4)]
+    out = _fetch_one_partition(FetchPolicy(timeout_s=1.0, max_concurrency=4), urls)
+    assert out.column("html").to_pylist() == [None] * 4
+    assert set(threading.enumerate()) - before == set()
+
+
 def test_http_fetcher_real_transport_loopback(spark, server):
-    """The default (urllib fallback) transport end-to-end through
-    HttpFetcher's mapInPandas: 200s return body + Content-Language lang,
+    """The default (urllib) transport end-to-end through HttpFetcher's
+    mapInArrow: 200s return body + Content-Language lang,
     while timeout / oversize / 404 each yield the Scrapy-downloader-miss
     shape (html NULL, lang NULL, no retry)."""
     urls = [

@@ -504,28 +504,6 @@ class TestEmbeddingNearDupRecall:
         recall = len(got & true_pairs) / len(true_pairs)
         assert recall >= 0.9, f"recall {recall:.3f} < 0.9 ({len(got)}/{len(true_pairs)})"
 
-    def test_verify_prune_gate_branches_identical(self, spark):
-        """The size-gated verify prune (PRUNE_VERIFY_MIN_ROWS) is a plan
-        choice only: forcing the prune branch (n_rows above the gate) and
-        the direct branch (true small n_rows) with identical explicit
-        bits/bands must return the same verified pairs."""
-        rng = np.random.default_rng(13)
-        dim, n = 16, 80
-        base = rng.standard_normal((n, dim))
-        base /= np.linalg.norm(base, axis=1, keepdims=True)
-        rows = [(i, [float(x) for x in base[i]]) for i in range(n)]
-        for i in range(0, n, 3):  # exact copies -> guaranteed pairs
-            rows.append((1000 + i, [float(x) for x in base[i]]))
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        kw = dict(dim=dim, threshold=0.9, bits=4, bands=4)
-        direct = similarity.embedding_near_dup_pairs(emb, n_rows=len(rows), **kw)
-        pruned = similarity.embedding_near_dup_pairs(
-            emb, n_rows=similarity.PRUNE_VERIFY_MIN_ROWS, **kw
-        )
-        da = sorted(map(tuple, direct.collect()))
-        pa = sorted(map(tuple, pruned.collect()))
-        assert len(da) > 0 and da == pa
-
 
 class TestIvfAnn:
     def test_recall_on_clustered_data(self, spark):

@@ -21,6 +21,7 @@ from searchgov_spider_spark.crawl.frontier import (
     dedup_first_in_batch,
     pass_candidates,
 )
+from searchgov_spider_spark.crawl.politeness import static_budgets
 from searchgov_spider_spark.functions import udfs
 from searchgov_spider_spark.kernels.urlnorm import canonicalize_url, url_host, url_seen_hash
 from searchgov_spider_spark.synth.spark_gen import PAGES_SCHEMA
@@ -82,7 +83,7 @@ def _batch(spark):
 def _http_factory(pages):
     # closure so cloudpickle ships the page dict by value to the workers
     def factory():
-        async def transport(url, policy):
+        def transport(url, policy):
             body = pages.get(url)
             return (404, {}, b"") if body is None else (200, {"Content-Language": "en"}, body)
 
@@ -161,39 +162,30 @@ def test_fused_pass_matches_unfused_chain(spark, tmp_path, kind):
     passed.unpersist()
 
 
-def test_round_pass_keeps_one_event_loop_across_arrow_batches(spark, tmp_path):
+def test_round_pass_keeps_one_transport_across_arrow_batches(spark, tmp_path):
     """The pass drives a batch-client fetcher's per-partition iterator once,
-    so an HTTP client bound to its first event loop keeps working across
-    the partition's Arrow batches and is closed on that loop."""
+    so the partition builds one HTTP transport and that transport serves
+    all of the partition's Arrow batches."""
     import os
 
-    closed_dir = tmp_path / "closed"
-    closed_dir.mkdir()
-    marker = str(closed_dir)
+    made = tmp_path / "made"
+    made.mkdir()
+    made_dir = str(made)
 
-    def _loop_bound_factory():
-        import asyncio
+    def _tagged_factory():
+        import uuid
 
-        class T:
-            def __init__(self):
-                self.loop = None
+        tag = uuid.uuid4().hex
+        open(os.path.join(made_dir, tag), "w").close()
 
-            async def __call__(self, url, policy):
-                running = asyncio.get_running_loop()
-                self.loop = self.loop or running
-                if self.loop is not running or self.loop.is_closed():
-                    raise RuntimeError("Event loop is closed")
-                return 200, {}, b'<p>page</p><a href="/next">n</a>'
+        def transport(url, policy):
+            return 200, {}, f'<p>{tag}</p><a href="/next">n</a>'.encode()
 
-            async def aclose(self):
-                assert self.loop is asyncio.get_running_loop() and not self.loop.is_closed()
-                open(os.path.join(marker, "closed"), "w").close()
-
-        return T()
+        return transport
 
     engine = CrawlEngine(
         spark, None, None, POLICY, str(tmp_path / "ckpt"),
-        fetcher=HttpFetcher(transport_factory=_loop_bound_factory),
+        fetcher=HttpFetcher(transport_factory=_tagged_factory),
     )
     urls = [f"https://a.gov/p{i}" for i in range(10)]
     batch = spark.createDataFrame(
@@ -203,12 +195,13 @@ def test_round_pass_keeps_one_event_loop_across_arrow_batches(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")  # 4 batches
     try:
-        got = engine.round_pass(batch).select("url_canon", "links").collect()
+        got = engine.round_pass(batch).select("url_canon", "doc.content", "links").collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert sorted(r["url_canon"] for r in got) == sorted(urls)
     assert all([link["url_canon"] for link in r["links"]] == ["https://a.gov/next"] for r in got)
-    assert os.listdir(marker) == ["closed"]
+    tags = os.listdir(made)
+    assert len(tags) == 1 and all(tags[0] in r["content"] for r in got)
 
 
 def test_duplicate_robots_hosts_rejected(spark, tmp_path):
@@ -238,3 +231,43 @@ def test_null_and_empty_robots_rules_allow_everything(spark, tmp_path):
     assert oracle.fetched == set(pages)
     assert {r["url"] for r in run.documents(spark).select("url").collect()} == oracle.fetched
     assert [r["url_canon"] for r in run.seen(spark).orderBy("seq").collect()] == oracle.order
+
+
+def test_robots_rules_for_the_crawl_agent(spark, tmp_path):
+    """The engine judges robots.txt by the rule group for the crawl's own
+    user agent (``CrawlPolicy.agent``), as ``reference_crawl`` does: a
+    group for another agent binds nothing, and the crawl agent's group
+    binds even when the default agent's would not."""
+    pages = {
+        "https://b.gov/": b'<a href="/b1">1</a><a href="https://c.gov/c1">2</a>',
+        "https://b.gov/b1": b'<p>b leaf</p><a href="https://c.gov/c2">3</a>',
+        "https://c.gov/c1": b"<p>c leaf</p>",
+        "https://c.gov/c2": b"<p>c leaf 2</p>",
+    }
+    robots = [
+        ("b.gov", "User-agent: usasearch\nDisallow: /b1\n"),
+        ("c.gov", "User-agent: otherbot\nDisallow: /\n"),
+    ]
+    policy = CrawlPolicy(allowed_domains=["b.gov", "c.gov"], depth_limit=3, agent="otherbot")
+    engine = CrawlEngine(
+        spark, None, _robots_df(spark, robots), policy, str(tmp_path / "ckpt"),
+        fetcher=HttpFetcher(transport_factory=_http_factory(pages)),
+    )
+    run = engine.run(["https://b.gov/"], max_rounds=8)
+    oracle = reference_crawl(pages, dict(robots), ["https://b.gov/"], policy)
+    assert oracle.order == ["https://b.gov/", "https://b.gov/b1"]
+    seen = run.seen(spark).orderBy("seq").collect()
+    assert [r["url_canon"] for r in seen] == oracle.order
+    assert {r["url_canon"]: r["depth"] for r in seen} == oracle.depth
+    assert {r["url"] for r in run.documents(spark).select("url").collect()} == oracle.fetched
+
+
+def test_crawl_delay_budgets_for_the_crawl_agent(spark, tmp_path):
+    """Per-host budgets read the Crawl-delay of the crawl agent's group;
+    ``static_budgets`` without an agent keeps the default agent's."""
+    robots = _robots_df(spark, [("a.gov", "User-agent: otherbot\nCrawl-delay: 4\n\nUser-agent: *\nDisallow:\n")])
+    policy = CrawlPolicy(allowed_domains=["a.gov"], agent="otherbot")
+    engine = CrawlEngine(spark, None, robots, policy, str(tmp_path / "ckpt"), fetcher=HttpFetcher(), round_seconds=8)
+    assert {r["host"]: r["budget"] for r in engine.budgets.collect()} == {"a.gov": 2}
+    assert engine.min_budget == 2
+    assert {r["host"]: r["budget"] for r in static_budgets(robots, 8).collect()} == {"a.gov": 8}
