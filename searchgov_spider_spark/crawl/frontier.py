@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import udfs
+from ..kernels.robotstxt import DEFAULT_AGENT
 from .bloom import PartitionedBloom, with_bloom_probe
 from .reference_bfs import CrawlPolicy
 
@@ -96,12 +97,14 @@ def filter_admission_parts(df: DataFrame, policy: CrawlPolicy) -> DataFrame:
     return df.filter(F.col("depth") <= F.lit(policy.depth_limit))
 
 
-def apply_robots_filter(df: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Drop rows denied by their host's robots.txt (missing host = allow)."""
+def apply_robots_filter(df: DataFrame, robots: DataFrame | None, agent: str = DEFAULT_AGENT) -> DataFrame:
+    """Drop rows denied by their host's robots.txt for ``agent`` (missing
+    host = allow)."""
     if robots is None:
         return df
     joined = df.join(F.broadcast(robots.select("host", "rules_text")), "host", "left")
-    return joined.filter(udfs.robots_allowed(F.col("rules_text"), F.col("url_canon"))).drop("rules_text")
+    allowed = udfs.robots_allowed(F.col("rules_text"), F.col("url_canon"), F.lit(agent))
+    return joined.filter(allowed).drop("rules_text")
 
 
 def pass_candidates(passed: DataFrame, policy: CrawlPolicy) -> DataFrame:

@@ -276,18 +276,18 @@ def parse_sitemap(body: pd.Series) -> pd.DataFrame:
 
 
 @pandas_udf(T.BooleanType())
-def robots_allowed(rules_text: pd.Series, url: pd.Series) -> pd.Series:
-    # parse each distinct robots body once per batch
-    cache: dict[str, robotstxt.RobotsRules] = {}
+def robots_allowed(rules_text: pd.Series, url: pd.Series, agent: pd.Series) -> pd.Series:
+    """Whether the group ``agent`` selects in each robots body allows ``url``."""
+    # parse each distinct (robots body, agent) once per batch
+    cache: dict[tuple[str, str], robotstxt.RobotsRules] = {}
     out = []
-    for rt, u in zip(rules_text, url):
+    for rt, u, ag in zip(rules_text, url, agent):
         if rt is None or not rt:
             out.append(True)
             continue
-        rules = cache.get(rt)
+        rules = cache.get((rt, ag))
         if rules is None:
-            rules = robotstxt.parse_robots(rt)
-            cache[rt] = rules
+            rules = cache[rt, ag] = robotstxt.parse_robots(rt, ag)
         out.append(rules.allowed(u))
     return pd.Series(out)
 

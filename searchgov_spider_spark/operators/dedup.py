@@ -8,8 +8,9 @@ DataFrame -> DataFrame function usable over a 100-TB documents table:
   * exact_duplicates       hash-groupBy (one shuffle on the digest)
   * minhash_signature      per-row, shuffle-free, codegen'd
   * minhash_dedup          groupBy signature (one shuffle)
-  * minhash_lsh_pairs      band -> bucket join -> exact-jaccard verify
+  * minhash_lsh_pairs      band -> bucket pair expansion -> exact-jaccard verify
   * simhash_64             vectorized numpy UDF, per-row
+  * hamming_pairs          pigeonhole bands -> bucket pair expansion -> bit_count
   * ngram_jaccard_pairs    exact verify for a candidate pair set
 """
 
@@ -77,6 +78,47 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     return sig.join(groups, "signature").select(id_col, "signature", "cluster_size", "representative")
 
 
+def bucket_pairs(banded: DataFrame, bucket_cols: list[str], member) -> DataFrame:
+    """Within-bucket pairs of a banded frame: columns ``a`` and ``b``, one
+    row for every two members of a bucket, ``a < b``.
+
+    ``banded`` holds one row per (item, band); ``bucket_cols`` are the band
+    key columns and ``member`` (a column or column name: an id, or an
+    ``(id, hash)`` struct) is what a pair carries.  One shuffle, on the band
+    keys, collects each bucket's sorted members; a nested transform emits
+    every later member after each one.  The same pair can come from several
+    bands, so callers dedup after their verify.
+
+    Hot buckets: a bucket of m members expands m(m-1)/2 pairs inside one
+    task, where AQE skew-splitting cannot reach (ROADMAP item 7).
+    """
+    pair_expr = (
+        "flatten(transform(ms, (x, i) -> "
+        "transform(slice(ms, i + 2, size(ms)), y -> named_struct('a', x, 'b', y))))"
+    )
+    return (
+        banded.groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_list(member)).alias("ms"))
+        .filter(F.size("ms") > 1)
+        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select("p.a", "p.b")
+    )
+
+
+def minhash_bands(docs: DataFrame, id_col: str, text_col: str, k: int, bands: int) -> DataFrame:
+    """(id_col, band, bh): one row per document and band, ``bh`` the md5 of
+    the band's ``k // bands`` MinHash values."""
+    rows = k // bands
+    sig = minhash_signature(docs, id_col, text_col, k)
+    band_cols = []
+    for b in range(bands):
+        parts = [F.col(f"minhash_{i}") for i in range(b * rows, (b + 1) * rows)]
+        band_cols.append(F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bh")))
+    return sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")).select(
+        id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -87,45 +129,16 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Banded-LSH candidate generation + exact-Jaccard verification.
 
-    Pipeline: signature -> band keys -> self-join per band bucket (the only
-    shuffle, on band hash) -> distinct candidate pairs -> exact shingle
-    Jaccard filter >= threshold.  Scale note: bucket join is on
-    (band_id, band_hash); AQE skew-join splits hot buckets.
+    Pipeline: signature -> band keys (:func:`minhash_bands`) -> bucket
+    pair expansion (:func:`bucket_pairs`, one shuffle on the band keys) ->
+    distinct candidate pairs -> exact shingle Jaccard filter >= threshold.
     """
-    rows = k // bands
-    # r06 restructure: candidate generation by BUCKET-LOCAL PAIR EXPANSION
-    # instead of the banded self-join.  groupBy(band, bh) collects each
-    # bucket's sorted member ids and a nested transform emits every (a < b)
-    # pair — the identical candidate set, but the banded table crosses the
-    # exchange ONCE (the self-join shuffled it for both sides), the
-    # signature stage feeds a single consumer (no localCheckpoint, no
-    # double evaluation, no concurrent-materialization race), and the plan
-    # drops one Exchange + one SortMergeJoin.  Bucket member lists are
-    # bounded by bucket size — the same bound the self-join's per-bucket
-    # output already had (candidates are quadratic in bucket size either
-    # way); degenerate hot buckets remain a banding-parameter concern, not
-    # a plan concern.
-    sig = minhash_signature(docs, id_col, text_col, k)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"minhash_{i}") for i in range(b * rows, (b + 1) * rows)]
-        band_cols.append(F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bh")))
-    banded = sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh")
-    )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> "
-        "named_struct('id_a', x, 'id_b', y))))"
-    )
+    banded = minhash_bands(docs, id_col, text_col, k, bands)
     # checkpointed (EAGER): cand feeds the id-prune and the verify join —
     # a lazy checkpoint here lets two downstream stages race to compute it
     cand = (
-        banded.groupBy("band", "bh")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        bucket_pairs(banded, ["band", "bh"], id_col)
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -324,57 +337,44 @@ def simhash_bands(simhash_col: str, n_bands: int) -> list:
     return cols
 
 
+def hamming_pairs(hashed: DataFrame, id_col: str, hash_col: str, max_hamming: int) -> DataFrame:
+    """(id_a, id_b, hamming): every pair of ``hashed`` rows whose 64-bit
+    ``hash_col`` values differ in at most ``max_hamming`` bits, id_a < id_b.
+
+    Pigeonhole banding: ``max_hamming + 1`` disjoint bit slices
+    (:func:`simhash_bands`), so a qualifying pair shares at least one band
+    value and candidate generation has no false negatives; the bit_count
+    verify keeps precision.  The output is exactly the brute-force
+    all-pairs result, and the only shuffle before the pair distinct is the
+    bucket pair expansion's (:func:`bucket_pairs`) — never a join.
+    """
+    bands = F.array(*simhash_bands(hash_col, max_hamming + 1))
+    banded = hashed.select(F.col(id_col), F.col(hash_col), F.posexplode(bands).alias("band", "bval"))
+    # sorting each bucket's (id, hash) structs orders pairs by id
+    member = F.struct(F.col(id_col).alias("i"), F.col(hash_col).alias("h"))
+    return (
+        bucket_pairs(banded, ["band", "bval"], member)
+        .select(
+            F.col("a.i").alias("id_a"),
+            F.col("b.i").alias("id_b"),
+            F.expr("bit_count(a.h ^ b.h)").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 def simhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """EXACT hamming <= max_hamming simhash pairs via pigeonhole banding.
-
-    n_bands = max_hamming + 1 disjoint bit slices: a qualifying pair shares
-    at least one band value, so candidate generation has no false negatives
-    and the bit_count verify keeps precision — the output is exactly the
-    brute-force all-pairs result, but the only shuffle is the per-band
-    bucket join (never a cross join).  AQE splits skewed buckets.
-    """
-    n_bands = max_hamming + 1
-    # r06 restructure (mirrors minhash_lsh_pairs): bucket-local pair
-    # expansion replaces the banded self-join — the hash UDF runs once
-    # (single consumer: no localCheckpoint, no double ArrowEvalPython, no
-    # materialization race), the banded table crosses its exchange once,
-    # and the plan drops one Exchange + one join.  Sorting each bucket's
-    # (id, simhash) structs orders pairs id_a < id_b exactly as the join's
-    # filter did.
+    """EXACT hamming <= max_hamming simhash pairs (:func:`hamming_pairs`
+    over each document's :data:`simhash_64`): the output is exactly the
+    brute-force all-pairs result, and the hash UDF runs once."""
     hashed = docs.select(F.col(id_col), simhash_64(F.col(text_col)).alias("simhash"))
-    bands_arr = F.array(*[c for c in simhash_bands("simhash", n_bands)])
-    banded = hashed.select(
-        F.col(id_col), F.col("simhash"), F.posexplode(bands_arr).alias("band", "bval")
-    )
-    pair_expr = (
-        "flatten(transform(ms, (x, i) -> "
-        "transform(slice(ms, i + 2, size(ms)), y -> "
-        "named_struct('id_a', x.i, 'id_b', y.i, "
-        "'hamming', bit_count(x.h ^ y.h)))))"
-    )
-    pairs = (
-        banded.groupBy("band", "bval")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("i"), F.col("simhash").alias("h")))
-            ).alias("ms")
-        )
-        .filter(F.size("ms") > 1)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(
-            F.col("p.id_a").alias("id_a"),
-            F.col("p.id_b").alias("id_b"),
-            F.col("p.hamming").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return pairs
+    return hamming_pairs(hashed, id_col, "simhash", max_hamming)
 
 
 def duplicated_spans(
@@ -579,25 +579,10 @@ def lsh_novelty(
     join exchange-free on the big side — same discipline as the bucketed
     URL-seen set (storage/tables.py).
     """
-    rows = k // bands
-
-    def banded(docs: DataFrame, out_id: str) -> DataFrame:
-        sig = minhash_signature(docs, id_col, text_col, k)
-        band_cols = []
-        for b in range(bands):
-            parts = [F.col(f"minhash_{i}") for i in range(b * rows, (b + 1) * rows)]
-            band_cols.append(
-                F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bh"))
-            )
-        return sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")).select(
-            F.col(id_col).alias(out_id),
-            F.col("bk.band").alias("band"),
-            F.col("bk.bh").alias("bh"),
-        )
-
+    new_bands = minhash_bands(new_docs, id_col, text_col, k, bands).withColumnRenamed(id_col, "new_id")
+    corpus_bands = minhash_bands(corpus, id_col, text_col, k, bands).withColumnRenamed(id_col, "corpus_id")
     cand = (
-        banded(new_docs, "new_id")
-        .join(banded(corpus, "corpus_id"), ["band", "bh"])
+        new_bands.join(corpus_bands, ["band", "bh"])
         .select("new_id", "corpus_id")
         .distinct()
     )

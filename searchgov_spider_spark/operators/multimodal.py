@@ -600,34 +600,11 @@ def image_near_dup_pairs(
     """EXACT hamming <= max_hamming perceptual near-dup image pairs —
     transport-variant duplicates (re-encodes, interlace flips, palette
     conversions) and mildly-retouched copies, found WITHOUT any byte-level
-    equality.  Same pigeonhole-banding machinery as
-    dedup.simhash_near_dup_pairs: max_hamming+1 disjoint bit slices of the
-    dhash guarantee a qualifying pair shares a band (zero false negatives),
-    the bit_count verify keeps precision, so the output equals brute-force
-    all-pairs while the only corpus-scale shuffle is the per-band bucket
-    join (AQE splits skewed buckets: think icon/placeholder images shared
-    by millions of pages).  Decode runs ONCE (localCheckpoint) and feeds
-    both join sides."""
-    from .dedup import simhash_bands
+    equality.  The pigeonhole banding of dedup.simhash_near_dup_pairs
+    (:func:`dedup.hamming_pairs`) over each image's dhash: the output
+    equals brute-force all-pairs, the only shuffle before the pair distinct
+    is the bucket pair expansion on the band keys, and the decode feeds
+    that one consumer, so it runs once."""
+    from .dedup import hamming_pairs
 
-    n_bands = max_hamming + 1
-    # EAGER: the dhash table feeds both sides of the band self-join — a lazy
-    # checkpoint would let the two scan stages race to materialize the UDF
-    hashed = image_dhash(media, id_col).localCheckpoint(eager=True)
-    bands_arr = F.array(*simhash_bands("dhash", n_bands))
-    banded = hashed.select(
-        F.col(id_col), F.col("dhash"), F.posexplode(bands_arr).alias("band", "bval")
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(right, ["band", "bval"])
-        .filter(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.expr("bit_count(l.dhash ^ r.dhash)").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
+    return hamming_pairs(image_dhash(media, id_col), id_col, "dhash", max_hamming)

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import bucket_pairs
+
 logger = logging.getLogger(__name__)
 
 
@@ -185,10 +187,11 @@ def embedding_near_dup_pairs(
     random pair collide in some band with probability bands/2^bits, which
     is quadratic blow-up at 10⁹ rows; bits must grow ~log2(n).
 
-    Scale shape: only (id, band, bucket) rows go through the candidate
-    self-join (vectors are NOT exploded per band); vectors are joined back
-    for exact verification of the distinct candidate set.  The shuffle is
-    bucket-local per band, never a full cross join; AQE splits hot buckets.
+    Scale shape: only (id, band, bucket) rows go through the bucket pair
+    expansion (:func:`dedup.bucket_pairs`; vectors are NOT exploded per
+    band); vectors are joined back for exact verification of the distinct
+    candidate set.  The candidate shuffle is on the band keys, never a
+    full cross join.
     """
     if bits is None or bands is None:
         if n_rows is None:
@@ -212,25 +215,12 @@ def embedding_near_dup_pairs(
         bits, bands, exp_ratio,
         f" (~{exp_ratio * n_rows:.1f} expected random candidates/row at n={n_rows})" if n_rows else "",
     )
-    # r06 restructure (mirrors dedup.minhash_lsh_pairs): bucket-local pair
-    # expansion replaces the banded self-join — the banded table crosses
-    # its exchange once, the SRP matmul UDF runs once (single consumer —
-    # no checkpoint, no double ArrowEvalPython), one Exchange + one join
-    # fewer in the plan.
     banded = with_lsh_bands(embeddings, dim, bits, bands, seed, vec_col).select(
         F.col(id_col), F.posexplode("bands").alias("band", "bucket")
     )
-    pair_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> "
-        "named_struct('id_a', x, 'id_b', y))))"
-    )
     cand = (
-        banded.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") > 1)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        bucket_pairs(banded, ["band", "bucket"], id_col)
+        .select(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .distinct()
     )
     # The raw vector column joins the candidates directly: the inner joins

@@ -406,6 +406,7 @@ def q27_multimodal_features(spark, sf_dir):
 
 def q28_robots_eval(spark, sf_dir):
     """robots.txt allow/deny evaluation (P2) over constructed URLs."""
+    from .kernels.robotstxt import DEFAULT_AGENT
     from .synth import webgen
 
     n_hosts = 8
@@ -420,7 +421,7 @@ def q28_robots_eval(spark, sf_dir):
         ).alias("url"),
     ).withColumn("host", udfs.url_host(F.col("url")))
     return urls.join(F.broadcast(robots), "host", "left").select(
-        "doc_id", "url", udfs.robots_allowed(F.col("rules_text"), F.col("url")).alias("allowed")
+        "doc_id", "url", udfs.robots_allowed(F.col("rules_text"), F.col("url"), F.lit(DEFAULT_AGENT)).alias("allowed")
     )
 
 
@@ -4918,10 +4919,10 @@ def _q131_media(spark):
 def q131_image_near_dups(spark, sf_dir):
     """Perceptual-hash image near-dup pairs (multimodal.image_near_dup_pairs):
     REAL PNG pixel decode -> integer-exact 9x8 dHash -> pigeonhole-banded
-    self-join -> bit_count verify.  Catches the transport-variant
+    bucket pair expansion -> bit_count verify.  Catches the transport-variant
     duplicates (interlace flips, re-encodes) and retouched copies that
-    byte-level dedup misses; banding keeps the only corpus-scale shuffle a
-    per-band bucket join — never all-pairs.  The oracle re-derives pixels
+    byte-level dedup misses; banding keeps the candidate shuffle on the
+    band keys — never all-pairs.  The oracle re-derives pixels
     from the tiling FORMULA and brute-forces all pairs with an independent
     pure-Python dhash, so neither the decoder nor the banding can
     self-verify."""

@@ -47,10 +47,11 @@ def stream_seed_ingestion(
 ):
     """readStream over a seed-drop directory -> canonicalized staging table.
 
-    Each micro-batch canonicalizes, hashes and dedups (within batch) the new
-    seed URLs and appends them to the frontier staging parquet; the crawl
-    engine picks staged rows up at its next run.  Returns the streaming query
-    (caller awaits/stops it).
+    Each micro-batch canonicalizes, hashes (the seen-set hash,
+    ``urlnorm.url_seen_hash``) and dedups (within batch) the new seed URLs
+    and appends them to the staging parquet.  Nothing in ``crawl/`` reads
+    the staging dir: a caller passes its URLs as the next crawl's seeds.
+    Returns the streaming query (caller awaits/stops it).
     """
 
     def admit_batch(batch: DataFrame, batch_id: int) -> None:
@@ -133,14 +134,16 @@ def stream_url_dedup(
     drops, recrawl triggers) with state proportional to the TTL horizon
     only — the standard Kafka-ingest pattern.  State is checkpointed, so a
     restarted query still drops duplicates of URLs seen before the restart
-    (within the watermark horizon); output is append-mode parquet.
+    (within the watermark horizon); output is append-mode parquet whose
+    ``url_hash`` is the seen-set hash (``urlnorm.url_seen_hash``), so its
+    rows key the seen anti-join on (url_hash, url_canon) as the engine's do.
     """
     deduped = (
         spark.readStream.schema(URL_EVENT_SCHEMA)
         .json(urls_dir)
         .filter(F.col("url").isNotNull() & F.col("ts").isNotNull())
         .withColumn("url_canon", udfs.canonicalize_url(udfs.strip_jsessionid(F.col("url"))))
-        .withColumn("url_hash", F.xxhash64(F.col("url_canon")))
+        .withColumn("url_hash", udfs.url_seen_hash(F.col("url_canon")))
         .withWatermark("ts", f"{ttl_minutes} minutes")
         # key on the canonical URL itself, not its 64-bit hash: at the 10^10
         # design point the hash alone has millions of expected colliding

@@ -461,6 +461,53 @@ class TestSimhashNearDup:
         assert len(cols) == 4
 
 
+@pytest.mark.parametrize("path", ["minhash", "hamming"])
+def test_hot_bucket_pairs_match_brute_force(spark, path):
+    """400 members share every band, so one bucket per band holds all of
+    them and the bucket pair expansion emits 79,800 pairs from it in one
+    task; the pairs still equal brute force (Jaccard 1.0 for identical
+    texts, distance 0 for identical hashes).  A few members outside the hot
+    buckets keep the brute force from being plain all-pairs."""
+    import itertools
+    import re
+
+    n = 400
+    if path == "minhash":
+        texts = ["the same boilerplate footer text repeated on every page of the site"] * n + [
+            "a different page entirely about other things",
+            "one two",
+        ]
+
+        def shingles(t):
+            toks = re.findall(dedup.TOKEN_PATTERN, t.lower())
+            if len(toks) < 3:
+                return {" ".join(toks)}
+            return {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+
+        sh = [shingles(t) for t in texts]
+        expect = set()
+        for i, j in itertools.combinations(range(len(texts)), 2):
+            jac = len(sh[i] & sh[j]) / len(sh[i] | sh[j])
+            if jac >= 0.8:
+                expect.add((i, j, round(jac, 6)))
+        docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+        got = {(r.id_a, r.id_b, r.jaccard) for r in dedup.minhash_lsh_pairs(docs, threshold=0.8).collect()}
+    else:
+        hot = 0x0F0F_1234_5678_9ABC
+        # distance 1 (sign bit), distance 4, and far: signed-long hashes
+        hashes = [hot] * n + [hot | (1 << 63), hot ^ 0xF, hot ^ ((1 << 64) - 1)]
+        signed = [h - (1 << 64) if h >= 1 << 63 else h for h in hashes]
+        expect = set()
+        for i, j in itertools.combinations(range(len(hashes)), 2):
+            d = bin(hashes[i] ^ hashes[j]).count("1")
+            if d <= 3:
+                expect.add((i, j, d))
+        frame = spark.createDataFrame(list(enumerate(signed)), "id long, h long")
+        got = {(r.id_a, r.id_b, r.hamming) for r in dedup.hamming_pairs(frame, "id", "h", 3).collect()}
+    assert len(expect) >= n * (n - 1) // 2
+    assert got == expect
+
+
 class TestEmbeddingNearDupRecall:
     def test_or_amplified_recall_on_perturbed_vectors(self, spark):
         """Recall >= 0.9 for genuine (non-identical) near-dups at cosine

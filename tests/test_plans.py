@@ -78,6 +78,32 @@ class TestAggsAndTopK:
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+@pytest.mark.parametrize("op", ["simhash", "image"])
+def test_hamming_pairs_expand_buckets_without_a_join(spark, op):
+    """SimHash and image dHash near-dup pairs share one pigeonhole path:
+    the plan holds no join node, and its only shuffles are one on the band
+    keys (the bucket pair expansion) ahead of one for the pair distinct."""
+    import re
+
+    from searchgov_spider_spark.operators import dedup, multimodal
+
+    if op == "simhash":
+        docs = spark.createDataFrame(
+            [(0, "the quick brown fox"), (1, "the quick brown fox jumps"), (2, "other text")],
+            "doc_id long, text string",
+        )
+        df = dedup.simhash_near_dup_pairs(docs, max_hamming=3)
+    else:
+        df = multimodal.image_near_dup_pairs(Q._q131_media(spark), max_hamming=Q.Q131_MAX_HAMMING)
+    plan = plan_of(df, "simple")
+    assert "Join" not in plan and "CartesianProduct" not in plan
+    exchanges = re.findall(r"Exchange (\w+)\(([^)]*)\)", plan)
+    assert [kind for kind, _ in exchanges] == ["hashpartitioning"] * 2, exchanges
+    distinct_keys, band_keys = (re.findall(r"([a-z_]+)#", keys) for _, keys in exchanges)
+    assert distinct_keys == ["id_a", "id_b", "hamming"]
+    assert band_keys == ["band", "bval"]
+
+
 class TestCrawlPlans:
     def test_admission_filters_stay_jvm_except_kernels(self, spark):
         """The admission chain may contain exactly the kernel UDFs

@@ -9,6 +9,8 @@ on one batch holding every edge case, the documents and the candidate rows
 must be identical, for a join-shaped and a batch-client fetcher.
 """
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,15 +94,15 @@ def _http_factory(pages):
     return factory
 
 
-def _engine(spark, tmp_path, kind, robots=None):
+def _engine(spark, tmp_path, kind, robots=None, policy=POLICY):
     robots = _robots_df(spark) if robots is None else robots
     if kind == "table":
         pages = spark.createDataFrame(
             [(u, None, bytearray(b), "", "en") for u, b in PAGES.items()], schema=PAGES_SCHEMA
         )
-        return CrawlEngine(spark, pages, robots, POLICY, str(tmp_path / "ckpt"))
+        return CrawlEngine(spark, pages, robots, policy, str(tmp_path / "ckpt"))
     fetcher = HttpFetcher(transport_factory=_http_factory(dict(PAGES)))
-    return CrawlEngine(spark, None, robots, POLICY, str(tmp_path / "ckpt"), fetcher=fetcher)
+    return CrawlEngine(spark, None, robots, policy, str(tmp_path / "ckpt"), fetcher=fetcher)
 
 
 def _unfused(engine, batch):
@@ -123,7 +125,9 @@ def _unfused(engine, batch):
         F.col("seq").alias("parent_seq"),
         F.posexplode_outer(F.col("doc.links")).alias("pos", "url"),
     ).filter(F.col("url").isNotNull())
-    candidates = apply_robots_filter(apply_admission_filters(discovered, engine.policy), engine.robots)
+    candidates = apply_robots_filter(
+        apply_admission_filters(discovered, engine.policy), engine.robots, engine.policy.agent
+    )
     return documents_from_pass(passed_shape), candidates
 
 
@@ -159,6 +163,24 @@ def test_fused_pass_matches_unfused_chain(spark, tmp_path, kind):
     assert urls.count("https://a.gov/h1") == 2  # duplicates survive until dedup_first_in_batch
     empty_seq = next(r["seq"] for r in batch.collect() if r["url_canon"] == "https://a.gov/empty")
     assert not any(r[3] == empty_seq for r in want)  # a page without links adds no candidate
+    passed.unpersist()
+
+
+def test_unfused_chain_judges_robots_for_the_crawl_agent(spark, tmp_path):
+    """Under a crawl agent other than the default, the unfused chain's
+    robots filter reads the rule group for that agent, as the pass does:
+    c.gov's ``otherbot`` group denies every link to c.gov in both."""
+    policy = dataclasses.replace(POLICY, agent="otherbot")
+    robots = _robots_df(spark, [*ROBOTS[:2], ("c.gov", "User-agent: otherbot\nDisallow: /\n")])
+    engine = _engine(spark, tmp_path, "table", robots=robots, policy=policy)
+    batch = _batch(spark)
+    passed = engine.round_pass(batch).persist()
+    _, cands_ref = _unfused(engine, batch)
+    got = _rows(pass_candidates(passed, engine.policy), CANDIDATE_COLS)
+    assert got == _rows(cands_ref, CANDIDATE_COLS)
+    urls = [r[0] for r in got]
+    assert "https://a.gov/next" in urls and "https://b.gov/private/p" in urls
+    assert not any(url_host(u) == "c.gov" for u in urls)
     passed.unpersist()
 
 

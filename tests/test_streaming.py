@@ -201,6 +201,27 @@ def test_stream_url_dedup(spark, tmp_path):
     assert got2 == ["https://a.gov/x", "https://a.gov/y", "https://a.gov/z"]
 
 
+def test_stream_url_dedup_emits_the_seen_set_hash(spark, tmp_path):
+    """Each output row's url_hash is the seen-set hash of its url_canon,
+    so the feed's rows key the seen anti-join as the engine's rows do."""
+    import json as _json
+
+    from searchgov_spider_spark.kernels.urlnorm import url_seen_hash
+    from searchgov_spider_spark.streaming.ingest import stream_url_dedup
+
+    urls_dir = tmp_path / "urls"
+    urls_dir.mkdir()
+    urls = ["https://a.gov/x", "https://A.gov/y;jsessionid=0A1B", "https://b.gov/z?q=1"]
+    (urls_dir / "b1.json").write_text(
+        "\n".join(_json.dumps({"ts": "2024-01-01T00:00:00.000Z", "url": u}) for u in urls)
+    )
+    out_dir = str(tmp_path / "out")
+    stream_url_dedup(spark, str(urls_dir), out_dir, str(tmp_path / "ckpt")).awaitTermination(120)
+    got = spark.read.parquet(out_dir).select("url_canon", "url_hash").collect()
+    assert len(got) == len(urls)
+    assert all(r["url_hash"] == url_seen_hash(r["url_canon"]) for r in got)
+
+
 def test_host_health_batch_semantics(spark):
     # batch-mode check of the exact windowed numbers: host h0 fails 3/4 in
     # the 10:00 pane -> alert; h1 is healthy; panes slide (2 min window,
